@@ -2487,13 +2487,11 @@ def minhash_near_dup_portable(spark, sf_dir):
     """L2: MinHash+LSH near-dup pairs with the PORTABLE hash family
     (sha-bucket token hashes, raw-slice banding) — the DuckDB oracle
     recomputes signatures, candidate generation, and estimates from first
-    principles, closing the 'signatures are engine-private' evidential
-    gap for the MinHash path (the pandas-siphash default stays for speed;
-    identical pipeline shape)."""
+    principles."""
     corpus = _docs_with_near_dups(spark, sf_dir, keep_mod=10)
     return D.minhash_verified_pairs(corpus, "doc_id", "text",
                                     jaccard_threshold=0.8, num_hashes=32,
-                                    bands=16, tok_hash="sha", bucket="slice")
+                                    bands=16)
 
 
 def _minhash_incremental_oracle_sql() -> str:
@@ -2526,14 +2524,11 @@ def minhash_incremental_pairs(spark, sf_dir):
         F.concat_ws(" ", F.slice(toks, 1, F.greatest(F.size(toks) - 1,
                                                      F.lit(1)))).alias("text"))
     n_parts = spark.sparkContext.defaultParallelism
-    from .operators.dedup import _minhash_signatures_pandas, minhash_index_probe
-    index = _minhash_signatures_pandas(
-        docs.repartition(n_parts), "doc_id", "text",
-        num_hashes=32, shingle_n=3, seed=42, tok_hash="sha").persist()
-    return minhash_index_probe(index, batch.repartition(n_parts),
-                               "doc_id", "text", jaccard_threshold=0.8,
-                               num_hashes=32, bands=16, tok_hash="sha",
-                               bucket="slice")
+    index = D.minhash_signatures(docs.repartition(n_parts), "doc_id", "text",
+                                 num_hashes=32, shingle_n=3, seed=42).persist()
+    return D.minhash_index_probe(index, batch.repartition(n_parts),
+                                 "doc_id", "text", jaccard_threshold=0.8,
+                                 num_hashes=32, bands=16)
 
 
 @query("minhash_cc_dedup",
@@ -2549,8 +2544,7 @@ def minhash_cc_dedup_q(spark, sf_dir):
     survivor choice."""
     corpus = _docs_with_near_dups(spark, sf_dir, keep_mod=20)
     return D.minhash_dedup_cc(corpus, "doc_id", "text",
-                              jaccard_threshold=0.5, num_hashes=32, bands=16,
-                              tok_hash="sha", bucket="slice") \
+                              jaccard_threshold=0.5, num_hashes=32, bands=16) \
             .select("doc_id").orderBy("doc_id")
 
 
@@ -2617,8 +2611,7 @@ def simhash_near_dup_portable(spark, sf_dir):
     packing, block banding, and the exact Hamming verify end to end."""
     corpus = _docs_with_near_dups(spark, sf_dir, keep_mod=10)
     return D.simhash_near_dup_pairs(corpus, "doc_id", "text",
-                                    max_hamming=6, blocks=4, bits=32,
-                                    tok_hash="sha")
+                                    max_hamming=6, blocks=4, bits=32)
 
 
 def _minhash_cand_oracle_sql(keep_mod: int, num_hashes: int, bands: int,
@@ -2647,12 +2640,10 @@ def minhash_near_dup(spark, sf_dir):
     candidate GENERATION, where a banding bug silently loses recall because
     verification never sees a pair that was never a candidate. Denser
     corpus (keep_mod=5) than the twin, so chance band collisions are part
-    of the checked surface. The engine-hash fast path stays the production
-    default (`minhash_signatures(impl="pandas")`) and stays pytest-pinned."""
+    of the checked surface."""
     corpus = _docs_with_near_dups(spark, sf_dir, keep_mod=5)
     pairs = D.minhash_candidate_pairs(corpus, "doc_id", "text",
-                                      num_hashes=32, bands=16,
-                                      tok_hash="sha", bucket="slice")
+                                      num_hashes=32, bands=16)
     return pairs.orderBy("id_a", "id_b")
 
 
@@ -2666,12 +2657,10 @@ def simhash_near_dup(spark, sf_dir):
     block-collision candidate surface lands in the recorded result.
 
     Re-keyed in round 11 (VERDICT r10 debt #1) from the engine-private
-    64-bit siphash variant, which was structurally rows-only. The 64-bit
-    engine-hash kernel stays the production default and stays
-    pytest-pinned."""
+    64-bit siphash variant, which was structurally rows-only."""
     corpus = _docs_with_near_dups(spark, sf_dir, keep_mod=5)
     return D.simhash_near_dup_pairs(corpus, "doc_id", "text", max_hamming=8,
-                                    blocks=4, bits=32, tok_hash="sha")
+                                    blocks=4, bits=32)
 
 
 
@@ -5388,8 +5377,7 @@ def split_leakage_report_q(spark, sf_dir):
     corpus = _docs_with_near_dups(spark, sf_dir, keep_mod=10)
     pairs = D.minhash_verified_pairs(corpus, "doc_id", "text",
                                      jaccard_threshold=0.8, num_hashes=32,
-                                     bands=16, tok_hash="sha",
-                                     bucket="slice").select("id_a", "id_b")
+                                     bands=16).select("id_a", "id_b")
     splits = hash_split(corpus.select("doc_id"), "doc_id")
     return split_leakage_report(pairs, splits)
 
@@ -5566,8 +5554,7 @@ def dedup_keep_best_docs(spark, sf_dir):
     corpus = _docs_with_near_dups(spark, sf_dir, keep_mod=20)
     pairs = D.minhash_verified_pairs(corpus, "doc_id", "text",
                                      jaccard_threshold=0.5, num_hashes=32,
-                                     bands=16, tok_hash="sha",
-                                     bucket="slice").select("id_a", "id_b")
+                                     bands=16).select("id_a", "id_b")
     # reduce the id mod 2^31 BEFORE the Knuth multiply: ids can reach
     # 1e12 (the twin sentinel, or any real corpus), and 1e12 * 2654435761
     # overflows int64 (ANSI throws; round-9 synthetic-sf1 finding)

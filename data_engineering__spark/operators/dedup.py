@@ -10,12 +10,13 @@ training-data pipeline needs — exact-hash, MinHash+LSH, SimHash, n-gram
 Jaccard, plus exact transitive closure via connected components. Candidate
 generation is always band/bucket-join based (never O(n²) pairwise).
 
-Signature kernels default to Arrow-batched numpy (``mapInPandas``): Spark
+Signature kernels are Arrow-batched numpy (``mapInPandas``): Spark
 higher-order-function lambdas execute in the interpreted expression
 evaluator (never whole-stage codegen), measured ~1.6 µs per lambda eval —
-a vectorized reduceat over the batch beats them ~10×. Pure-JVM
-``impl="expr"`` formulations are retained for Python-worker-free
-deployments. Joins/grouping stay JVM-side either way.
+a vectorized reduceat over the batch beats them ~10×. Joins/grouping stay
+JVM-side. MinHash and SimHash use one hash family: sha-bucket token hashes
+(first 8 hex chars of sha256) and raw-slice LSH band keys, so an external
+SQL oracle recomputes every stage.
 """
 
 from __future__ import annotations
@@ -95,22 +96,6 @@ def weighted_dedup(df: DataFrame, text_col: str,
     return survivors.join(weights, "text_hash")
 
 
-# ----------------------------------------------------------- shingling utils
-
-def shingles(text_col: str, n: int = 3) -> Column:
-    """Word n-gram shingles of a text column as array<string>.
-
-    Built-in-only: split → sliding windows via ``transform`` over index
-    sequence. Stays in codegen; no Python.
-    """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    count = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
-    idx = F.sequence(F.lit(0), count - F.lit(1))
-    return F.when(count <= 0, F.array().cast("array<string>")).otherwise(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    )
-
-
 # ------------------------------------------------------------- MinHash + LSH
 
 #: Mersenne prime 2^31-1: hash-family modulus. Base hashes and coefficients
@@ -129,107 +114,42 @@ def _minhash_coeffs(num_hashes: int, seed: int) -> list[tuple[int, int]]:
             for _ in range(num_hashes)]
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 64, seed: int = 42) -> Column:
-    """MinHash signature as array<bigint> of length ``num_hashes``.
+def _sha_token_hashes(toks: list[str], memo: dict[str, int]):
+    """int64 array of sha-bucket token hashes in [0, 2^32): the first 8 hex
+    chars of sha256 — the repo's portable hash convention, which any SQL
+    engine can replay. ``memo`` caches one hash per unique token; kernels
+    keep one per task."""
+    import hashlib
 
-    Each shingle string is hashed ONCE (``xxhash64`` → [0, 2^31)); the
-    ``num_hashes`` MinHash functions are arithmetic permutations
-    h_i(x) = (a_i*x + b_i) mod p of that base hash — the standard universal
-    family. This is ~num_hashes× less string hashing than calling xxhash64
-    per hash function, and it all stays in whole-stage codegen.
-    """
-    base = F.transform(shingle_col,
-                       lambda s: F.pmod(F.xxhash64(s, F.lit(seed)), F.lit(_MINHASH_P)))
-    return _minhash_from_base(base, num_hashes, seed)
+    import numpy as np
 
-
-def _minhash_from_base(base_hashes: Column, num_hashes: int, seed: int) -> Column:
-    """Signature from pre-hashed shingles (array<long> in [0, 2^31)).
-
-    Deliberately UNROLLED into ``num_hashes`` independent min-transform
-    expressions: a nested transform over a coefficient array was benchmarked
-    ~3× slower (inner higher-order lambdas lose expression specialization).
-    """
-    def perm(a: int, b: int):
-        return lambda x: F.pmod(x * F.lit(a) + F.lit(b), F.lit(_MINHASH_P))
-
-    return F.array(*[
-        F.array_min(F.transform(base_hashes, perm(a, b)))
-        for a, b in _minhash_coeffs(num_hashes, seed)
-    ])
-
-
-def shingle_hashes(text_col: str, n: int = 3, seed: int = 42) -> Column:
-    """Word-n-gram shingle hashes as array<long> in [0, 2^31) — WITHOUT
-    materializing shingle strings.
-
-    Each token is hashed once (xxhash64 → mod p); shingle hash = positional
-    linear combination of its n consecutive token hashes mod p. Equivalent
-    locality behavior to hashing the concatenated string, at a fraction of
-    the cost: no per-shingle string allocation, no re-hashing each ~n-word
-    string, and every step is long arithmetic in whole-stage codegen.
-    Coefficients are < 2^29 so each a_j*h_j < 2^60 and the n-term sum stays
-    far below 2^63 (ANSI-safe).
-    """
-    import random
-    rng = random.Random(seed ^ 0x5EED)
-    coeffs = [rng.randrange(1, 1 << 29) for _ in range(n)]
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda t: t != "")
-    th = F.transform(toks, lambda t: F.pmod(F.xxhash64(t, F.lit(seed)), F.lit(_MINHASH_P)))
-    count = F.greatest(F.size(th) - F.lit(n - 1), F.lit(0))
-
-    def combo(i: Column) -> Column:
-        acc = None
-        for j, c in enumerate(coeffs):
-            term = F.element_at(th, i + j) * F.lit(c)
-            acc = term if acc is None else acc + term
-        return F.pmod(acc, F.lit(_MINHASH_P))
-
-    return F.when(count <= 0, F.array().cast("array<long>")).otherwise(
-        F.transform(F.sequence(F.lit(1), count), combo))
+    out = np.empty(len(toks), dtype=np.int64)
+    for i, t in enumerate(toks):
+        v = memo.get(t)
+        if v is None:
+            v = int(hashlib.sha256(t.encode()).hexdigest()[:8], 16)
+            memo[t] = v
+        out[i] = v
+    return out
 
 
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                        num_hashes: int = 64, shingle_n: int = 3,
-                       seed: int = 42, impl: str = "pandas") -> DataFrame:
+                       seed: int = 42) -> DataFrame:
     """(doc, sig) signature table — the shared first stage of candidate
     generation and verification. Narrow (no shuffle); at cluster scale this
     is the DataFrame to persist/bucket so LSH probes reuse it.
 
-    ``impl="pandas"`` (default): Arrow-batched numpy minhash. Higher-order
-    function lambdas (transform/array_min) are NOT whole-stage-codegen'd —
-    they run through the boxed expression interpreter, measured ~1.6 µs per
-    lambda eval — so the "built-ins first" rule inverts here: one
-    ``np.minimum.reduceat`` over a (shingles × hashes) matrix per Arrow
-    batch beats the interpreted expression tree ~10×. ``impl="expr"`` keeps
-    the pure-JVM formulation (no Python workers); the two produce different
-    (internally consistent) hash families.
-    """
-    if impl == "expr":
-        return (df.select(F.col(id_col).alias("doc"),
-                          shingle_hashes(text_col, shingle_n, seed).alias("sh"))
-                  .filter(F.size("sh") > 0)
-                  .withColumn("sig", _minhash_from_base(F.col("sh"), num_hashes, seed))
-                  .select("doc", "sig"))
-    return _minhash_signatures_pandas(df, id_col, text_col, num_hashes,
-                                      shingle_n, seed)
-
-
-def _minhash_signatures_pandas(df: DataFrame, id_col: str, text_col: str,
-                               num_hashes: int, shingle_n: int,
-                               seed: int, tok_hash: str = "pandas") -> DataFrame:
-    """Vectorized minhash over mapInPandas: per Arrow batch, hash every token
-    once (``pd.util.hash_array`` — deterministic siphash), combine n
-    consecutive token hashes arithmetically into shingle hashes, then take
-    all ``num_hashes`` permutation minima for ALL documents in one
-    ``np.minimum.reduceat`` over the flattened shingle matrix.
-
-    ``tok_hash="sha"`` swaps the engine-private pandas siphash for the
-    first-8-hex-chars-of-sha256 token hash (cached per unique token per
-    batch) — slower, but reproducible in ANY engine, which is what lets the
-    DuckDB conformance oracle recompute signatures verbatim."""
-    import hashlib
+    Vectorized minhash over mapInPandas: per Arrow batch, hash every token
+    once (sha-bucket, mod p), combine n consecutive token hashes
+    arithmetically into shingle hashes, then take all ``num_hashes``
+    permutation minima for ALL documents in one ``np.minimum.reduceat``
+    over the flattened shingle matrix. Higher-order function lambdas
+    (transform/array_min) are NOT whole-stage-codegen'd — measured ~1.6 µs
+    per lambda eval — so this beats an expression formulation ~10×. Every
+    step is engine-neutral, so the DuckDB conformance oracle recomputes
+    signatures verbatim. Docs with fewer than ``shingle_n`` tokens get no
+    signature (they can never pair)."""
     import random
 
     from collections.abc import Iterator
@@ -237,9 +157,7 @@ def _minhash_signatures_pandas(df: DataFrame, id_col: str, text_col: str,
     import numpy as np
     import pandas as pd
 
-    rng = random.Random(seed)
-    ab = [(rng.randrange(1, _MINHASH_P), rng.randrange(0, _MINHASH_P))
-          for _ in range(num_hashes)]
+    ab = _minhash_coeffs(num_hashes, seed)
     a_vec = np.array([a for a, _ in ab], dtype=np.int64)
     b_vec = np.array([b for _, b in ab], dtype=np.int64)
     crng = random.Random(seed ^ 0x5EED)
@@ -248,31 +166,15 @@ def _minhash_signatures_pandas(df: DataFrame, id_col: str, text_col: str,
     n, p = shingle_n, _MINHASH_P
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sha_memo: dict[str, int] = {}
-
-        def sha_hash(toks: list[str]) -> np.ndarray:
-            out = np.empty(len(toks), dtype=np.int64)
-            for i, t in enumerate(toks):
-                v = sha_memo.get(t)
-                if v is None:
-                    v = int(hashlib.sha256(t.encode()).hexdigest()[:8], 16) % p
-                    sha_memo[t] = v
-                out[i] = v
-            return out
-
+        memo: dict[str, int] = {}
         for pdf in batches:
-            doc_ids, sigs = [], []
-            starts, all_sh = [], []
+            doc_ids, starts, all_sh = [], [], []
             pos = 0
             for doc, text in zip(pdf[id_col], pdf[text_col]):
                 toks = [t for t in str(text).lower().strip().split() if t]
                 if len(toks) < n:
                     continue
-                if tok_hash == "sha":
-                    th = sha_hash(toks)
-                else:
-                    th = (pd.util.hash_array(np.array(toks, dtype=object))
-                          .astype(np.int64) % p)
+                th = _sha_token_hashes(toks, memo) % p
                 # rolling combination of n consecutive token hashes
                 sh = np.zeros(len(toks) - n + 1, dtype=np.int64)
                 for j in range(n):
@@ -292,28 +194,28 @@ def _minhash_signatures_pandas(df: DataFrame, id_col: str, text_col: str,
     return df.select(F.col(id_col), F.col(text_col)).mapInPandas(run, out_schema)
 
 
-def _band_buckets(sig: DataFrame, num_hashes: int, bands: int,
-                  bucket: str = "hash") -> DataFrame:
-    """(doc, band, bucket) rows — each doc's LSH band keys.
-
-    ``bucket="hash"`` (default) shuffles an 8-byte xxhash64 of each band
-    slice; ``bucket="slice"`` joins on the raw slice itself (rows_per_band
-    longs) — marginally wider rows, but engine-neutral (no xxhash64), so
-    an external oracle can reproduce the exact candidate set."""
+def _band_buckets(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(doc, band, bucket) rows — each doc's LSH band keys. The bucket is
+    the raw signature slice (rows_per_band longs): engine-neutral, so an
+    external oracle can reproduce the exact candidate set."""
+    if not 1 <= bands <= num_hashes:
+        # bands=0 divides by zero; bands > num_hashes gives zero-width
+        # slices that every doc shares, making every pair a candidate
+        raise ValueError(f"bands={bands} must be in [1, num_hashes="
+                         f"{num_hashes}]")
     rows_per_band = num_hashes // bands
     band_idx = F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band")
-    slice_col = F.slice(F.col("sig"),
-                        F.col("band") * rows_per_band + 1, rows_per_band)
-    bucket_col = slice_col if bucket == "slice" else F.xxhash64(slice_col)
     return (sig.select("doc", "sig", band_idx)
-               .withColumn("bucket", bucket_col)
+               .withColumn("bucket", F.slice(F.col("sig"),
+                                             F.col("band") * rows_per_band + 1,
+                                             rows_per_band))
                .select("doc", "band", "bucket"))
 
 
-def _band_candidate_pairs(sig: DataFrame, num_hashes: int, bands: int,
-                          bucket: str = "hash") -> DataFrame:
+def _band_candidate_pairs(sig: DataFrame, num_hashes: int,
+                          bands: int) -> DataFrame:
     """LSH banding over a (doc, sig) table → candidate pairs (id_a < id_b)."""
-    buckets = _band_buckets(sig, num_hashes, bands, bucket)
+    buckets = _band_buckets(sig, num_hashes, bands)
     a = buckets.alias("a")
     b = buckets.alias("b")
     return (a.join(b, ["band", "bucket"])
@@ -322,13 +224,12 @@ def _band_candidate_pairs(sig: DataFrame, num_hashes: int, bands: int,
              .distinct())
 
 
-def _verify_pairs(sig: DataFrame, num_hashes: int, bands: int,
-                  jaccard_threshold: float, bucket: str) -> DataFrame:
-    """Shared verify stage over a (doc, sig) table: banding candidates →
-    signature-agreement Jaccard estimate → threshold filter. Emits
+def _verify_pairs(sig: DataFrame, pairs: DataFrame, num_hashes: int,
+                  jaccard_threshold: float) -> DataFrame:
+    """Shared verify stage over candidate (id_a, id_b) pairs: signature-
+    agreement Jaccard estimate → threshold filter. Emits
     (id_a, id_b, jaccard_est); ``sig`` should be persisted by the caller
     (it is consumed by banding AND both sides of the verify join)."""
-    pairs = _band_candidate_pairs(sig, num_hashes, bands, bucket)
     sa = sig.select(F.col("doc").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sig.select(F.col("doc").alias("id_b"), F.col("sig").alias("sig_b"))
     agree = F.aggregate(
@@ -344,33 +245,30 @@ def _verify_pairs(sig: DataFrame, num_hashes: int, bands: int,
 def minhash_verified_pairs(df: DataFrame, id_col: str, text_col: str,
                            jaccard_threshold: float = 0.8,
                            num_hashes: int = 64, bands: int = 16,
-                           shingle_n: int = 3, seed: int = 42,
-                           tok_hash: str = "pandas",
-                           bucket: str = "hash") -> DataFrame:
+                           shingle_n: int = 3, seed: int = 42) -> DataFrame:
     """(id_a, id_b, jaccard_est): LSH banding candidates verified by
     signature agreement rate — the near-dup PAIR surface shared by the
-    dedup operators. With ``tok_hash="sha"`` and ``bucket="slice"`` every
-    arithmetic step (token hash, shingle combination, permutation minima,
-    banding, estimate) is engine-neutral, so an external SQL oracle can
-    recompute the exact pair set and estimates.
+    dedup operators. Every arithmetic step (token hash, shingle
+    combination, permutation minima, banding, estimate) is engine-neutral,
+    so an external SQL oracle can recompute the exact pair set and
+    estimates.
 
     Caching note: the signature table is persisted here because the
     returned (lazy) plan consumes it three times; the cache is
     CALLER-OWNED — in a long-lived session, materialize the result and
     then ``spark.catalog.clearCache()`` (or use ``minhash_dedup_cc``,
     which unpersists its own signatures once the closure is computed)."""
-    sig = _minhash_signatures_pandas(df, id_col, text_col, num_hashes,
-                                     shingle_n, seed, tok_hash).persist()
-    return _verify_pairs(sig, num_hashes, bands, jaccard_threshold, bucket)
+    sig = minhash_signatures(df, id_col, text_col, num_hashes,
+                             shingle_n, seed).persist()
+    return _verify_pairs(sig, _band_candidate_pairs(sig, num_hashes, bands),
+                         num_hashes, jaccard_threshold)
 
 
 def minhash_index_probe(index_sig: DataFrame, new_docs: DataFrame,
                         id_col: str, text_col: str,
                         jaccard_threshold: float = 0.8,
                         num_hashes: int = 64, bands: int = 16,
-                        shingle_n: int = 3, seed: int = 42,
-                        tok_hash: str = "pandas",
-                        bucket: str = "hash") -> DataFrame:
+                        shingle_n: int = 3, seed: int = 42) -> DataFrame:
     """INCREMENTAL near-dup detection: probe a persisted signature index
     with a new document batch — (id_a, id_b, jaccard_est) for every
     near-dup pair involving ≥1 new doc, WITHOUT re-reading or re-signing
@@ -381,89 +279,44 @@ def minhash_index_probe(index_sig: DataFrame, new_docs: DataFrame,
     — bucket it by band key at cluster scale); each new batch signs only
     its own rows (map-only over the batch), bands them, and joins its
     band keys against the index's. Cost scales with the BATCH, not the
-    corpus: the index side of the join ships (doc, 16B) band rows, and at
-    cluster scale a band-bucketed layout makes it shuffle-free.
+    corpus: the index side of the join ships (doc, band slice) rows, and
+    at cluster scale a band-bucketed layout makes it shuffle-free.
 
     New-new pairs within the batch are included (the batch probes the
     union index), so appending batch B then probing B' ≡ probing B∪B' —
     the pair surface is exactly the full recompute's pairs restricted to
     pairs touching the new batch (same hash family ⇒ bit-identical
     estimates; the conformance oracle checks that equivalence)."""
-    new_sig = _minhash_signatures_pandas(new_docs, id_col, text_col,
-                                         num_hashes, shingle_n, seed,
-                                         tok_hash).persist()
+    new_sig = minhash_signatures(new_docs, id_col, text_col, num_hashes,
+                                 shingle_n, seed).persist()
     all_sig = index_sig.unionByName(new_sig)
-    nb = _band_buckets(new_sig, num_hashes, bands, bucket).alias("n")
-    ab = _band_buckets(all_sig, num_hashes, bands, bucket).alias("a")
+    nb = _band_buckets(new_sig, num_hashes, bands).alias("n")
+    ab = _band_buckets(all_sig, num_hashes, bands).alias("a")
     pairs = (nb.join(ab, ["band", "bucket"])
              .filter(F.col("n.doc") != F.col("a.doc"))
              .select(F.least(F.col("n.doc"), F.col("a.doc")).alias("id_a"),
                      F.greatest(F.col("n.doc"), F.col("a.doc")).alias("id_b"))
              .distinct())
-    sa = all_sig.select(F.col("doc").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = all_sig.select(F.col("doc").alias("id_b"), F.col("sig").alias("sig_b"))
-    agree = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-        F.lit(0), lambda acc, v: acc + v)
-    return (pairs.join(sa, "id_a").join(sb, "id_b")
-            .withColumn("jaccard_est",
-                        agree.cast("double") / F.lit(float(num_hashes)))
-            .filter(F.col("jaccard_est") >= jaccard_threshold)
-            .select("id_a", "id_b", "jaccard_est"))
+    return _verify_pairs(all_sig, pairs, num_hashes, jaccard_threshold)
 
 
 def minhash_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
                             num_hashes: int = 64, bands: int = 16,
-                            shingle_n: int = 3, seed: int = 42,
-                            tok_hash: str = "pandas",
-                            bucket: str = "hash") -> DataFrame:
+                            shingle_n: int = 3, seed: int = 42) -> DataFrame:
     """L2: LSH banding — near-dup CANDIDATE pairs (id_a < id_b).
 
     Signature is split into ``bands`` bands of ``num_hashes/bands`` rows;
-    documents agreeing on any full band hash into the same bucket; candidates
+    documents agreeing on any full band land in the same bucket; candidates
     are pairs sharing a bucket. Cost is Σ bucket² — sub-quadratic for
-    realistic skew; a self-join on (band, bucket_hash) keys, i.e. ONE shuffle
-    of (id, 2×8B) rows, never document text.
+    realistic skew; a self-join on (band, band slice) keys, i.e. ONE
+    shuffle of (id, band, slice) rows, never document text.
 
-    ``tok_hash="sha"`` + ``bucket="slice"``: the engine-neutral hash family
-    (see ``minhash_verified_pairs``) — lets an external SQL oracle recompute
-    the raw candidate set, pinning the banding stage itself (the stage where
-    a bug silently LOSES recall: verification can never flag a pair that was
-    never a candidate). The pandas-siphash default stays the fast path.
-    """
-    sig = _minhash_signatures_pandas(df, id_col, text_col, num_hashes,
-                                     shingle_n, seed, tok_hash)
-    return _band_candidate_pairs(sig, num_hashes, bands, bucket)
-
-
-def minhash_dedup(df: DataFrame, id_col: str, text_col: str,
-                  jaccard_threshold: float = 0.8, num_hashes: int = 64,
-                  bands: int = 16, shingle_n: int = 3, seed: int = 42) -> DataFrame:
-    """L2: near-dup removal. Candidates from LSH banding, verified by
-    estimated Jaccard (signature agreement rate), survivors = min-id per
-    connected component approximated as min-id per direct-neighbor set.
-
-    The signature table is computed ONCE and persisted across the two
-    consumers (banding + verification) — without the persist each branch
-    would re-shingle and re-hash the full corpus.
-
-    Note: full transitive closure needs iterative connected components
-    (large-scale: GraphFrames / iterative join until fixpoint); here we apply
-    the standard one-hop approximation used by web-scale dedup pipelines —
-    drop any doc that has a smaller near-duplicate neighbor.
-    """
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n, seed).persist()
-    pairs = _band_candidate_pairs(sig, num_hashes, bands)
-    sa = sig.select(F.col("doc").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("doc").alias("id_b"), F.col("sig").alias("sig_b"))
-    agree = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-        F.lit(0), lambda acc, v: acc + v)
-    est = (pairs.join(sa, "id_a").join(sb, "id_b")
-                .withColumn("jaccard_est", agree.cast("double") / F.lit(float(num_hashes)))
-                .filter(F.col("jaccard_est") >= jaccard_threshold))
-    losers = est.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
+    The raw candidate set is what an external SQL oracle recomputes to pin
+    the banding stage itself — the stage where a bug silently LOSES
+    recall: verification can never flag a pair that was never a
+    candidate."""
+    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n, seed)
+    return _band_candidate_pairs(sig, num_hashes, bands)
 
 
 # ---------------------------------------------------- connected components
@@ -499,9 +352,8 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
 
     Each round is one shuffle (neighbor-label aggregation); frontier
     DataFrames are persisted and the loop exits early when no label moved.
-    This is the exact-closure upgrade over ``minhash_dedup``'s one-hop
-    approximation; at extreme scale swap in large-star/small-star
-    (alternating optimization) — same DataFrame-only loop shape.
+    At extreme scale swap in large-star/small-star
+    (``connected_components_star``) — same DataFrame-only loop shape.
     """
     # r11 (guide §2.4): both directions from ONE scan of the pair frame —
     # the former two-branch union re-ran the (often expensive: blocking +
@@ -654,26 +506,23 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
 def minhash_dedup_cc(df: DataFrame, id_col: str, text_col: str,
                      jaccard_threshold: float = 0.8, num_hashes: int = 64,
                      bands: int = 16, shingle_n: int = 3, seed: int = 42,
-                     stats: dict | None = None, tok_hash: str = "pandas",
-                     bucket: str = "hash") -> DataFrame:
-    """L2 exact-closure variant: LSH candidates → signature-verified pairs →
-    connected components → keep the min-id doc per component. Unlike the
-    one-hop ``minhash_dedup``, a chain a~b~c~d keeps ONLY a.
-
-    ``tok_hash="sha"`` + ``bucket="slice"`` selects the engine-neutral hash
-    family (see ``minhash_verified_pairs``), making the whole composed
-    pipeline — pairs AND closure AND survivor choice — reproducible by an
-    external SQL oracle.
+                     stats: dict | None = None) -> DataFrame:
+    """L2 exact-closure near-dup removal: LSH candidates → signature-verified
+    pairs → connected components → keep the min-id doc per component. A
+    chain a~b~c~d keeps ONLY a (a one-hop "drop any doc with a smaller
+    neighbor" pass would keep a and c). The whole composed pipeline —
+    pairs AND closure AND survivor choice — is reproducible by an external
+    SQL oracle.
 
     The signature cache is released here: ``connected_components``
     materializes the verified edge list inside its iteration loop, so by
     the time it returns the signatures are no longer needed and the
     survivor anti-join reads only the (already-computed) labels."""
-    sig = _minhash_signatures_pandas(df, id_col, text_col, num_hashes,
-                                     shingle_n, seed, tok_hash).persist()
-    verified = _verify_pairs(sig, num_hashes, bands, jaccard_threshold,
-                             bucket).select("id_a", "id_b")
-    comp = connected_components(verified, stats=stats)
+    sig = minhash_signatures(df, id_col, text_col, num_hashes,
+                             shingle_n, seed).persist()
+    verified = _verify_pairs(sig, _band_candidate_pairs(sig, num_hashes, bands),
+                             num_hashes, jaccard_threshold)
+    comp = connected_components(verified.select("id_a", "id_b"), stats=stats)
     sig.unpersist()
     losers = comp.filter(F.col("id") != F.col("component")) \
                  .select(F.col("id").alias(id_col))
@@ -682,63 +531,26 @@ def minhash_dedup_cc(df: DataFrame, id_col: str, text_col: str,
 
 # ------------------------------------------------------------------- SimHash
 
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64,
-            seed: int = 42, impl: str = "pandas",
-            tok_hash: str = "pandas") -> DataFrame:
-    """SimHash fingerprint (EXT): 64-bit locality-sensitive hash.
+def simhash(df: DataFrame, id_col: str, text_col: str,
+            bits: int = 32) -> DataFrame:
+    """SimHash fingerprint (EXT): ``bits``-bit locality-sensitive hash.
 
-    Per document: hash each token, each bit position votes +1/-1 by whether
-    that bit is set; fingerprint bit = sign of vote sum. Near-dups differ in
-    few bits (Hamming). Returns (id_col, simhash bigint).
+    Per document: hash each token (sha-bucket, 32 bits), each bit position
+    votes +1/-1 by whether that bit is set; fingerprint bit = sign of vote
+    sum. Near-dups differ in few bits (Hamming). Returns
+    (id_col, simhash bigint); docs with no tokens are dropped.
 
-    ``impl="pandas"`` (default): Arrow-batched numpy — token hashes once per
-    batch, bit matrix via shifts, per-doc vote sums in one
-    ``np.add.reduceat``; no explode, no shuffle, no per-row Python.
-    ``impl="expr"``: explode → groupBy(doc) with one SUM per bit — pure
-    codegen with map-side partial agg (shuffle carries one row per doc);
-    keeps the computation JVM-only where Python workers are unwanted.
-    (A narrow per-row array-fold expression variant was benchmarked and
-    lost ~3×: HOF lambdas are interpreted, not codegen'd.)
+    Arrow-batched numpy: one (tokens × bits) sign matrix per batch, per-doc
+    vote sums in one ``np.add.reduceat``, sign-bit packing in numpy; no
+    explode, no shuffle, no per-row Python. The token hash is the portable
+    sha-bucket convention, so an external oracle can replicate the votes.
     """
-    if tok_hash == "sha" and bits > 32:
+    if bits > 32:
         # the sha-bucket token hash is 32 bits — fingerprint bits 32+ would
         # be all-zero, silently degenerating half the banding blocks
         raise ValueError(
-            f"tok_hash='sha' provides 32 hash bits; bits={bits} would leave "
-            "fingerprint bits 32+ constant — use bits<=32 or the default "
-            "64-bit tok_hash")
-    if impl == "pandas":
-        return _simhash_pandas(df, id_col, text_col, bits, seed, tok_hash)
-    toks = (df.select(F.col(id_col), F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok"))
-              .filter(F.col("tok") != "")
-              .withColumn("h", F.xxhash64("tok", F.lit(seed))))
-    votes = [
-        F.sum(F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1)
-               .otherwise(-1)).alias(f"b{i}")
-        for i in range(bits)
-    ]
-    agg = toks.groupBy(id_col).agg(*votes)
-    fp = F.lit(0).cast("long")
-    for i in range(bits):
-        # bit 63 is the long's sign bit (two's complement)
-        bit_val = (1 << i) if i < 63 else -(1 << 63)
-        fp = fp.bitwiseOR(
-            F.when(F.col(f"b{i}") > 0, F.lit(bit_val).cast("long"))
-             .otherwise(F.lit(0).cast("long")))
-    return agg.select(F.col(id_col), fp.alias("simhash"))
-
-
-def _simhash_pandas(df: DataFrame, id_col: str, text_col: str,
-                    bits: int, seed: int,
-                    tok_hash: str = "pandas") -> DataFrame:
-    """Vectorized simhash: one (tokens × bits) sign matrix per Arrow batch,
-    per-doc vote sums via ``np.add.reduceat``, sign-bit packing in numpy.
-    Docs with no tokens are dropped (parity with the exploded form).
-    ``tok_hash="sha"``: engine-neutral 32-bit sha-bucket token hash (use
-    with ``bits<=32``) so an external oracle can replicate the votes."""
-    import hashlib
-
+            f"the sha token hash provides 32 hash bits; bits={bits} would "
+            "leave fingerprint bits 32+ constant — use bits<=32")
     from collections.abc import Iterator
 
     import numpy as np
@@ -747,18 +559,7 @@ def _simhash_pandas(df: DataFrame, id_col: str, text_col: str,
     shifts = np.arange(bits, dtype=np.uint64)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sha_memo: dict[str, int] = {}
-
-        def sha_hash(toks: list[str]) -> np.ndarray:
-            out = np.empty(len(toks), dtype=np.uint64)
-            for i, t in enumerate(toks):
-                v = sha_memo.get(t)
-                if v is None:
-                    v = int(hashlib.sha256(t.encode()).hexdigest()[:8], 16)
-                    sha_memo[t] = v
-                out[i] = v
-            return out
-
+        memo: dict[str, int] = {}
         for pdf in batches:
             doc_ids, starts, hash_chunks = [], [], []
             pos = 0
@@ -766,11 +567,7 @@ def _simhash_pandas(df: DataFrame, id_col: str, text_col: str,
                 toks = [t for t in str(text).lower().strip().split() if t]
                 if not toks:
                     continue
-                if tok_hash == "sha":
-                    th = sha_hash(toks)
-                else:
-                    th = pd.util.hash_array(np.array(toks, dtype=object)) \
-                           .astype(np.uint64)
+                th = _sha_token_hashes(toks, memo).astype(np.uint64)
                 doc_ids.append(doc)
                 starts.append(pos)
                 hash_chunks.append(th)
@@ -792,17 +589,19 @@ def _simhash_pandas(df: DataFrame, id_col: str, text_col: str,
 
 def simhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
                            max_hamming: int = 3, blocks: int = 4,
-                           seed: int = 42, bits: int = 64,
-                           tok_hash: str = "pandas") -> DataFrame:
+                           bits: int = 32) -> DataFrame:
     """SimHash near-dup candidates via block-permutation banding: split the
     ``bits``-bit fingerprint into ``blocks`` equal blocks; by pigeonhole,
     any pair within Hamming distance < blocks agrees on ≥1 block →
     self-join on (block_idx, block_value), verify exact Hamming ≤
-    ``max_hamming``. ``tok_hash="sha"`` + ``bits=32``: engine-neutral
-    variant whose DuckDB oracle replicates votes, packing, and banding.
+    ``max_hamming``. The DuckDB oracle replicates votes, packing, and
+    banding.
     """
-    fps = simhash(df, id_col, text_col, bits=bits, seed=seed,
-                  tok_hash=tok_hash)
+    if not 1 <= blocks <= bits:
+        # blocks=0 divides by zero; blocks > bits gives zero-width blocks
+        # that every doc shares, making every pair a candidate
+        raise ValueError(f"blocks={blocks} must be in [1, bits={bits}]")
+    fps = simhash(df, id_col, text_col, bits=bits)
     width = bits // blocks
     block_cols = F.array(*[
         F.shiftrightunsigned(F.col("simhash"), i * width)
@@ -827,8 +626,9 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
 def _shingle_rows_pandas(df: DataFrame, id_col: str, text_col: str,
                          n: int, seed: int = 42) -> DataFrame:
     """(doc, s) rows — one per DISTINCT shingle hash per document — via a
-    1→N mapInPandas kernel (UDTF shape). Same rolling token-hash shingle
-    identity as ``_minhash_signatures_pandas``."""
+    1→N mapInPandas kernel (UDTF shape). Same rolling shingle combination
+    as ``minhash_signatures``, over an engine-private (pandas siphash)
+    token hash."""
     import random
 
     from collections.abc import Iterator
@@ -1085,7 +885,7 @@ def dedup_keep_best(df: DataFrame, id_col: str, pairs: DataFrame,
     boilerplate / highest-scoring copy, not whichever crawled first.
 
     ``pairs`` is any near-dup pair surface; clusters come from the exact
-    transitive closure (``connected_components`` — O(log n) rounds);
+    transitive closure (``connected_components`` — O(diameter) rounds);
     documents in no pair form singleton clusters via a null-safe
     component fallback and always survive. One shuffle keys the cluster
     window; at most one row per cluster survives it
@@ -1423,8 +1223,8 @@ def shingle_sha_values(text_col: str, n: int = 3, seed: int = 42) -> Column:
     """PORTABLE word-n-gram shingle hashes as array<long> in [0, 2³¹−1):
     the sha-bucket token hash (first 8 hex chars of sha256, mod p — the
     repo convention any engine can replay) fed through the SAME seeded
-    rolling combination as ``shingle_hashes``. This is the shingle space
-    the ``tok_hash="sha"`` signature kernel minhashes over, exposed as a
+    rolling combination as ``minhash_signatures``. This is the shingle
+    space the signature kernel minhashes over, exposed as a
     column so exact-Jaccard ground truth can be computed in the identical
     space (→ ``minhash_recall_report``)."""
     import random
@@ -1468,9 +1268,9 @@ def minhash_recall_report(df: DataFrame, id_col: str, text_col: str,
     exact ground truth needs the shared-shingle self-join. The
     candidate side stays the production banding plan; sizes/intersections
     are hash aggregates keyed on shingle value and pair."""
-    sig = _minhash_signatures_pandas(df, id_col, text_col, num_hashes,
-                                     shingle_n, seed, tok_hash="sha")
-    cand = _band_candidate_pairs(sig, num_hashes, bands, bucket="slice")
+    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n,
+                             seed)
+    cand = _band_candidate_pairs(sig, num_hashes, bands)
     sh = (df.select(F.col(id_col).alias("doc"),
                     F.explode(shingle_sha_values(text_col, shingle_n, seed))
                     .alias("s"))

@@ -97,31 +97,103 @@ def test_simhash_sha_rejects_wide_bits(spark):
     )
     df = spark.createDataFrame([Row(doc_id=1, text="a b c")])
     with pytest.raises(ValueError, match="32 hash bits"):
-        simhash(df, "doc_id", "text", bits=64, tok_hash="sha")
+        simhash(df, "doc_id", "text", bits=64)
     with pytest.raises(ValueError, match="32 hash bits"):
-        simhash_near_dup_pairs(df, "doc_id", "text", tok_hash="sha")
+        simhash_near_dup_pairs(df, "doc_id", "text", bits=64)
     # bits<=32 stays valid
-    assert simhash(df, "doc_id", "text", bits=32, tok_hash="sha").count() == 1
+    assert simhash(df, "doc_id", "text", bits=32).count() == 1
 
 
 def test_minhash_candidates_both_hash_families_find_twin(spark):
-    """The engine-hash (pandas-siphash, production fast path) and portable
-    (sha/slice, oracle-replicable) candidate pipelines both surface a
-    planted high-Jaccard twin — the fast path keeps its recall pin now
-    that the `minhash_near_dup` registry key runs the portable family
-    (round-11 re-key; the kernels share every stage but the token hash)."""
+    """The candidate pipeline surfaces a planted high-Jaccard twin."""
     from data_engineering__spark.operators.dedup import minhash_candidate_pairs
     base = "the quick brown fox jumps over the lazy dog again and again"
     rows = [Row(doc_id=1, text=base),
             Row(doc_id=2, text=base + " tail"),           # near-dup twin
             Row(doc_id=3, text="completely unrelated words " * 3)]
     df = spark.createDataFrame(rows)
-    for kw in ({}, {"tok_hash": "sha", "bucket": "slice"}):
-        pairs = {(r.id_a, r.id_b)
-                 for r in minhash_candidate_pairs(
-                     df, "doc_id", "text", num_hashes=32, bands=16,
-                     **kw).collect()}
-        assert (1, 2) in pairs, f"twin pair lost with {kw or 'defaults'}"
+    pairs = {(r.id_a, r.id_b)
+             for r in minhash_candidate_pairs(
+                 df, "doc_id", "text", num_hashes=32, bands=16).collect()}
+    assert (1, 2) in pairs, "twin pair lost"
+
+
+def test_near_dup_banding_parameters_validated(spark):
+    """bands must lie in [1, num_hashes] and blocks in [1, bits]: zero
+    divides by zero, and more bands (blocks) than signature rows (bits)
+    gives zero-width keys every doc shares — every pair a candidate."""
+    import pytest
+
+    from data_engineering__spark.operators.dedup import (
+        minhash_candidate_pairs,
+        minhash_dedup_cc,
+        minhash_index_probe,
+        minhash_signatures,
+        minhash_verified_pairs,
+        simhash_near_dup_pairs,
+    )
+    df = spark.createDataFrame([
+        Row(doc_id=1, text="alpha beta gamma delta epsilon"),
+        Row(doc_id=2, text="one two three four five six"),
+        Row(doc_id=3, text="red green blue cyan magenta")])
+    index = minhash_signatures(df, "doc_id", "text", num_hashes=8)
+    for bands in (0, 16):
+        with pytest.raises(ValueError, match="bands"):
+            minhash_candidate_pairs(df, "doc_id", "text", num_hashes=8,
+                                    bands=bands)
+        with pytest.raises(ValueError, match="bands"):
+            minhash_verified_pairs(df, "doc_id", "text", num_hashes=8,
+                                   bands=bands)
+        with pytest.raises(ValueError, match="bands"):
+            minhash_dedup_cc(df, "doc_id", "text", num_hashes=8, bands=bands)
+        with pytest.raises(ValueError, match="bands"):
+            minhash_index_probe(index, df, "doc_id", "text", num_hashes=8,
+                                bands=bands)
+    for blocks in (0, 33):
+        with pytest.raises(ValueError, match="blocks"):
+            simhash_near_dup_pairs(df, "doc_id", "text", blocks=blocks)
+    # the boundary values stay valid: unrelated docs give no candidates
+    assert minhash_candidate_pairs(df, "doc_id", "text", num_hashes=8,
+                                   bands=8).count() == 0
+    assert simhash_near_dup_pairs(df, "doc_id", "text", max_hamming=0,
+                                  blocks=32).count() == 0
+
+
+def test_near_dup_family_empty_and_short_inputs(spark):
+    """Degenerate inputs: an empty corpus (the normal case for an empty
+    daily batch) gives 0 rows from every near-dup operator without raising,
+    and docs shorter than ``shingle_n`` get no signature, so they can never
+    pair and all survive dedup."""
+    from data_engineering__spark.operators.dedup import (
+        connected_components,
+        minhash_candidate_pairs,
+        minhash_dedup_cc,
+        minhash_index_probe,
+        minhash_signatures,
+        minhash_verified_pairs,
+        simhash_near_dup_pairs,
+    )
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    index = minhash_signatures(empty, "doc_id", "text", num_hashes=32)
+    assert minhash_verified_pairs(empty, "doc_id", "text", num_hashes=32,
+                                  bands=16).count() == 0
+    assert minhash_candidate_pairs(empty, "doc_id", "text", num_hashes=32,
+                                   bands=16).count() == 0
+    assert minhash_index_probe(index, empty, "doc_id", "text",
+                               num_hashes=32, bands=16).count() == 0
+    assert minhash_dedup_cc(empty, "doc_id", "text", num_hashes=32,
+                            bands=16).count() == 0
+    assert simhash_near_dup_pairs(empty, "doc_id", "text").count() == 0
+    no_pairs = spark.createDataFrame([], "id_a long, id_b long")
+    assert connected_components(no_pairs).count() == 0
+
+    short = spark.createDataFrame([Row(doc_id=1, text="a b"),
+                                   Row(doc_id=2, text="a b"),
+                                   Row(doc_id=3, text="a"),
+                                   Row(doc_id=4, text="")])
+    kept = minhash_dedup_cc(short, "doc_id", "text", num_hashes=32,
+                            bands=16, shingle_n=3)
+    assert sorted(r.doc_id for r in kept.collect()) == [1, 2, 3, 4]
 
 
 def test_jdbc_round_trip_embedded_derby(spark, tmp_path):
