@@ -1200,8 +1200,7 @@ def doc_fingerprint_q(spark, sf_dir):
     ``h = (h*31 + tokhash) mod (2^31-1)``)."""
     docs = read_table(spark, sf_dir, "documents")
     return docs.select("doc_id",
-                       X.doc_fingerprint("text", portable=True)
-                        .alias("fingerprint"))
+                       X.doc_fingerprint("text").alias("fingerprint"))
 
 
 @query("multimodal_features", oracle="""

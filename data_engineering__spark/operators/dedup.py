@@ -701,26 +701,11 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
 
 # ---------------------------------------------- benchmark decontamination
 
-def shingle_sha_hashes(text_col: str, n: int = 8) -> Column:
-    """array<bigint>: sha-bucket hashes of the document's n-token shingles
-    (first 8 hex chars of sha256 of the space-joined window — the repo's
-    portable-hash convention, byte-replicable in any engine). The hash
-    keeps shuffle rows fixed-width where a literal shingle string would
-    ship ~50 bytes; collisions (p≈n/2³²) only ever DROP an extra doc,
-    never leak one.
-
-    PERF: ``text_col`` is expected to already BE the materialized token
-    array column when called through ``shingle_sha_rows`` — Spark
-    evaluates an array lambda's free subexpressions once PER ELEMENT, so
-    inlining the tokenizer here cost ~5× (the repetition_profile HOF
-    re-eval pathology, measured again on this operator: 4.6 s → 0.96 s at
-    sf0.1×2 once the split is projected first)."""
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda t: t != "")
-    return _shingle_sha_of_tokens(toks, n)
-
-
 def _shingle_sha_of_tokens(toks: Column, n: int) -> Column:
+    """array<bigint>: sha-bucket hashes of the n-token shingles of the
+    token array ``toks`` (first 8 hex chars of sha256 of the space-joined
+    window — byte-replicable in any engine). The hash keeps shuffle rows
+    fixed-width where a literal shingle string would ship ~50 bytes."""
     count = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
     win = lambda i: F.concat_ws(" ", F.slice(toks, i, n))  # noqa: E731
     return F.when(count <= 0, F.array().cast("array<long>")).otherwise(

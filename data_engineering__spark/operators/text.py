@@ -107,8 +107,7 @@ def quality_score(df: DataFrame, text_col: str, out_col: str = "quality",
     return df.withColumn(out_col, F.round(score, 2))
 
 
-def doc_fingerprint(text_col: str, seed: int = 42,
-                    portable: bool = False) -> Column:
+def doc_fingerprint(text_col: str) -> Column:
     """EXT document fingerprint: order-sensitive rolling hash over tokens,
     fold-left ``h = (h*31 + tokhash(token)) mod M`` via F.aggregate (NB:
     HOF folds evaluate interpreted, not codegen — fine here, one cheap fold
@@ -116,18 +115,14 @@ def doc_fingerprint(text_col: str, seed: int = 42,
     Distinguishes permuted documents (unlike bag-of-words hashes); companion
     to content-hash L1 (order-insensitive after normalization).
 
-    ``portable=False`` (default): tokhash = xxhash64(token, seed) — fastest,
-    Spark-private. ``portable=True``: tokhash = first 8 hex chars of
-    sha256(token) as int — engine-neutral, reproduced verbatim by the
-    DuckDB conformance oracle (a ``list_reduce`` fold)."""
+    tokhash = first 8 hex chars of sha256(token) as int — the repo's
+    portable sha-bucket convention, engine-neutral and reproduced verbatim
+    by the DuckDB conformance oracle (a ``list_reduce`` fold)."""
     m = F.lit((1 << 31) - 1).cast("long")
-    if portable:
-        def tok_hash(t):
-            return F.conv(F.substring(F.sha2(t, 256), 1, 8), 16, 10) \
-                    .cast("long")
-    else:
-        def tok_hash(t):
-            return F.pmod(F.xxhash64(t, F.lit(seed)), m)
+
+    def tok_hash(t):
+        return F.conv(F.substring(F.sha2(t, 256), 1, 8), 16, 10).cast("long")
+
     return F.aggregate(
         tokens(text_col),
         F.lit(0).cast("long"),
@@ -285,7 +280,7 @@ def ngram_counts(df: DataFrame, text_col: str, n: int = 3,
     (map-side partial) → TakeOrderedAndProject; ties at the cut break on
     the ngram string so the selected set is deterministic. Shuffles
     (ngram, partial-count) pairs; at extreme scale swap the string for
-    its sha bucket (see ``dedup.shingle_sha_hashes``) and join back for
+    its sha bucket (see ``dedup.shingle_sha_rows``) and join back for
     display."""
     toks = tokens(text_col)
     cnt = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))

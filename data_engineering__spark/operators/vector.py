@@ -34,6 +34,74 @@ def as_double_array(col: str | Column) -> Column:
     return c.cast("array<double>")
 
 
+# ---------------------------------------------- centroid-kernel scaffold
+#
+# Every centroid/codebook kernel below (IVF and k-means assignment, the
+# Lloyd partial sums, PQ encoding, the ADC lookup table, the anchor
+# cosine grid) is "collect a small table → numpy matrix → vectorized
+# fold per Arrow batch". The three helpers hold the invariants the SQL
+# oracles replicate, so no kernel restates them:
+# - rows sort by id, so ``argmin``/``argmax`` returning the FIRST
+#   extremum is the smallest-id tie rule;
+# - sums accumulate DIM-BY-DIM, the left-fold order of ``_dot``/
+#   ``_norm``/``_l2sq`` and of the oracles' expression chains
+#   (``np.sum``'s pairwise order could flip a ROUND-6 ordering or an
+#   arg-extremum at ulp distance).
+
+def _centroid_matrix(frame: DataFrame, key: str = "cell",
+                     vec: str = "cvec"):
+    """(ids int64[k], mat float64[k, dim]) of a centroid/codebook frame,
+    sorted by id — the one centroid collect (k·dim doubles: cell counts
+    are driver-small by definition, capped by ``INDEX_CELL_CAP`` on the
+    corpus-derived index). An empty frame gives k = 0 and a (0, 0)
+    matrix; kernels then emit no rows, like the oracles' CTEs."""
+    import numpy as np
+
+    rows = sorted((r[0], list(r[1])) for r in
+                  frame.select(F.col(key), as_double_array(vec)).collect())
+    ids = np.array([c for c, _ in rows], dtype=np.int64)
+    mat = (np.array([v for _, v in rows], dtype=np.float64) if rows
+           else np.zeros((0, 0)))
+    return ids, mat
+
+
+def _sq_l2(v, mat):
+    """(B, k) squared L2 between the rows of ``v`` (B, dim) and ``mat``
+    (k, dim), accumulated dim by dim."""
+    import numpy as np
+
+    d2 = np.zeros((len(v), len(mat)))
+    for j in range(mat.shape[1]):
+        t = v[:, j:j + 1] - mat[None, :, j]
+        d2 = d2 + t * t
+    return d2
+
+
+def _cos_fold(v, mat, widths=()):
+    """{d: (B, k) cosine over the first d components} of the rows of
+    ``v`` against the rows of ``mat``, for each prefix width d in
+    ``widths`` (default: the full width only). The dot product and BOTH
+    norms accumulate dim by dim, so every width comes from one pass and
+    equals scoring ``slice(v, 1, d)`` alone; each cosine is the
+    ``dot / (n_v · n_mat)`` one-multiply one-divide shape of ``cosine``."""
+    import numpy as np
+
+    want = set(widths or (mat.shape[1],))
+    dot = np.zeros((len(v), len(mat)))
+    nv2 = np.zeros(len(v))
+    nm2 = np.zeros(len(mat))
+    out = {}
+    for j in range(mat.shape[1]):
+        dot = dot + v[:, j:j + 1] * mat[None, :, j]
+        nv2 = nv2 + v[:, j] * v[:, j]
+        nm2 = nm2 + mat[:, j] * mat[:, j]
+        if j + 1 in want:
+            with np.errstate(divide="ignore", invalid="ignore"):
+                out[j + 1] = dot / (np.sqrt(nv2)[:, None]
+                                    * np.sqrt(nm2)[None, :])
+    return out
+
+
 #: In-plan ceiling on broadcast sample frames (query sets, corpus-subset
 #: centroids, exact-eval samples). The sample-regime operators broadcast
 #: a "small by contract" frame into a nested-loop scoring grid; prose
@@ -224,14 +292,9 @@ def cos_grid_pandas(left: DataFrame, q: DataFrame,
     widths come from the SAME single pass, bit-identical to scoring
     each ``slice(v, 1, d)`` separately.
 
-    Bit-reproducibility: the dot product and BOTH norms accumulate
-    DIM-BY-DIM (the exact left-fold order of ``_dot``/``_norm`` and the
-    SQL oracles' expression chains — ``np.sum``'s pairwise order could
-    flip a ROUND-6 ordering at ulp distance), and the cosine is the
-    identical ``dot / (n_left · n_query)`` one-multiply one-divide shape.
-    NULL-vector rows are dropped on BOTH sides (they scored NULL-cosine
-    in the fold form and never rank; stacking them would crash the batch
-    matrix)."""
+    Scoring is :func:`_cos_fold` (the oracles' fold order). NULL-vector
+    rows are dropped on BOTH sides (they scored NULL-cosine in the fold
+    form and never rank; stacking them would crash the batch matrix)."""
     from collections.abc import Iterator
 
     import numpy as np
@@ -239,22 +302,13 @@ def cos_grid_pandas(left: DataFrame, q: DataFrame,
 
     q_rows = (q.filter(F.col(qvec).isNotNull())
               .select(qid, *q_extra, qvec).collect())
-    qids = [r[qid] for r in q_rows]
+    nq = len(q_rows)
+    qid_arr = np.array([r[qid] for r in q_rows])
     qmat = np.array([list(r[qvec]) for r in q_rows], dtype=np.float64)
     wset = sorted(widths) if widths else None
-    full = qmat.shape[1] if len(q_rows) else 0
-    nq2 = np.zeros(len(q_rows))
-    qn_at = {}
-    for j in range(full):
-        nq2 = nq2 + qmat[:, j] * qmat[:, j]
-        if wset and (j + 1) in wset:
-            qn_at[j + 1] = np.sqrt(nq2.copy())
-    qn = np.sqrt(nq2)
     q_carry = {c: [r[c] for r in q_rows] for c in q_extra}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        nq = len(qids)
-        qid_arr = np.array(qids)
         # Bound the materialized pair frame: an Arrow batch of B rows
         # emits B·nq·len(widths or 1) pair rows — at the 10k default
         # batch size and a full 1024-anchor grid that is ~10M rows of
@@ -271,43 +325,30 @@ def cos_grid_pandas(left: DataFrame, q: DataFrame,
                 yield from _score(whole.iloc[lo:lo + rows_per])
 
     def _score(pdf):
-            nq = len(qids)
-            qid_arr = np.array(qids)
-            v = np.array(pdf[vec].tolist(), dtype=np.float64)   # (B, dim)
-            dot = np.zeros((len(v), nq))
-            nv2 = np.zeros(len(v))
-            cos_at = {}
-            for j in range(v.shape[1]):
-                dot = dot + v[:, j:j + 1] * qmat[None, :, j]
-                nv2 = nv2 + v[:, j] * v[:, j]
-                if wset and (j + 1) in wset:
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        cos_at[j + 1] = dot / (np.sqrt(nv2)[:, None]
-                                               * qn_at[j + 1][None, :])
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dot / (np.sqrt(nv2)[:, None] * qn[None, :])
+        v = np.array(pdf[vec].tolist(), dtype=np.float64)   # (B, dim)
+        cos_at = _cos_fold(v, qmat, wset or ())
 
-            def frame(cvals, width=None):
-                cols = {lid: np.repeat(pdf[lid].to_numpy(), nq)}
-                for c in l_extra:
-                    cols[c] = np.repeat(pdf[c].to_numpy(), nq)
-                cols[qid] = np.tile(qid_arr, len(v))
-                for c in q_extra:
-                    cols[c] = pd.Series(q_carry[c] * len(v))
-                if width is not None:
-                    cols[width_col] = np.full(len(v) * nq, width,
-                                              dtype=np.int32)
-                cols[out] = cvals.ravel()
-                res = pd.DataFrame(cols)
-                if exclude_self:
-                    res = res[res[lid] != res[qid]]
-                return res
+        def frame(cvals, width=None):
+            cols = {lid: np.repeat(pdf[lid].to_numpy(), nq)}
+            for c in l_extra:
+                cols[c] = np.repeat(pdf[c].to_numpy(), nq)
+            cols[qid] = np.tile(qid_arr, len(v))
+            for c in q_extra:
+                cols[c] = pd.Series(q_carry[c] * len(v))
+            if width is not None:
+                cols[width_col] = np.full(len(v) * nq, width,
+                                          dtype=np.int32)
+            cols[out] = cvals.ravel()
+            res = pd.DataFrame(cols)
+            if exclude_self:
+                res = res[res[lid] != res[qid]]
+            return res
 
-            if wset:
-                yield pd.concat([frame(cos_at[d], d) for d in wset],
-                                ignore_index=True)
-            else:
-                yield frame(cos)
+        if wset:
+            yield pd.concat([frame(cos_at[d], d) for d in wset],
+                            ignore_index=True)
+        else:
+            yield frame(cos_at[qmat.shape[1]])
 
     ldt, qdt = dict(left.dtypes), dict(q.dtypes)
     parts = [f"{lid} {ldt[lid]}"]
@@ -463,44 +504,27 @@ def ivf_assign(df: DataFrame, centroids: DataFrame, id_col: str = "vec_id",
     scale the assignment is computed once and persisted/bucketed by cell
     — queries then touch only their probed cells' partitions.
 
-    Bit-reproducibility is preserved: the dot product and BOTH norms
-    accumulate DIM-BY-DIM (the exact left-fold order of ``_dot``/
-    ``_norm`` and the SQL oracle's expression chain — ``np.sum``'s
-    pairwise order could flip an argmax at ulp distance), and the cosine
-    is the identical one-multiply one-divide expression shape. Ties:
-    centroid rows sort by id and ``argmax`` returns the FIRST maximum =
-    smallest centroid id, matching the struct-max rule. Vectors are
-    assumed nonzero-norm (the fold form shared the precondition);
-    NULL-embedding rows are dropped up front — the fold path emitted a
-    NULL-cosine row for them, the kernel would hard-crash stacking the
-    batch matrix, and neither produces a usable cell. Ragged (wrong-dim)
-    vectors remain a stated precondition violation."""
+    Centroids come from :func:`_centroid_matrix` and score by
+    :func:`_cos_fold` (ties → smallest centroid id, the struct-max rule);
+    an empty centroid frame assigns no rows. Vectors are assumed
+    nonzero-norm (the fold form shared the precondition); NULL-embedding
+    rows are dropped up front — the fold path emitted a NULL-cosine row
+    for them, the kernel would hard-crash stacking the batch matrix, and
+    neither produces a usable cell. Ragged (wrong-dim) vectors remain a
+    stated precondition violation."""
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    rows = sorted((r[0], list(r[1])) for r in
-                  centroids.select(F.col(id_col),
-                                   as_double_array(vec_col)).collect())
-    cids = np.array([c for c, _ in rows], dtype=np.int64)
-    cmat = np.array([v for _, v in rows], dtype=np.float64)      # (k, dim)
-    nc2 = np.zeros(len(cids))
-    for j in range(cmat.shape[1]):
-        nc2 = nc2 + cmat[:, j] * cmat[:, j]
-    ncs = np.sqrt(nc2)
+    cids, cmat = _centroid_matrix(centroids, id_col, vec_col)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not len(pdf):
+            if not len(pdf) or not len(cids):
                 continue
             v = np.array(pdf[vec_col].tolist(), dtype=np.float64)  # (B, dim)
-            d = np.zeros((len(v), len(cids)))
-            nv2 = np.zeros(len(v))
-            for j in range(cmat.shape[1]):
-                d = d + v[:, j:j + 1] * cmat[None, :, j]
-                nv2 = nv2 + v[:, j] * v[:, j]
-            cos = d / (np.sqrt(nv2)[:, None] * ncs[None, :])
+            cos = _cos_fold(v, cmat)[cmat.shape[1]]
             yield pd.DataFrame({id_col: pdf[id_col],
                                 "cell": cids[np.argmax(cos, axis=1)]})
 
@@ -577,34 +601,24 @@ def kmeans_assign(df: DataFrame, centroids: DataFrame,
     operator's existing contract). The carried vector is the post-cast
     ``array<double>`` form.
 
-    Bit-reproducibility is preserved: the kernel accumulates the squared
-    distance DIM-BY-DIM (``d2 += (v_j - c_j)²`` for j = 1..dim), the exact
-    left-fold summation order the SQL oracle's expression chain uses —
-    ``np.sum`` would pairwise-sum in a different order and could flip an
-    argmin at ulp distance. Ties: centroid rows sort by cell id and
-    ``argmin`` returns the FIRST minimum = smallest cell. NULL-embedding
-    rows are dropped up front (no cell is assignable; stacking them would
-    crash the batch matrix).
+    Centroids come from :func:`_centroid_matrix` and distances from
+    :func:`_sq_l2` (ties → smallest cell); an empty centroid frame
+    assigns no rows. NULL-embedding rows are dropped up front (no cell
+    is assignable; stacking them would crash the batch matrix).
     """
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    rows = sorted((r["cell"], list(r["cvec"]))
-                  for r in centroids.select("cell", "cvec").collect())
-    cells = np.array([c for c, _ in rows], dtype=np.int64)
-    cmat = np.array([v for _, v in rows], dtype=np.float64)      # (k, dim)
+    cells, cmat = _centroid_matrix(centroids)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not len(pdf):
+            if not len(pdf) or not len(cells):
                 continue
             v = np.array(pdf[vec_col].tolist(), dtype=np.float64)  # (B, dim)
-            d2 = np.zeros((len(v), len(cells)))
-            for j in range(cmat.shape[1]):
-                t = v[:, j:j + 1] - cmat[None, :, j]
-                d2 = d2 + t * t
+            d2 = _sq_l2(v, cmat)
             out = {id_col: pdf[id_col]}
             for c in carry_cols:
                 out[c] = pdf[c]
@@ -639,22 +653,18 @@ def _kmeans_update_sums(df: DataFrame, centroids: DataFrame,
     each ~2.1 s iteration at sf0.1/local[32]. This kernel assigns AND
     accumulates inside the same numpy pass, so the Python→JVM transfer
     and the JVM aggregation input shrink from n rows to (tasks × k)
-    rows. The assignment arithmetic is IDENTICAL to ``kmeans_assign``
-    (dim-by-dim left-fold distances, argmin-first tie break on the
-    cell-sorted centroid matrix); the per-cell sums use numpy block
-    summation, whose ulp-level order difference from the engine's
-    per-row partial aggregation is collapsed by the caller's ROUND-6 —
-    the established inter-iteration doctrine (re-proven at the sf10
-    battery this round)."""
+    rows. The assignment is ``kmeans_assign``'s (:func:`_sq_l2` over
+    :func:`_centroid_matrix`; no centroids → no rows); the per-cell sums
+    use numpy block summation, whose ulp-level order difference from the
+    engine's per-row partial aggregation is collapsed by the caller's
+    ROUND-6 — the established inter-iteration doctrine (re-proven at the
+    sf10 battery this round)."""
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    rows = sorted((r["cell"], list(r["cvec"]))
-                  for r in centroids.select("cell", "cvec").collect())
-    cells = np.array([c for c, _ in rows], dtype=np.int64)
-    cmat = np.array([v for _, v in rows], dtype=np.float64)      # (k, dim)
+    cells, cmat = _centroid_matrix(centroids)
     k, dim = cmat.shape
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -662,15 +672,11 @@ def _kmeans_update_sums(df: DataFrame, centroids: DataFrame,
         cnts = np.zeros(k, dtype=np.int64)
         seen = False
         for pdf in batches:
-            if not len(pdf):
+            if not len(pdf) or not k:
                 continue
             seen = True
             v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            d2 = np.zeros((len(v), k))
-            for j in range(dim):
-                t = v[:, j:j + 1] - cmat[None, :, j]
-                d2 = d2 + t * t
-            idx = np.argmin(d2, axis=1)
+            idx = np.argmin(_sq_l2(v, cmat), axis=1)
             for ci in range(k):
                 m = idx == ci
                 if m.any():
@@ -693,7 +699,8 @@ def kmeans_fit(df: DataFrame, k: int = 8, n_iter: int = 2,
     (cell, cvec array<double>) trained centroids for the IVF index.
 
     Deterministic by construction (rerun- and engine-reproducible):
-    - init = the ``k`` lowest-id vectors (no random restarts);
+    - init = the vectors with ``id < k`` (no random restarts; a corpus
+      with no such id trains 0 centroids, as the oracles' CTEs do);
     - a FIXED iteration count (no float-threshold convergence test);
     - centroid components ROUND to ``round_dp`` decimals between
       iterations — parallel partial-sum averaging differs from a
@@ -701,30 +708,27 @@ def kmeans_fit(df: DataFrame, k: int = 8, n_iter: int = 2,
       to the same value before it can flip an assignment;
     - assignment ties break on smallest cell id.
 
-    Scale: per iteration, assignment is a broadcast crossJoin + map-side
-    struct-min (n·k folds — the canonical Lloyd cost), and the update is
-    ONE hash shuffle with map-side partial aggregation (``dim`` AVG
-    columns per cell — no explode, no per-element rows). Centroid count
-    stays driver-small; the corpus never re-shuffles between iterations.
-    Empty cells drop (both the oracle and any engine agree on that).
+    Scale: per iteration, ONE map-side Arrow pass
+    (``_kmeans_update_sums``) assigns every vector and emits per-task
+    per-cell partial sums, and ONE small hash aggregate over those
+    (tasks × k) rows averages them — the corpus is never shuffled.
+    Centroid count stays driver-small. Empty cells drop (both the oracle
+    and any engine agree on that).
 
     Each iteration's centroids are RE-EMITTED as a literal relation
-    (one k-row collect — the driver-small budget class): without the
-    cut, every later centroid consumer (the next iteration's assign
-    collect, the caller's IVF localization) re-executes the whole
-    preceding Lloyd lineage — measured ~2× the assignment jobs on the
-    trained-IVF and SemDeDup queries. Exactness is preserved: collect
-    round-trips the post-round IEEE doubles bit-identically.
+    (the :func:`_centroid_matrix` collect — the driver-small budget
+    class): without the cut, every later centroid consumer (the next
+    iteration's partial-sum kernel, the caller's assignment and cell
+    probe) re-executes the whole preceding Lloyd lineage — measured ~2×
+    the assignment jobs on the trained-IVF and SemDeDup queries. Callers
+    therefore take the returned frame as is. Exactness is preserved:
+    collect round-trips the post-round IEEE doubles bit-identically.
     """
     cents = (df.filter(F.col(id_col) < k)
                .select(F.col(id_col).cast("long").alias("cell"),
                        as_double_array(vec_col).alias("cvec")))
     spark = df.sparkSession
     for _ in range(n_iter):
-        # r12 (guide §2.3/§4): assignment and per-cell partial sums run
-        # in ONE numpy pass; only (tasks × k) partial rows reach the JVM
-        # agg — the full-corpus 64-column avg() and its Arrow vector
-        # return are gone (was ~1.3 s of each iteration at sf0.1).
         # avg == SUM(partials)/SUM(cnt): one double division, and the
         # ROUND-dp collapses the partial-sum order difference exactly as
         # it collapsed the engine's own partial aggregation order.
@@ -736,9 +740,10 @@ def kmeans_fit(df: DataFrame, k: int = 8, n_iter: int = 2,
         arr_sql = ("array(" + ", ".join(
             f"round(sum(s[{i}]) / sum(cnt), {round_dp})"
             for i in range(dim)) + ") AS cvec")
-        agg = parts.groupBy("cell").agg(F.expr(arr_sql))
+        cells, cmat = _centroid_matrix(
+            parts.groupBy("cell").agg(F.expr(arr_sql)))
         cents = spark.createDataFrame(
-            [(r["cell"], list(r["cvec"])) for r in agg.collect()],
+            list(zip(cells.tolist(), cmat.tolist())),
             schema="cell bigint, cvec array<double>")
     return cents
 
@@ -751,17 +756,7 @@ def ivf_topk_trained(candidates: DataFrame, query: DataFrame, k: int,
     assigned to cells by squared L2 (index geometry), query probes its
     ``nprobe`` nearest cells, exact cosine re-ranks inside — L2 for the
     partition, cosine for the final score. At cluster scale the
-    assignment is computed once and persisted/bucketed by cell.
-
-    The centroid frame is LOCALIZED first (one collect of k·dim doubles,
-    re-emitted as a literal relation): the trained-centroid plan is an
-    iterative chain, and letting both the assignment and the cell probe
-    reference it lazily would recompute the whole training run per
-    consumer."""
-    rows = sorted((int(r["cell"]), [float(x) for x in r["cvec"]])
-                  for r in centroids.select("cell", "cvec").collect())
-    centroids = candidates.sparkSession.createDataFrame(
-        [(c, v) for c, v in rows], "cell long, cvec array<double>")
+    assignment is computed once and persisted/bucketed by cell."""
     # r11 (guide §2.4): carry every candidate column through the assign
     # kernel — the corpus ⋈ (id, cell) shuffle join is gone; the probed
     # cells then prune map-side via the broadcast. The vector rides as
@@ -876,17 +871,13 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
     clusters before comparing. Vectors ship solely into same-cell pairs,
     Arrow-vectorized cosine, no driver loops."""
     cents = kmeans_fit(df, k, n_iter, id_col, vec_col, dim, round_dp)
-    rows = sorted((int(r["cell"]), [float(x) for x in r["cvec"]])
-                  for r in cents.select("cell", "cvec").collect())
-    cent_lit = df.sparkSession.createDataFrame(
-        rows, "cell long, cvec array<double>")
     # r11 (guide §2.4): the assign kernel carries the vector through —
     # the (id, cell) ⋈ (id, vec) corpus self-join is gone; placement is
     # ONE map-side pass.
     # localCheckpoint: the (id, cell, vec) table feeds BOTH self-join
     # sides and the survivor projection — without the cut each consumer
     # re-runs the corpus scan + Arrow assignment (was 10 scans)
-    placed = (kmeans_assign(df, cent_lit, id_col, vec_col, keep_vec=True)
+    placed = (kmeans_assign(df, cents, id_col, vec_col, keep_vec=True)
               .withColumnRenamed(vec_col, "__v").localCheckpoint())
     x = placed.select(F.col("cell"), F.col(id_col).alias("__ida"),
                       F.col("__v").alias("__va"))
@@ -934,7 +925,7 @@ def pq_train(df: DataFrame, m: int = 4, dim: int = 64, k: int = 8,
     """EXT (R107): product-quantization codebook training — one
     ``kmeans_fit`` per subspace over the sliced embedding (subspace j
     sees components [j·dim/m, (j+1)·dim/m)). Returns the m centroid
-    frames. Inherits kmeans_fit's determinism contract (lowest-id init,
+    frames. Inherits kmeans_fit's determinism contract (``id < k`` init,
     fixed iterations, inter-iteration rounding, smallest-cell ties), so
     codebook training itself is cross-engine verifiable."""
     from concurrent.futures import ThreadPoolExecutor
@@ -967,13 +958,11 @@ def pq_encode(df: DataFrame, codebooks: list[DataFrame], dim: int = 64,
     memory lever for billion-vector ANN; IVF-PQ = ``ivf_topk_trained``'s
     cell partition + these codes for in-cell distance approximation).
 
-    ONE map-side Arrow pass assigns ALL m subspaces: the m centroid
-    matrices broadcast as numpy (k·dim doubles total — driver-small),
-    and per batch each subspace does one vectorized argmin. No shuffle,
-    no per-subspace join. Bit-reproducibility: squared distances
-    accumulate dim-by-dim in the oracle's left-fold order (np.sum's
-    pairwise order could flip an argmin at ulp distance); ties take the
-    smallest cell. Returns (id, code_0..code_{m-1})."""
+    ONE map-side Arrow pass assigns ALL m subspaces: the m codebooks
+    (:func:`_centroid_matrix`, k·dim doubles total — driver-small) ride
+    in as numpy, and per batch each subspace does one :func:`_sq_l2`
+    argmin (ties → smallest cell). No shuffle, no per-subspace join; an
+    empty codebook encodes no rows. Returns (id, code_0..code_{m-1})."""
     from collections.abc import Iterator
 
     import numpy as np
@@ -981,25 +970,17 @@ def pq_encode(df: DataFrame, codebooks: list[DataFrame], dim: int = 64,
 
     m = len(codebooks)
     sub = dim // m
-    mats = []
-    for cents in codebooks:
-        rows = sorted((r["cell"], list(r["cvec"]))
-                      for r in cents.select("cell", "cvec").collect())
-        mats.append((np.array([c for c, _ in rows], dtype=np.int64),
-                     np.array([v for _, v in rows], dtype=np.float64)))
+    mats = [_centroid_matrix(book) for book in codebooks]
+    empty = any(not len(cells) for cells, _ in mats)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not len(pdf):
+            if not len(pdf) or empty:
                 continue
             v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             cols = {id_col: pdf[id_col]}
             for j, (cells, cmat) in enumerate(mats):
-                vj = v[:, j * sub:(j + 1) * sub]
-                d2 = np.zeros((len(vj), len(cells)))
-                for t in range(sub):
-                    dt = vj[:, t:t + 1] - cmat[None, :, t]
-                    d2 = d2 + dt * dt
+                d2 = _sq_l2(v[:, j * sub:(j + 1) * sub], cmat)
                 cols[f"code_{j}"] = cells[np.argmin(d2, axis=1)]
             yield pd.DataFrame(cols)
 
@@ -1021,40 +1002,37 @@ def ivfpq_topk(candidates: DataFrame, query: DataFrame, k: int,
     touched at query time).
 
     The query builds one m×k lookup table driver-side (lut[j][cell] =
-    squared L2 between the query's subvector j and that codebook
-    centroid, accumulated left-to-right — the oracle's exact summation
-    order) and embeds it as literal codegen maps: scoring a candidate is
+    :func:`_sq_l2` between the query's subvector j and that codebook
+    centroid) and embeds it as literal codegen maps: scoring a candidate is
     m ``map[code_j]`` lookups + a fixed-order sum, rounded to 6 dp for
     rank stability. No Python, no shuffle in the scoring path; the only
     joins key on the candidate id and the tiny probed-cell set. In a
     deployment the cell assignment and codes are precomputed columns;
-    here they derive on the fly from the passed index frames."""
-    rows = sorted((int(r["cell"]), [float(x) for x in r["cvec"]])
-                  for r in coarse_centroids.select("cell", "cvec").collect())
-    coarse = candidates.sparkSession.createDataFrame(
-        rows, "cell long, cvec array<double>")
-    assign = kmeans_assign(candidates, coarse, id_col, vec_col)
+    here they derive on the fly from the passed index frames. A query
+    frame with no rows, or an empty codebook, returns no rows."""
+    import numpy as np
+
     qv_arr = as_double_array(vec_col)
+    q_rows = query.select(qv_arr.alias("__q")).collect()
+    books = [_centroid_matrix(book) for book in codebooks]
+    if not q_rows or any(not len(cells) for cells, _ in books):
+        return candidates.select(
+            F.col(id_col), F.lit(None).cast("double").alias("adc")).limit(0)
+    qv = np.array([q_rows[0]["__q"]], dtype=np.float64)     # (1, dim)
+    assign = kmeans_assign(candidates, coarse_centroids, id_col, vec_col)
     qcells = (query.select(qv_arr.alias("__q"))
-              .crossJoin(F.broadcast(coarse))
+              .crossJoin(F.broadcast(coarse_centroids))
               .withColumn("__d2", _l2sq(F.col("__q"), F.col("cvec")))
               .orderBy(F.col("__d2").asc(), F.col("cell").asc())
               .limit(nprobe).select("cell"))
     codes = pq_encode(candidates, codebooks, dim, id_col, vec_col)
-    qv = [float(x) for x in
-          query.select(qv_arr.alias("__q")).collect()[0]["__q"]]
     m = len(codebooks)
     sub = dim // m
     terms = []
-    for j, book in enumerate(codebooks):
-        entries = []
-        for cell, cv in sorted((int(r["cell"]), list(r["cvec"]))
-                               for r in book.select("cell", "cvec").collect()):
-            acc = 0.0
-            for t in range(sub):
-                d = qv[j * sub + t] - float(cv[t])
-                acc = acc + d * d
-            entries += [F.lit(cell), F.lit(acc)]
+    for j, (cells, cmat) in enumerate(books):
+        lut = _sq_l2(qv[:, j * sub:(j + 1) * sub], cmat)[0]
+        entries = [F.lit(x) for pair in zip(cells.tolist(), lut.tolist())
+                   for x in pair]
         terms.append(F.create_map(*entries)[F.col(f"code_{j}")])
     adc = terms[0]
     for t in terms[1:]:
@@ -1463,12 +1441,8 @@ def ivf_nprobe_curve(candidates: DataFrame, queries: DataFrame,
     contract, truncated to the ``anchor_cap`` smallest ids (default
     :data:`EVAL_ANCHOR_CAP`, the corpus-independent grid bound);
     everything after is windowed per (query, nprobe)."""
-    cents = kmeans_fit(candidates, k=k_cells, n_iter=n_iter,
-                       id_col=id_col, vec_col=vec_col, dim=dim)
-    rows = sorted((int(r["cell"]), [float(x) for x in r["cvec"]])
-                  for r in cents.select("cell", "cvec").collect())
-    centroids = candidates.sparkSession.createDataFrame(
-        rows, "cell long, cvec array<double>")
+    centroids = kmeans_fit(candidates, k=k_cells, n_iter=n_iter,
+                           id_col=id_col, vec_col=vec_col, dim=dim)
     # r11 (guide §2.4): the assign kernel carries the vector, so the
     # scoring grid below builds straight on the map-side output — the
     # corpus (id, vec) ⋈ (id, cell) shuffle join is gone.

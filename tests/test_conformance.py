@@ -20,6 +20,32 @@ def test_oracle_match(spark, sf_dir, name):
     assert ok, f"{name}: {msg}"
 
 
+@pytest.fixture(scope="module")
+def empty_sf_dir(sf_dir, tmp_path_factory):
+    """Zero-row parquet copies of the sf0.001 tables (schemas kept)."""
+    import pyarrow.parquet as pq
+
+    from data_engineering__spark.sources.io import TABLES
+
+    out = tmp_path_factory.mktemp("sf_empty")
+    for t in TABLES:
+        pq.write_table(pq.read_table(f"{sf_dir}/{t}.parquet").slice(0, 0),
+                       out / f"{t}.parquet")
+    return str(out)
+
+
+@pytest.mark.parametrize("name", [
+    "cluster_quality_embeddings", "ivf_kmeans_topk",
+    "ivf_nprobe_curve_embeddings", "ivfpq_adc_topk", "pq_code_histogram",
+    "semantic_dedup", "ivf_topk"])
+def test_centroid_keys_match_oracle_on_empty_tables(spark, empty_sf_dir,
+                                                     name):
+    """An empty corpus trains no centroids; every k-means/IVF key must
+    still return its oracle's (empty or zero-count) result, not raise."""
+    ok, msg = compare(spark, name, empty_sf_dir)
+    assert ok, f"{name}: {msg}"
+
+
 @pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only_nonempty(spark, sf_dir, name):
     df = QUERIES[name](spark, sf_dir)

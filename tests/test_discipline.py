@@ -28,10 +28,10 @@ COLLECT_ALLOWLIST = {
     ("conformance.py", "cuped_report_events"):
         (1, "1-row scalar probe (theta covariance terms)"),
     ("plans/pipeline.py", "ingest_incremental"):
-        (1, "1-row scalar probe (max load date watermark)"),
+        (1, "1-row scalar probe (max pub_id watermark)"),
     ("plans/pipeline.py", "enrich"):
-        (1, "bounded unseen-title list for the HTTP side-channel "
-            "(quota-capped)"),
+        (1, "1-row (max_id, n_missing) probe before the HTTP "
+            "side-channel"),
     ("operators/analytics.py", "markov_attribution"):
         (1, "|states|^2 transition matrix (event-type vocabulary, not rows)"),
     ("operators/analytics.py", "markov_stationary"):
@@ -40,34 +40,24 @@ COLLECT_ALLOWLIST = {
     ("operators/analytics.py", "funnel_within"):
         (1, "k-row funnel-step counts (k = number of steps)"),
     ("operators/dedup.py", "connected_components"):
-        (2, "1-row convergence check per iteration (changed-count)"),
+        (2, "1-row convergence check per iteration (sum-of-components "
+            "probe)"),
     ("operators/dedup.py", "connected_components_star"):
         (1, "1-row convergence check per iteration"),
     ("operators/merge.py", "assign_ids"):
         (1, "per-partition count map (numPartitions rows)"),
     ("operators/merge.py", "dim_upsert"):
         (1, "1-row scalar probe (current max surrogate id)"),
-    ("operators/vector.py", "ivf_assign"):
-        (1, "INDEX_CELL_CAP x d centroid table into the Arrow kernel"),
+    ("operators/vector.py", "_centroid_matrix"):
+        (1, "k x d centroid/codebook table (k <= INDEX_CELL_CAP on the "
+            "corpus-derived index; trained k and PQ codebooks are chosen, "
+            "not corpus-sized) into the Arrow kernels"),
     ("operators/vector.py", "cos_grid_pandas"):
         (1, "anchor-capped query grid (<= EVAL_ANCHOR_CAP rows by the "
             "sample_bounded contract) into the Arrow scoring kernel"),
-    ("operators/vector.py", "kmeans_assign"):
-        (1, "k x d centroid table broadcast via literal array"),
-    ("operators/vector.py", "kmeans_fit"):
-        (1, "k x d centroid table per Lloyd pass"),
-    ("operators/vector.py", "_kmeans_update_sums"):
-        (1, "k x d centroid table into the partial-sum Arrow kernel"),
-    ("operators/vector.py", "ivf_topk_trained"):
-        (1, "nprobe-row probed-cell list"),
-    ("operators/vector.py", "semantic_dedup"):
-        (1, "k x d centroid table (two Lloyd passes)"),
-    ("operators/vector.py", "pq_encode"):
-        (1, "m x 256 x (d/m) codebook table"),
     ("operators/vector.py", "ivfpq_topk"):
-        (3, "codebooks + probed-cell list + ADC LUT (all k/m-sized)"),
-    ("operators/vector.py", "ivf_nprobe_curve"):
-        (1, "per-nprobe recall grid (len(nprobes) rows)"),
+        (1, "the query frame's vectors for the ADC lookup table (one "
+            "query by contract; the first row is used)"),
 }
 
 

@@ -5661,10 +5661,13 @@ def test_nearest_join_bidirectional_and_ties(spark):
 def test_assign_kernels_drop_null_embeddings(spark):
     """ADVICE r10: a NULL embedding row must not crash the Arrow batch
     stack in ivf_assign/kmeans_assign — it is dropped (no cell is
-    assignable), and the non-NULL rows' cells are unaffected."""
+    assignable), and the non-NULL rows' cells are unaffected. An empty
+    centroid table assigns nothing."""
     from data_engineering__spark.operators.vector import (
         ivf_assign,
         kmeans_assign,
+        kmeans_fit,
+        pq_encode,
     )
 
     cents = spark.createDataFrame(
@@ -5681,6 +5684,16 @@ def test_assign_kernels_drop_null_embeddings(spark):
     got2 = {r.vec_id: r.cell for r in
             kmeans_assign(df, kc, "vec_id", "embedding").collect()}
     assert got2 == {10: 0, 12: 1}
+
+    # a non-empty corpus with no id < k trains 0 centroids (the oracle
+    # CTEs start from WHERE vec_id < k); every centroid kernel then
+    # emits 0 rows instead of raising
+    none = kmeans_fit(df, k=2, n_iter=2, dim=2)
+    assert none.collect() == []
+    assert kmeans_assign(df, none, "vec_id", "embedding").collect() == []
+    assert ivf_assign(df, cents.limit(0), "vec_id",
+                      "embedding").collect() == []
+    assert pq_encode(df, [none, none], dim=2).collect() == []
 
 
 def test_label_noise_knn_planted_mislabel(spark):
