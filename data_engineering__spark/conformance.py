@@ -5779,8 +5779,7 @@ def prefix_jaccard_docs(spark, sf_dir):
     integer (rational threshold, integer ceil, cross-multiplied test)."""
     docs = read_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 == 0)
-    toks = F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-                    lambda t: t != "")
+    toks = X.tokens("text")
     base = docs.select("doc_id", toks.alias("__tk"))
     clipped = (base.filter(F.size("__tk") >= 4)
                .select((F.col("doc_id") + 1000000000000).alias("doc_id"),
@@ -6602,8 +6601,7 @@ def containment_pairs_docs(spark, sf_dir):
     while symmetric Jaccard would miss it. Candidate pairs from the
     shared-shingle join, both orientations from one intersection."""
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-                    lambda t: t != "")
+    toks = X.tokens("text")
     planted = (docs.filter(F.col("doc_id") % 25 == 0)
                .select((F.col("doc_id") + 3000000).alias("doc_id"),
                        F.array_join(F.slice(toks, 1, 15), " ").alias("text")))
@@ -8912,8 +8910,9 @@ FROM agg"""
 def minhash_recall_report_q(spark, sf_dir):
     """EXT R209: LSH banding recall vs exact-Jaccard ground truth over
     the portable sha shingle space — the near-dup index-quality eval
-    beside ``ann_recall_report``. Ground truth ≥ 0.5 decided ALL-INTEGER
-    (2·|∩| ≥ |∪|); recall is the one final ROUND-6 division. Runs on
+    beside ``ann_recall_report``. Ground truth J ≥ 0.5 is an exact test
+    on both sides (the oracle's 2·|∩| ≥ |∪|, Spark's int/int double);
+    recall is the one final ROUND-6 division. Runs on
     the bounded keep_mod demo corpus because exact truth needs the
     shared-shingle self-join — the sampling bound is the documented
     contract of every recall eval."""

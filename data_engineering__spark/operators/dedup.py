@@ -14,15 +14,19 @@ Signature kernels are Arrow-batched numpy (``mapInPandas``): Spark
 higher-order-function lambdas execute in the interpreted expression
 evaluator (never whole-stage codegen), measured ~1.6 µs per lambda eval —
 a vectorized reduceat over the batch beats them ~10×. Joins/grouping stay
-JVM-side. MinHash and SimHash use one hash family: sha-bucket token hashes
-(first 8 hex chars of sha256) and raw-slice LSH band keys, so an external
-SQL oracle recomputes every stage.
+JVM-side. Every kernel tokenizes with ``text.py_tokens`` (``text.tokens()``
+in Python) and hashes tokens with one family, the sha-bucket (first 8 hex
+chars of sha256). MinHash and exact n-gram Jaccard share one word-shingle
+space (``_shingle_hasher``), and LSH band keys are raw signature slices, so
+an external SQL oracle recomputes every stage.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .text import py_tokens, tokens
 
 
 # ------------------------------------------------------------- parity dedup
@@ -133,6 +137,35 @@ def _sha_token_hashes(toks: list[str], memo: dict[str, int]):
     return out
 
 
+def _shingle_hasher(n: int, seed: int):
+    """Plan-time factory of the word-shingle space: returns
+    ``shingles(text, memo)``, the int64 hashes in [0, p) of the doc's
+    n-token windows in document order (None below n tokens). A shingle hash
+    is Σ_j c_j·t_(i+j) mod p over the ``py_tokens`` sha-bucket hashes t,
+    with the n coefficients c_j drawn once from ``seed``; ``memo`` is the
+    kernel task's token-hash cache."""
+    import random
+
+    import numpy as np
+
+    crng = random.Random(seed ^ 0x5EED)
+    combo = np.array([crng.randrange(1, 1 << 29) for _ in range(n)],
+                     dtype=np.int64)
+    p = _MINHASH_P
+
+    def shingles(text, memo: dict[str, int]):
+        toks = py_tokens(text)
+        if len(toks) < n:
+            return None
+        th = _sha_token_hashes(toks, memo) % p
+        sh = np.zeros(len(toks) - n + 1, dtype=np.int64)
+        for j in range(n):
+            sh = (sh + th[j:len(th) - n + 1 + j] * combo[j]) % p
+        return sh
+
+    return shingles
+
+
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                        num_hashes: int = 64, shingle_n: int = 3,
                        seed: int = 42) -> DataFrame:
@@ -140,9 +173,8 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     generation and verification. Narrow (no shuffle); at cluster scale this
     is the DataFrame to persist/bucket so LSH probes reuse it.
 
-    Vectorized minhash over mapInPandas: per Arrow batch, hash every token
-    once (sha-bucket, mod p), combine n consecutive token hashes
-    arithmetically into shingle hashes, then take all ``num_hashes``
+    Vectorized minhash over mapInPandas: per Arrow batch, hash every doc's
+    shingles (``_shingle_hasher``), then take all ``num_hashes``
     permutation minima for ALL documents in one ``np.minimum.reduceat``
     over the flattened shingle matrix. Higher-order function lambdas
     (transform/array_min) are NOT whole-stage-codegen'd — measured ~1.6 µs
@@ -150,8 +182,6 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     step is engine-neutral, so the DuckDB conformance oracle recomputes
     signatures verbatim. Docs with fewer than ``shingle_n`` tokens get no
     signature (they can never pair)."""
-    import random
-
     from collections.abc import Iterator
 
     import numpy as np
@@ -160,10 +190,8 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     ab = _minhash_coeffs(num_hashes, seed)
     a_vec = np.array([a for a, _ in ab], dtype=np.int64)
     b_vec = np.array([b for _, b in ab], dtype=np.int64)
-    crng = random.Random(seed ^ 0x5EED)
-    combo = np.array([crng.randrange(1, 1 << 29) for _ in range(shingle_n)],
-                     dtype=np.int64)
-    n, p = shingle_n, _MINHASH_P
+    shingles = _shingle_hasher(shingle_n, seed)
+    p = _MINHASH_P
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         memo: dict[str, int] = {}
@@ -171,14 +199,9 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
             doc_ids, starts, all_sh = [], [], []
             pos = 0
             for doc, text in zip(pdf[id_col], pdf[text_col]):
-                toks = [t for t in str(text).lower().strip().split() if t]
-                if len(toks) < n:
+                sh = shingles(text, memo)
+                if sh is None:
                     continue
-                th = _sha_token_hashes(toks, memo) % p
-                # rolling combination of n consecutive token hashes
-                sh = np.zeros(len(toks) - n + 1, dtype=np.int64)
-                for j in range(n):
-                    sh = (sh + th[j:len(th) - n + 1 + j] * combo[j]) % p
                 doc_ids.append(doc)
                 starts.append(pos)
                 all_sh.append(sh)
@@ -564,7 +587,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
             doc_ids, starts, hash_chunks = [], [], []
             pos = 0
             for doc, text in zip(pdf[id_col], pdf[text_col]):
-                toks = [t for t in str(text).lower().strip().split() if t]
+                toks = py_tokens(text)
                 if not toks:
                     continue
                 th = _sha_token_hashes(toks, memo).astype(np.uint64)
@@ -626,33 +649,24 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
 def _shingle_rows_pandas(df: DataFrame, id_col: str, text_col: str,
                          n: int, seed: int = 42) -> DataFrame:
     """(doc, s) rows — one per DISTINCT shingle hash per document — via a
-    1→N mapInPandas kernel (UDTF shape). Same rolling shingle combination
-    as ``minhash_signatures``, over an engine-private (pandas siphash)
-    token hash."""
-    import random
-
+    1→N mapInPandas kernel (UDTF shape), in the word-shingle space
+    ``minhash_signatures`` minhashes (``_shingle_hasher`` with ``seed``),
+    so exact Jaccard over these rows is what the signatures estimate."""
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    crng = random.Random(seed ^ 0x5EED)
-    combo = np.array([crng.randrange(1, 1 << 29) for _ in range(n)],
-                     dtype=np.int64)
-    p = _MINHASH_P
+    shingles = _shingle_hasher(n, seed)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        memo: dict[str, int] = {}
         for pdf in batches:
             docs, hashes = [], []
             for doc, text in zip(pdf[id_col], pdf[text_col]):
-                toks = [t for t in str(text).lower().strip().split() if t]
-                if len(toks) < n:
+                sh = shingles(text, memo)
+                if sh is None:
                     continue
-                th = (pd.util.hash_array(np.array(toks, dtype=object))
-                      .astype(np.int64) % p)
-                sh = np.zeros(len(toks) - n + 1, dtype=np.int64)
-                for j in range(n):
-                    sh = (sh + th[j:len(th) - n + 1 + j] * combo[j]) % p
                 uniq = np.unique(sh)
                 docs.append(np.full(len(uniq), doc))
                 hashes.append(uniq)
@@ -663,28 +677,12 @@ def _shingle_rows_pandas(df: DataFrame, id_col: str, text_col: str,
     out_schema = f"doc {dict(df.dtypes)[id_col]}, s bigint"
     return df.select(F.col(id_col), F.col(text_col)).mapInPandas(run, out_schema)
 
-def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
-                        shingle_n: int = 3, jaccard_threshold: float = 0.5) -> DataFrame:
-    """Exact n-gram Jaccard similarity for pairs sharing ≥1 shingle.
 
-    |A∩B| via a shingle-keyed self-join + count; |A∪B| = |A|+|B|-|A∩B|.
-    Shuffles (shingle_hash, id) pairs — candidate generation is bounded by
-    shared-shingle co-occurrence, not n². Shingle identity is a rolling
-    token-hash combination, never a materialized string; the (doc, hash)
-    rows are produced by a vectorized Arrow kernel (1→N mapInPandas) and
-    everything downstream — joins, grouping — stays JVM-side. Prefer
-    ``minhash_candidate_pairs`` when the corpus is web-scale and
-    approximate similarity suffices.
-
-    Caching note: the shingle table is persisted here (the
-    ``minhash_verified_pairs`` convention) because the returned plan
-    consumes it THREE times — sizes and both self-join sides — which
-    otherwise re-runs the corpus scan and the Arrow shingle kernel per
-    consumer (measured 8 scans on the bare plan, 16 through
-    ``related_docs_topk``'s symmetric union). Cache is CALLER-OWNED:
-    materialize, then ``spark.catalog.clearCache()`` in long sessions.
-    """
-    sh = _shingle_rows_pandas(df, id_col, text_col, shingle_n).persist()
+def _shingle_jaccard_pairs(sh: DataFrame, jaccard_threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) pairs with J ≥ ``jaccard_threshold`` over a
+    persisted ``_shingle_rows_pandas`` table, J rounded to 6 dp after the
+    test. The test compares the int/int double |∩|/|∪|, so J ≥ 0.5 is
+    exact: a/b < 1/2 with b < 2^53 lies at least 1/(2b) below 0.5."""
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (a.join(b, "s")
@@ -697,6 +695,32 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
             .withColumn("jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
             .filter(F.col("jaccard") >= jaccard_threshold)
             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
+
+
+def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
+                        shingle_n: int = 3, jaccard_threshold: float = 0.5) -> DataFrame:
+    """Exact n-gram Jaccard similarity for pairs sharing ≥1 shingle.
+
+    |A∩B| via a shingle-keyed self-join + count; |A∪B| = |A|+|B|-|A∩B|.
+    Shuffles (shingle_hash, id) pairs — candidate generation is bounded by
+    shared-shingle co-occurrence, not n². Shingles are hashes in the
+    MinHash word-shingle space (``_shingle_hasher``), never materialized
+    strings, so J equals string-shingle Jaccard absent 31-bit collisions;
+    the (doc, hash) rows are produced by a vectorized Arrow kernel (1→N
+    mapInPandas) and everything downstream — joins, grouping — stays
+    JVM-side. Prefer ``minhash_candidate_pairs`` when the corpus is
+    web-scale and approximate similarity suffices.
+
+    Caching note: the shingle table is persisted here (the
+    ``minhash_verified_pairs`` convention) because the returned plan
+    consumes it THREE times — sizes and both self-join sides — which
+    otherwise re-runs the corpus scan and the Arrow shingle kernel per
+    consumer (measured 8 scans on the bare plan, 16 through
+    ``related_docs_topk``'s symmetric union). Cache is CALLER-OWNED:
+    materialize, then ``spark.catalog.clearCache()`` in long sessions.
+    """
+    sh = _shingle_rows_pandas(df, id_col, text_col, shingle_n).persist()
+    return _shingle_jaccard_pairs(sh, jaccard_threshold)
 
 
 # ---------------------------------------------- benchmark decontamination
@@ -726,9 +750,7 @@ def shingle_sha_rows(df: DataFrame, keep_cols: list[str], text_col: str,
     adjacency the array already encodes) while avoiding the per-element
     tokenizer re-evaluation that made the fused form the slowest
     expression in the round-3 bench."""
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda t: t != "")
-    return (df.select(*keep_cols, toks.alias("__toks"))
+    return (df.select(*keep_cols, tokens(text_col).alias("__toks"))
             .select(*keep_cols,
                     F.explode(_shingle_sha_of_tokens(F.col("__toks"), n))
                     .alias(out_col)))
@@ -1046,9 +1068,7 @@ def span_removal_profile(df: DataFrame, id_col: str, text_col: str,
     an n× position explode, so the cost scales with flagged spans, not
     flagged spans × n. Short docs (<n tokens) emit no windows and
     report zeros with keep_frac 1."""
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda t: t != "")
-    base = (df.select(F.col(id_col), toks.alias("__tk"))
+    base = (df.select(F.col(id_col), tokens(text_col).alias("__tk"))
             .select(F.col(id_col), F.size("__tk").alias("n_tokens"),
                     F.col("__tk"))
             .localCheckpoint())
@@ -1204,78 +1224,30 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
             .select("id_a", "id_b", F.round("c", 6).alias("containment")))
 
 
-def shingle_sha_values(text_col: str, n: int = 3, seed: int = 42) -> Column:
-    """PORTABLE word-n-gram shingle hashes as array<long> in [0, 2³¹−1):
-    the sha-bucket token hash (first 8 hex chars of sha256, mod p — the
-    repo convention any engine can replay) fed through the SAME seeded
-    rolling combination as ``minhash_signatures``. This is the shingle
-    space the signature kernel minhashes over, exposed as a
-    column so exact-Jaccard ground truth can be computed in the identical
-    space (→ ``minhash_recall_report``)."""
-    import random
-    rng = random.Random(seed ^ 0x5EED)
-    coeffs = [rng.randrange(1, 1 << 29) for _ in range(n)]
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda t: t != "")
-    th = F.transform(
-        toks,
-        lambda t: F.conv(F.substring(F.sha2(t, 256), 1, 8), 16, 10)
-                   .cast("long") % F.lit(_MINHASH_P))
-    count = F.greatest(F.size(th) - F.lit(n - 1), F.lit(0))
-
-    def combo(i: Column) -> Column:
-        acc = None
-        for j, c in enumerate(coeffs):
-            term = F.element_at(th, i + j) * F.lit(c)
-            acc = term if acc is None else acc + term
-        return F.pmod(acc, F.lit(_MINHASH_P))
-
-    return F.when(count <= 0, F.array().cast("array<long>")).otherwise(
-        F.transform(F.sequence(F.lit(1), count), combo))
-
-
 def minhash_recall_report(df: DataFrame, id_col: str, text_col: str,
                           num_hashes: int = 32, bands: int = 16,
                           shingle_n: int = 3, seed: int = 42) -> DataFrame:
     """EXT (R209, round 6): LSH banding recall report — the index-quality
     eval for the MinHash dedup path, the near-dup analog of
     ``ann_recall_report``. Ground truth = EXACT Jaccard ≥ 0.5 over the
-    portable sha shingle space (the very space the signatures estimate);
-    candidates = the (band, slice) self-join pairs. ONE row:
-    (n_true, n_candidates, n_hit, recall).
-
-    The ≥ 0.5 test is ALL-INTEGER: J = |∩|/|∪| ≥ 1/2 ⟺ 2·|∩| ≥
-    |A| + |B| − |∩| — no float enters the ground-truth decision.
-    Recall is the single final division (ROUND-6).
+    ``_shingle_rows_pandas`` table with ``seed`` (the very shingle space
+    the signatures estimate), joined as ``ngram_jaccard_pairs`` does —
+    its int/int double test decides J ≥ 1/2 exactly; candidates = the
+    (band, slice) self-join pairs. ONE row:
+    (n_true, n_candidates, n_hit, recall). Recall is the single final
+    division (ROUND-6).
 
     Scale shape: this is an EVALUATION operator — run it on a bounded
     sample (the conformance key uses the keep_mod demo corpus), because
     exact ground truth needs the shared-shingle self-join. The
     candidate side stays the production banding plan; sizes/intersections
-    are hash aggregates keyed on shingle value and pair."""
+    are hash aggregates keyed on shingle value and pair. The shingle table
+    is persisted (caller-owned, as in ``ngram_jaccard_pairs``)."""
     sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n,
                              seed)
     cand = _band_candidate_pairs(sig, num_hashes, bands)
-    sh = (df.select(F.col(id_col).alias("doc"),
-                    F.explode(shingle_sha_values(text_col, shingle_n, seed))
-                    .alias("s"))
-          .distinct())
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (a.join(b, "s")
-             .filter(F.col("a.doc") < F.col("b.doc"))
-             .groupBy(F.col("a.doc").alias("id_a"),
-                      F.col("b.doc").alias("id_b"))
-             .agg(F.count(F.lit(1)).alias("ix")))
-    truth = (inter
-             .join(sizes.select(F.col("doc").alias("id_a"),
-                                F.col("sz").alias("sza")), "id_a")
-             .join(sizes.select(F.col("doc").alias("id_b"),
-                                F.col("sz").alias("szb")), "id_b")
-             .filter(F.lit(2) * F.col("ix")
-                     >= F.col("sza") + F.col("szb") - F.col("ix"))
-             .select("id_a", "id_b"))
-    truth = truth.persist()
+    sh = _shingle_rows_pandas(df, id_col, text_col, shingle_n, seed).persist()
+    truth = _shingle_jaccard_pairs(sh, 0.5).select("id_a", "id_b")
     n_true = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true"))
     n_cand = cand.agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
     n_hit = (truth.join(cand, ["id_a", "id_b"], "left_semi")

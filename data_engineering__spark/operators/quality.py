@@ -181,7 +181,8 @@ def null_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
             F.array(*pairs[::2]), F.array(*pairs[1::2])))
         .alias("column", "n_null"))
         .select("column", F.col("__n").alias("n_rows"), "n_null",
-                F.round(F.col("n_null") / F.col("__n"), 6).alias("null_frac")))
+                F.round(F.try_divide(F.col("n_null"), F.col("__n")), 6)
+                .alias("null_frac")))
 
 
 def expectations(df: DataFrame, checks: dict[str, Column]) -> DataFrame:
@@ -900,15 +901,15 @@ def pipeline_card(events: DataFrame, id_col: str = "event_id",
     n = F.col("n_events").cast("double")
     return (scal.crossJoin(F.broadcast(daily))
             .select("n_events", "n_users", "span_days",
-                    F.round(n / F.col("n_users").cast("double"),
+                    F.round(F.try_divide(n, F.col("n_users").cast("double")),
                             round_dp).alias("events_per_user"),
-                    F.round(F.col("__nnull").cast("double") / n,
+                    F.round(F.try_divide(F.col("__nnull").cast("double"), n),
                             round_dp).alias("null_value_rate"),
-                    F.round((F.col("n_events") - F.col("__nid"))
-                            .cast("double") / n, round_dp)
+                    F.round(F.try_divide((F.col("n_events") - F.col("__nid"))
+                                         .cast("double"), n), round_dp)
                     .alias("dup_id_rate"),
                     "busiest_day",
-                    F.round(F.col("__bc").cast("double") / n,
+                    F.round(F.try_divide(F.col("__bc").cast("double"), n),
                             round_dp).alias("busiest_day_share")))
 
 

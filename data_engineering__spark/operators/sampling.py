@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .text import token_count
+
 #: bucket-space resolution: fractions are exact to 1/10000
 _BUCKETS = 10_000
 
@@ -309,9 +311,7 @@ def token_budget_mix(df: DataFrame, source_col: str, text_col: str,
     shape. Bodies never shuffle."""
     base = df.select(F.col(source_col).alias("__src"),
                      F.col(key_col).alias("__k"),
-                     F.size(F.filter(
-                         F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                         lambda t: t != "")).cast("long").alias("__nt"))
+                     token_count(text_col).cast("long").alias("__nt"))
     totals = (base.groupBy("__src")
               .agg(F.count(F.lit(1)).alias("docs_before"),
                    F.sum("__nt").alias("tokens_before")))

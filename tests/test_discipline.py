@@ -61,6 +61,28 @@ COLLECT_ALLOWLIST = {
 }
 
 
+def _calls(n, attr):
+    return (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            and n.func.attr == attr)
+
+
+def _is_column_tokenizer(n):
+    """``F.split(F.lower(F.trim(...)), ...)`` — the body of text.tokens()."""
+    return (_calls(n, "split") and n.args and _calls(n.args[0], "lower")
+            and n.args[0].args and _calls(n.args[0].args[0], "trim"))
+
+
+def _is_python_tokenizer(n):
+    """A no-argument ``str.split()`` or a ``re.compile``/``re.split`` of a
+    ``\\s+`` pattern — Python-side whitespace tokenization."""
+    if _calls(n, "split") and not n.args and not n.keywords:
+        return True
+    return ((_calls(n, "compile") or _calls(n, "split"))
+            and isinstance(n.func.value, ast.Name) and n.func.value.id == "re"
+            and n.args and isinstance(n.args[0], ast.Constant)
+            and "\\s+" in str(n.args[0].value))
+
+
 def _scan():
     hits = []
     for root, _, files in os.walk(PKG):
@@ -90,6 +112,10 @@ def _scan():
                     if (isinstance(fn, ast.Attribute) and fn.attr == "udf") \
                             or (isinstance(fn, ast.Name) and fn.id == "udf"):
                         hits.append(("udf", rel, self.stack[-1], n.lineno))
+                    if _is_column_tokenizer(n):
+                        hits.append(("tok_col", rel, self.stack[-1], n.lineno))
+                    if _is_python_tokenizer(n):
+                        hits.append(("tok_py", rel, self.stack[-1], n.lineno))
                     self.generic_visit(n)
 
             V().visit(tree)
@@ -122,3 +148,15 @@ def test_collect_allowlist_carries_no_dead_entries():
     live = {(h[1], h[2]) for h in _scan() if h[0] == "collect"}
     dead = [k for k in COLLECT_ALLOWLIST if k not in live]
     assert dead == [], f"prune dead allowlist entries: {dead}"
+
+
+def test_one_tokenizer_column_and_python():
+    """``text.tokens()`` is the one Column tokenizer and ``text.py_tokens``
+    its one Python mirror, which every Arrow kernel calls. Re-inlined
+    copies drift: the Python ones split on U+00A0 and read a NULL text as
+    the token "none", where ``tokens()`` and the DuckDB oracles do not."""
+    hits = _scan()
+    col = [(h[1], h[2]) for h in hits if h[0] == "tok_col"]
+    py = [(h[1], h[2]) for h in hits if h[0] == "tok_py"]
+    assert col == [("operators/text.py", "tokens")], col
+    assert py == [("operators/text.py", "py_tokens")], py

@@ -7,6 +7,7 @@ import json
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -194,6 +195,65 @@ def test_near_dup_family_empty_and_short_inputs(spark):
     kept = minhash_dedup_cc(short, "doc_id", "text", num_hashes=32,
                             bands=16, shingle_n=3)
     assert sorted(r.doc_id for r in kept.collect()) == [1, 2, 3, 4]
+
+    # a NULL text has no tokens (``text.tokens()``), not the token "none"
+    nulls = spark.createDataFrame([(1, None), (2, None), (3, "none")],
+                                  "doc_id long, text string")
+    assert simhash_near_dup_pairs(nulls, "doc_id", "text").count() == 0
+    sig = minhash_signatures(nulls, "doc_id", "text", num_hashes=32,
+                             shingle_n=1)
+    assert [r.doc for r in sig.collect()] == [3]
+
+
+@pytest.mark.parametrize("sep", ["\xa0", "\x1c"], ids=["nbsp", "fs"])
+def test_arrow_kernels_tokenize_like_text_tokens(spark, sep):
+    """Python's ``str.split()`` splits on U+00A0 and \\x1c-\\x1f, Java's
+    ``\\s`` (so ``text.tokens()`` and the DuckDB oracles) does not: every
+    Arrow kernel must see the 3 tokens ``tokens()`` sees, 1 shingle at n=3."""
+    import hashlib
+
+    from data_engineering__spark.operators.dedup import (
+        _shingle_rows_pandas,
+        minhash_signatures,
+        shingle_sha_rows,
+        simhash,
+    )
+    from data_engineering__spark.operators.text import tokens
+    df = spark.createDataFrame([(1, f"Alpha{sep}beta gamma delta")],
+                               "doc_id long, text string")
+    toks = df.select(tokens("text").alias("t")).first().t
+    assert len(toks) == 3
+    assert _shingle_rows_pandas(df, "doc_id", "text", 3).count() == 1
+    assert shingle_sha_rows(df, ["doc_id"], "text", 3).count() == 1
+    assert minhash_signatures(df, "doc_id", "text", num_hashes=8,
+                              shingle_n=3).count() == 1
+    assert minhash_signatures(df, "doc_id", "text", num_hashes=8,
+                              shingle_n=4).count() == 0
+    votes = [0] * 32
+    for t in toks:
+        h = int(hashlib.sha256(t.encode()).hexdigest()[:8], 16)
+        votes = [v + (1 if h >> i & 1 else -1) for i, v in enumerate(votes)]
+    want = sum(1 << i for i, v in enumerate(votes) if v > 0)
+    assert simhash(df, "doc_id", "text").first().simhash == want
+    _assert_annotate_impls_agree(spark, [f"Alpha{sep}beta gamma delta"])
+
+
+def _assert_annotate_impls_agree(spark, texts):
+    from data_engineering__spark.operators.text import lang_id, quality_score
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
+    for fn in (lang_id, quality_score):
+        pandas, expr = (sorted(tuple(r) for r in
+                               fn(df, "text", impl=impl).collect())
+                        for impl in ("pandas", "expr"))
+        assert pandas == expr, fn.__name__
+
+
+def test_annotate_kernel_matches_expr_on_null_text(spark):
+    """``lang_id`` / ``quality_score``: the default Arrow kernel and
+    ``impl="expr"`` agree on a NULL text (no chars, no tokens: 'und' and
+    0.25), beside a literal "none" and an ordinary sentence."""
+    _assert_annotate_impls_agree(
+        spark, [None, "none", "The cat and the dog sat on the mat."])
 
 
 def test_jdbc_round_trip_embedded_derby(spark, tmp_path):
