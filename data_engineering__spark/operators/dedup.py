@@ -1242,9 +1242,11 @@ def minhash_recall_report(df: DataFrame, id_col: str, text_col: str,
     exact ground truth needs the shared-shingle self-join. The
     candidate side stays the production banding plan; sizes/intersections
     are hash aggregates keyed on shingle value and pair. The shingle table
-    is persisted (caller-owned, as in ``ngram_jaccard_pairs``)."""
+    and the signature table are persisted (caller-owned, as in
+    ``ngram_jaccard_pairs`` / ``minhash_verified_pairs``): ``n_candidates``
+    and ``n_hit`` both read the candidate pairs."""
     sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n,
-                             seed)
+                             seed).persist()
     cand = _band_candidate_pairs(sig, num_hashes, bands)
     sh = _shingle_rows_pandas(df, id_col, text_col, shingle_n, seed).persist()
     truth = _shingle_jaccard_pairs(sh, 0.5).select("id_a", "id_b")

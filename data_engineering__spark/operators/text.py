@@ -23,30 +23,34 @@ STOPWORDS = {
 }
 
 
+# The tokenizer's whitespace: RE2's \s, which the DuckDB oracles split on.
+# Java's and Python's \s also match \x0B, so neither is spelled \s here.
+_WS = r"[ \t\n\f\r]+"
+
+
 def tokens(text_col: str) -> Column:
     """Whitespace tokenization as array<string> (empty tokens removed)."""
-    return F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda t: t != "")
+    return F.filter(F.split(F.lower(F.trim(F.col(text_col))), _WS), lambda t: t != "")
 
 
-# Java's \s is [ \t\n\x0B\f\r]; str.split() splits on those and on
-# every _PY_ONLY_WS character
-_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+_WS_RE = re.compile(_WS)
+# str.split() splits on _WS and on every character of this class
 _PY_ONLY_WS = re.compile(
-    "[\x1c-\x1f\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]")
+    "[\x0b\x1c-\x1f\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]")
 
 
 def py_tokens(text) -> list[str]:
     """``tokens()`` for one value in Python, the tokenizer of every Arrow
-    kernel: lower-case, split on Java ``\\s`` runs, drop empties; NULL
-    gives no tokens. ``str.split()`` is the fast path (about 3x a regex
-    split) for text with no character that Python treats as whitespace
-    and Java does not."""
+    kernel: lower-case, split on ``[ \\t\\n\\f\\r]`` runs, drop empties;
+    NULL gives no tokens. ``str.split()`` is the fast path (about 3x a
+    regex split) for text with no other character Python treats as
+    whitespace."""
     if text is None:
         return []
     t = str(text).lower()
     if _PY_ONLY_WS.search(t) is None:
         return t.split()
-    return [x for x in _JAVA_WS.split(t) if x]
+    return [x for x in _WS_RE.split(t) if x]
 
 
 def token_count(text_col: str) -> Column:

@@ -49,6 +49,28 @@ def test_centroid_keys_match_oracle_on_empty_tables(spark, empty_sf_dir,
     assert ok, f"{name}: {msg}"
 
 
+def test_token_key_matches_oracle_on_vertical_tab(spark, sf_dir,
+                                                  tmp_path):
+    """The oracles split text on DuckDB's RE2 ``\\s`` (``[\\t\\n\\f\\r ]``),
+    which does not match the vertical tab; Java's ``\\s`` does. With the
+    first space of every document turned into ``\\x0B``, a token key must
+    still count the tokens its oracle counts."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from data_engineering__spark.sources.io import TABLES
+
+    for t in TABLES:
+        tbl = pq.read_table(f"{sf_dir}/{t}.parquet")
+        if t == "documents":
+            i = tbl.schema.get_field_index("text")
+            tbl = tbl.set_column(i, "text", pc.replace_substring(
+                tbl["text"], " ", "\x0b", max_replacements=1))
+        pq.write_table(tbl, tmp_path / f"{t}.parquet")
+    ok, msg = compare(spark, "token_entropy", str(tmp_path))
+    assert ok, f"token_entropy: {msg}"
+
+
 @pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only_nonempty(spark, sf_dir, name):
     df = QUERIES[name](spark, sf_dir)

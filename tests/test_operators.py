@@ -205,10 +205,11 @@ def test_near_dup_family_empty_and_short_inputs(spark):
     assert [r.doc for r in sig.collect()] == [3]
 
 
-@pytest.mark.parametrize("sep", ["\xa0", "\x1c"], ids=["nbsp", "fs"])
+@pytest.mark.parametrize("sep", ["\xa0", "\x1c", "\x0b"],
+                         ids=["nbsp", "fs", "vt"])
 def test_arrow_kernels_tokenize_like_text_tokens(spark, sep):
-    """Python's ``str.split()`` splits on U+00A0 and \\x1c-\\x1f, Java's
-    ``\\s`` (so ``text.tokens()`` and the DuckDB oracles) does not: every
+    """Python's ``str.split()`` splits on U+00A0, \\x1c-\\x1f and \\x0B;
+    ``text.tokens()`` and the DuckDB oracles (RE2 ``\\s``) do not: every
     Arrow kernel must see the 3 tokens ``tokens()`` sees, 1 shingle at n=3."""
     import hashlib
 

@@ -430,7 +430,8 @@ def test_shared_intermediates_cut_lineage(spark, sf_dir):
     their upstream lineage: scan budgets pin the round-4 fixes
     (ngram_jaccard 8→, related_docs 16→, curate funnel 16→,
     scd2_asof 16→, semantic_dedup 10→, conversion_funnel 6→ scans;
-    minhash_recall 16→ once its truth read the persisted shingle table)."""
+    minhash_recall 16→10 once its truth read the persisted shingle
+    table, 10→ once its candidates read the persisted signatures)."""
     import re
     for name, max_scans in [("ngram_jaccard_pairs", 2),
                             ("related_docs_topk", 2),
@@ -439,7 +440,7 @@ def test_shared_intermediates_cut_lineage(spark, sf_dir):
                             ("semantic_dedup", 2),
                             ("conversion_funnel_steps", 0),
                             ("triangle_counts_graph", 2),
-                            ("minhash_recall_report", 10)]:
+                            ("minhash_recall_report", 4)]:
         p = plan_of(QUERIES[name](spark, sf_dir))
         n = len(re.findall(r"\(\d+\) Scan parquet", p))
         assert n <= max_scans, f"{name}: {n} scans"

@@ -12,7 +12,11 @@ Usage:
   BENCH_KEYS_REPO=/root/repo python tools/bench_keys.py key1 key2 \
       [--sf /root/testdata/sf0.1] [--repeat 3] [--plans-dir plans/r11 \
        --plans-suffix after]
-Prints one JSON line {key: best_sec, ...}.
+Prints one JSON line: ``timings`` {key: best_sec} and, over the same
+timed repeats, ``codegen`` {key: {compiles, compile_ms}} — the Janino
+compilations (``CodegenMetrics``) and their wall (``CodeGenerator``'s
+compile-time accumulator). A key that recompiles on every repeat is
+missing the whole-stage codegen cache.
 """
 from __future__ import annotations
 
@@ -43,10 +47,18 @@ def main() -> None:
     (spark.range(int(cpus) * 4).repartition(int(cpus))
      .mapInPandas(lambda it: it, "id long").count())
 
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+        .CodeGenerator
+
     out: dict[str, float] = {}
+    cg: dict[str, dict] = {}
     for name in args.keys:
         fn = QUERIES[name]
         best = None
+        n0, ns0 = compiles.getCount(), codegen.compileTime()
         for _ in range(args.repeat):
             spark.sparkContext.setJobDescription(f"bench:{name}")
             t0 = time.perf_counter()
@@ -55,6 +67,9 @@ def main() -> None:
             el = time.perf_counter() - t0
             best = el if best is None else min(best, el)
         out[name] = round(best, 3)
+        cg[name] = {"compiles": compiles.getCount() - n0,
+                    "compile_ms": round((codegen.compileTime() - ns0) / 1e6,
+                                        1)}
         if args.plans_dir:
             os.makedirs(args.plans_dir, exist_ok=True)
             txt = fn(spark, args.sf)._jdf.queryExecution().explainString(
@@ -68,7 +83,7 @@ def main() -> None:
         load = round(os.getloadavg()[0], 1)
     except OSError:
         load = None
-    print(json.dumps({"timings": out, "load_1m": load,
+    print(json.dumps({"timings": out, "codegen": cg, "load_1m": load,
                       "repo": repo, "sf": args.sf}))
 
 
