@@ -23,10 +23,44 @@ an external SQL oracle recomputes every stage.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from .text import py_tokens, tokens
+
+
+# ------------------------------------------------------------ materialization
+
+def materialize(df: DataFrame, **observed: Column) -> tuple[DataFrame, dict]:
+    """Compute ``df`` once and return it with its plan truncated, plus the
+    1-row scalars ``observed`` (name → aggregate Column) read in the SAME
+    job: ``(frame, {name: value})``; an empty frame gives NULL aggregates.
+
+    The one materialization policy for iterative loops and multi-action
+    DAGs. Every action re-analyzes, re-optimizes and re-plans its whole
+    logical tree — ``persist`` stores blocks but keeps the tree, so a loop
+    whose rounds reference the last round's persisted frame grows its
+    plan (and the driver time to plan it) every round. An eager
+    ``localCheckpoint`` replaces the tree with a scan of the stored
+    blocks, and the observed aggregates (a convergence sum, an id
+    watermark) ride that job instead of costing a ``collect`` of their
+    own. Blocks live in executor storage; a cluster that needs
+    lineage-based recovery swaps in a reliable ``checkpoint()``.
+
+    The blocks stay until ``release``: ``DataFrame.unpersist`` does not
+    free a local checkpoint."""
+    if not observed:
+        return df.localCheckpoint(eager=True), {}
+    obs = Observation()
+    cp = df.observe(obs, *[c.alias(k) for k, c in observed.items()]) \
+           .localCheckpoint(eager=True)
+    return cp, obs.get
+
+
+def release(df: DataFrame) -> None:
+    """Free the blocks behind a ``materialize`` result: the stored RDD of
+    its ``LogicalRDD`` plan. Nothing may read ``df`` afterwards."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 # ------------------------------------------------------------- parity dedup
@@ -280,7 +314,7 @@ def minhash_verified_pairs(df: DataFrame, id_col: str, text_col: str,
     returned (lazy) plan consumes it three times; the cache is
     CALLER-OWNED — in a long-lived session, materialize the result and
     then ``spark.catalog.clearCache()`` (or use ``minhash_dedup_cc``,
-    which unpersists its own signatures once the closure is computed)."""
+    which releases its own signatures once the closure is computed)."""
     sig = minhash_signatures(df, id_col, text_col, num_hashes,
                              shingle_n, seed).persist()
     return _verify_pairs(sig, _band_candidate_pairs(sig, num_hashes, bands),
@@ -369,80 +403,67 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     """Min-label propagation over an undirected edge list → (id, component),
     component = smallest id reachable. Converges in O(component diameter)
     iterations — near-dup clusters are small and dense, so typically 2-4;
-    a pure L-node path needs ~L-1 rounds (pass ``stats={}`` to get
-    ``stats["rounds"]`` = label-propagation joins actually run, incl. the
-    final no-change confirming round).
+    a pure L-node path needs ~L-1 rounds.
 
-    Each round is one shuffle (neighbor-label aggregation); frontier
-    DataFrames are persisted and the loop exits early when no label moved.
-    At extreme scale swap in large-star/small-star
+    Each round is one shuffle (neighbor-label aggregation) and ONE job:
+    the edge list and every round's labels go through ``materialize``, so
+    each round plans against block scans, never the pair lineage or the
+    previous rounds, and the round's convergence probe Σ(component) is
+    observed in that same job. Intermediates are ``release``d as soon as
+    the next round no longer reads them; only the returned labels keep
+    blocks. The loop exits early when no label moved. Pass ``stats={}``
+    to get ``stats["rounds"]`` (label-propagation joins actually run,
+    incl. the final no-change confirming round), ``stats["sums"]`` (the
+    observed Σ(component) after round 0 and each round) and
+    ``stats["converged"]`` (False when ``max_iter`` ended the loop before
+    two equal sums). At extreme scale swap in large-star/small-star
     (``connected_components_star``) — same DataFrame-only loop shape.
     """
-    # r11 (guide §2.4): both directions from ONE scan of the pair frame —
-    # the former two-branch union re-ran the (often expensive: blocking +
-    # verify) pair lineage once per branch on first materialization. The
-    # up-front repartition on dst gives the persisted edge list the hash
-    # partitioning every round's neighbor-label join needs, so only the
-    # (small, changing) label side shuffles per round.
-    edges = (pairs.select(F.explode(F.array(
-                F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-                F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))))
-             .alias("__e"))
-             .select("__e.src", "__e.dst")
-             .repartition(F.col("dst")))
-    edges = edges.persist()
+    # both directions from ONE scan of the pair frame; the repartition on
+    # dst gives the edge list the hash partitioning every round's
+    # neighbor-label join needs, so only the (small, changing) label side
+    # shuffles per round.
+    edges, _ = materialize(
+        pairs.select(F.explode(F.array(
+            F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+            F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))))
+            .alias("__e"))
+        .select("__e.src", "__e.dst")
+        .repartition(F.col("dst")))
     # round 0 is join-free: under identity labels a neighbor's label IS its
     # id, so the first propagation is a plain groupBy-min over edges. Small
     # (≤2-hop) components — the common near-dup case — converge here, and
-    # the loop below only has to confirm.
-    labels = (edges.groupBy("src")
-              .agg(F.min("dst").alias("__nbr_min"))
-              .select(F.col("src").alias("id"),
-                      F.least(F.col("src"), F.col("__nbr_min")).alias("component"))
-              .persist())
-    # labels are non-increasing, so Σ(component) strictly decreases on any
-    # change — a single scalar agg is a sufficient (and cheap) convergence
-    # probe, replacing a join-diff per round.
-    prev_sum = labels.agg(F.sum("component")).collect()[0][0]
-    rounds = 0
+    # the loop below only has to confirm. Labels are non-increasing, so
+    # Σ(component) strictly decreases on any change — one observed scalar
+    # per round is a sufficient convergence probe, replacing a join-diff.
+    labels, m = materialize(
+        edges.groupBy("src")
+        .agg(F.min("dst").alias("__nbr_min"))
+        .select(F.col("src").alias("id"),
+                F.least(F.col("src"), F.col("__nbr_min")).alias("component")),
+        s=F.sum("component"))
+    sums = [m["s"]]
     for _ in range(max_iter):
-        rounds += 1
-        # r12 (guide §2.4): the self-label rides the SAME aggregation as
-        # the neighbor labels — min over ({component(dst): dst∈N(id)} ∪
-        # {component(id)}) ≡ least(component(id), nbr_min), so the former
-        # groupBy + second left-join collapses into one union + groupBy
-        # with map-side partial MIN over both branches. Per round that is
-        # one Exchange and one join fewer (labels no longer re-shuffles
-        # to id-hash for the re-attach join); every id keeps a row
+        # the self-label rides the SAME aggregation as the neighbor labels
+        # — min over ({component(dst): dst∈N(id)} ∪ {component(id)}) ≡
+        # least(component(id), nbr_min) — so one union + groupBy with
+        # map-side partial MIN over both branches; every id keeps a row
         # because the labels branch of the union carries it.
-        #
-        # Lineage control: each round's plan references the prior labels
-        # twice, so an un-truncated lineage grows exponentially with
-        # round count and plan analysis itself OOMs on higher-diameter
-        # graphs. r11 (guide §5): a lazy persist + the convergence-probe
-        # agg materializes the round in ONE job where the former
-        # unconditional eager localCheckpoint cost a separate
-        # materialization job per round; the checkpoint still runs every
-        # 4th round, bounding the un-truncated segment at ≤ 2⁴ subtree
-        # references. (Reliable checkpoint dir on a real cluster if
-        # lineage-based recovery matters.)
-        new_labels = (edges.join(labels, edges.dst == labels.id)
-                      .select(F.col("src").alias("id"), F.col("component"))
-                      .unionByName(labels)
-                      .groupBy("id").agg(F.min("component").alias("component")))
-        if rounds % 4 == 0:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        else:
-            new_labels = new_labels.persist()
-        cur_sum = new_labels.agg(F.sum("component")).collect()[0][0]
-        labels.unpersist()
+        new_labels, m = materialize(
+            edges.join(labels, edges.dst == labels.id)
+            .select(F.col("src").alias("id"), F.col("component"))
+            .unionByName(labels)
+            .groupBy("id").agg(F.min("component").alias("component")),
+            s=F.sum("component"))
+        release(labels)
         labels = new_labels
-        if cur_sum == prev_sum:
+        sums.append(m["s"])
+        if sums[-1] == sums[-2]:
             break
-        prev_sum = cur_sum
-    edges.unpersist()
+    release(edges)
     if stats is not None:
-        stats["rounds"] = rounds
+        stats.update(rounds=len(sums) - 1, sums=sums,
+                     converged=len(sums) > 1 and sums[-1] == sums[-2])
     return labels
 
 
@@ -457,15 +478,14 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
     components are long chains or the graph is huge.
 
     Each round = two groupBy-min + join passes over the (shrinking) edge
-    list; convergence is detected by an edge-multiset signature (count +
-    hash sum — one scalar action per round). Output matches
+    list, materialized in one job (``materialize``) that also observes
+    the convergence signature (edge count + hash sum). Output matches
     ``connected_components``: (id, component=min reachable id), validated
     against a reference union-find in tests/test_properties.py.
     """
     raw = (pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")))
     nodes = (raw.select(F.col("u").alias("id"))
-             .unionByName(raw.select(F.col("v").alias("id"))).distinct()
-             .persist())
+             .unionByName(raw.select(F.col("v").alias("id"))).distinct())
 
     def norm(df: DataFrame, x: str, y: str) -> DataFrame:
         # undirected edge set as (a=max, b=min), self-loops dropped
@@ -474,7 +494,7 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
                           F.least(x, y).alias("b"))
                   .distinct())
 
-    edges = norm(raw, "u", "v").persist()
+    edges, _ = materialize(norm(raw, "u", "v"))
     prev_sig = None
     rounds = 0
     for _ in range(max_iter):
@@ -497,20 +517,17 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
                .select(F.col("b").alias("x"), F.col("m").alias("y"))
                .unionAll(sm.select(F.col("a").alias("x"),
                                    F.col("m").alias("y"))))
-        # localCheckpoint truncates the logical plan: each round references
-        # the prior edge frame ~4×, so without truncation the plan tree
-        # grows 4^rounds and analysis OOMs around depth 7. (On a cluster
-        # with fault-tolerance needs, swap for a reliable checkpoint dir.)
-        new_edges = norm(out, "x", "y").localCheckpoint(eager=True)
-        # pmod keeps the per-row term < 2^31 — raw xxhash64 sums overflow
-        # long under ANSI
-        sig = tuple(new_edges.agg(
-            F.count(F.lit(1)),
-            F.coalesce(F.sum(F.pmod(F.xxhash64("a", "b"),
-                                    F.lit((1 << 31) - 1))),
-                       F.lit(0))).collect()[0])
-        edges.unpersist()
+        # each round references the prior edge frame ~4×, so without
+        # truncation the plan tree grows 4^rounds and analysis OOMs
+        # around depth 7. pmod keeps the per-row hash term < 2^31 — raw
+        # xxhash64 sums overflow long under ANSI
+        new_edges, obs = materialize(
+            norm(out, "x", "y"), n=F.count(F.lit(1)),
+            h=F.coalesce(F.sum(F.pmod(F.xxhash64("a", "b"),
+                                      F.lit((1 << 31) - 1))), F.lit(0)))
+        release(edges)
         edges = new_edges
+        sig = (obs["n"], obs["h"])
         if sig == prev_sig:
             break
         prev_sig = sig
@@ -522,7 +539,6 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
                  .select("id", F.col("id").alias("component")))
     if stats is not None:
         stats["rounds"] = rounds
-    nodes.unpersist()
     return labels.unionByName(self_rows)
 
 
@@ -537,16 +553,20 @@ def minhash_dedup_cc(df: DataFrame, id_col: str, text_col: str,
     pairs AND closure AND survivor choice — is reproducible by an external
     SQL oracle.
 
-    The signature cache is released here: ``connected_components``
-    materializes the verified edge list inside its iteration loop, so by
-    the time it returns the signatures are no longer needed and the
-    survivor anti-join reads only the (already-computed) labels."""
-    sig = minhash_signatures(df, id_col, text_col, num_hashes,
-                             shingle_n, seed).persist()
+    One materialization policy (``materialize``): the signature table is
+    computed once (the Arrow kernel runs one job) and truncated, so the
+    banding self-join and both verify joins plan against a block scan;
+    ``connected_components`` materializes the verified edge list and each
+    round's labels the same way, reading its convergence sum from each
+    round's own job. The signatures are ``release``d once the closure is
+    computed; the returned frame reads only the original ``df`` and the
+    final labels (the one stored RDD left behind)."""
+    sig, _ = materialize(minhash_signatures(df, id_col, text_col, num_hashes,
+                                            shingle_n, seed))
     verified = _verify_pairs(sig, _band_candidate_pairs(sig, num_hashes, bands),
                              num_hashes, jaccard_threshold)
     comp = connected_components(verified.select("id_a", "id_b"), stats=stats)
-    sig.unpersist()
+    release(sig)
     losers = comp.filter(F.col("id") != F.col("component")) \
                  .select(F.col("id").alias(id_col))
     return df.join(losers, id_col, "left_anti")

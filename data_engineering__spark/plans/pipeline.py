@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from collections.abc import Callable
 
 from ..functions.derive import case_when_contains
-from ..operators.dedup import dedup_by_key
+from ..operators.dedup import dedup_by_key, materialize
 from ..operators.merge import assign_ids, dim_upsert, upsert_merge
 from ..operators.quality import audit_diff, check, duplicate_key_audit
 from ..operators.relational import min_trimmed_length
@@ -70,22 +70,6 @@ def _project_raw(raw: DataFrame) -> DataFrame:
     return raw.select(*cols)
 
 
-def _cut(df: DataFrame) -> DataFrame:
-    """Truncate lineage at a driver-coordination barrier.
-
-    The pipeline is a multi-action DAG (id assignment needs scalar
-    probes), so every downstream action re-ANALYZES its full logical
-    history even when the data is cached — ``persist`` stores blocks but
-    keeps the plan. Measured at sf0.1 the deep plans cost ~4s of pure
-    driver-side analysis across the ~20 actions. ``localCheckpoint``
-    materializes once and replaces the plan with a scan of the stored
-    blocks. Local-mode/executor-local storage; a real cluster sets
-    ``sc.setCheckpointDir`` + reliable ``checkpoint()`` instead (this
-    is the standard Spark trade — eager localCheckpoint is what e.g.
-    GraphFrames iterations use)."""
-    return df.localCheckpoint(eager=True)
-
-
 def ingest(raw: DataFrame) -> DataFrame:
     """Stage 1 (``process_publications_dag.py:45-88``): normalize the nested
     JSON into the publications hub with NULL-doi-passthrough dedup and a
@@ -94,7 +78,9 @@ def ingest(raw: DataFrame) -> DataFrame:
                            null_passthrough=True)
     # deterministic surrogate ids WITHOUT a single-task global window:
     # range-partitioned per-partition offsets (operators.merge.assign_ids)
-    return _cut(assign_ids(deduped, ["arxiv_id"], id_col="pub_id"))
+    # materialize: a driver-coordination barrier (every later stage's
+    # actions plan against the stored hub, not the dedup + id lineage)
+    return materialize(assign_ids(deduped, ["arxiv_id"], id_col="pub_id"))[0]
 
 
 def ingest_incremental(pubs: DataFrame, raw: DataFrame) -> DataFrame:
@@ -124,7 +110,7 @@ def ingest_incremental(pubs: DataFrame, raw: DataFrame) -> DataFrame:
                  .collect()[0][0]
     with_ids = assign_ids(new_rows, ["arxiv_id"], id_col="pub_id",
                           start=int(max_id) + 1)
-    return _cut(pubs.unionByName(with_ids.select(*pubs.columns)))
+    return materialize(pubs.unionByName(with_ids.select(*pubs.columns)))[0]
 
 
 def normalize(pubs: DataFrame,
@@ -268,10 +254,10 @@ def enrich(tables: dict[str, DataFrame],
         tables["publication_category"], ["category_id"], [F.asc("pub_id")],
         limit_per_category).select("pub_id").distinct()
     targets = pubs.join(picked, "pub_id", "left_semi").select("title")
-    # cut: the result set feeds the publication merge AND the
+    # materialize: the result set feeds the publication merge AND the
     # authorship/category bridge updates — fetch exactly once, and every
     # consumer re-analyzes a block scan instead of the HTTP-stage plan
-    results = _cut(http_enrich(targets, "title", fetch=fetch))
+    results, _ = materialize(http_enrich(targets, "title", fetch=fetch))
     ord_ = F.struct(F.col("key"), F.col("rank"))
     source = (results.groupBy("title").agg(
         F.max_by("link", ord_).alias("journal_ref"),
@@ -284,16 +270,15 @@ def enrich(tables: dict[str, DataFrame],
                           update_cols=["journal_ref", "update_date"],
                           coalesce_cols=["doi"],
                           insert_cols=["submitter"])
-    # cut: the merge join feeds multiple consumers (the scalar probe, the
-    # id-fill filter branches, and every downstream table) — materialize
-    # the full-outer join once and drop its plan.
-    merged = _cut(merged)
-    # ONE action answers both driver-side scalars: current max id (new rows
-    # continue after it) and whether any source-only row needs an id at all
-    probe = merged.agg(
-        F.coalesce(F.max("pub_id"), F.lit(0)).alias("max_id"),
-        F.count(F.when(F.col("pub_id").isNull(), 1)).alias("n_missing")
-    ).collect()[0]
+    # materialize: the merge join feeds multiple consumers (the id-fill
+    # filter branches and every downstream table) — compute the full-outer
+    # join once and drop its plan. The same job observes both driver-side
+    # scalars: current max id (new rows continue after it) and whether any
+    # source-only row needs an id at all
+    merged, probe = materialize(
+        merged,
+        max_id=F.coalesce(F.max("pub_id"), F.lit(0)),
+        n_missing=F.count(F.when(F.col("pub_id").isNull(), 1)))
     max_id = probe["max_id"]
     missing = merged.filter(F.col("pub_id").isNull())
     if probe["n_missing"] > 0:

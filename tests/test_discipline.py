@@ -29,9 +29,6 @@ COLLECT_ALLOWLIST = {
         (1, "1-row scalar probe (theta covariance terms)"),
     ("plans/pipeline.py", "ingest_incremental"):
         (1, "1-row scalar probe (max pub_id watermark)"),
-    ("plans/pipeline.py", "enrich"):
-        (1, "1-row (max_id, n_missing) probe before the HTTP "
-            "side-channel"),
     ("operators/analytics.py", "markov_attribution"):
         (1, "|states|^2 transition matrix (event-type vocabulary, not rows)"),
     ("operators/analytics.py", "markov_stationary"):
@@ -39,11 +36,6 @@ COLLECT_ALLOWLIST = {
             "rows) — driver power iteration, markov_attribution precedent"),
     ("operators/analytics.py", "funnel_within"):
         (1, "k-row funnel-step counts (k = number of steps)"),
-    ("operators/dedup.py", "connected_components"):
-        (2, "1-row convergence check per iteration (sum-of-components "
-            "probe)"),
-    ("operators/dedup.py", "connected_components_star"):
-        (1, "1-row convergence check per iteration"),
     ("operators/merge.py", "assign_ids"):
         (1, "per-partition count map (numPartitions rows)"),
     ("operators/merge.py", "dim_upsert"):

@@ -446,6 +446,16 @@ def test_shared_intermediates_cut_lineage(spark, sf_dir):
         assert n <= max_scans, f"{name}: {n} scans"
 
 
+def test_iterative_near_dup_plans_stay_truncated(spark, sf_dir):
+    """The near-dup closure materializes its signatures, edge list and
+    every round's labels, so the returned plan reads block scans, not a
+    tree of lazily persisted subtrees nested round after round (about
+    507 000 and 590 000 formatted chars before)."""
+    for name in ["minhash_cc_dedup", "supplier_er_clusters"]:
+        n = len(plan_of(QUERIES[name](spark, sf_dir)))
+        assert n < 20_000, f"{name}: {n} plan chars"
+
+
 def test_round6_query_plan_shapes(spark, sf_dir):
     """Round-6 operator plan pins: the vocab probe broadcasts a
     sort-limited top-N (never a corpus sort), the recursive CTE runs

@@ -15,8 +15,15 @@ Usage:
 Prints one JSON line: ``timings`` {key: best_sec} and, over the same
 timed repeats, ``codegen`` {key: {compiles, compile_ms}} — the Janino
 compilations (``CodegenMetrics``) and their wall (``CodeGenerator``'s
-compile-time accumulator). A key that recompiles on every repeat is
-missing the whole-stage codegen cache.
+compile-time accumulator) — and ``jobs`` {key: Spark jobs run}, counted
+through one job group per key (a job a key submits from a Python thread
+it starts is counted only if that thread inherits the group, as
+``pyspark.InheritableThread`` does). A key that recompiles on every repeat is
+missing the whole-stage codegen cache. ``leaked_rdds`` {key: n} is the
+persistent RDD count left after the key's repeats (and plan capture),
+read before ``clearCache`` resets it for the next key: an operator that
+stores intermediates it never releases shows up there (a key whose result
+reads a local checkpoint keeps one per repeat).
 """
 from __future__ import annotations
 
@@ -53,14 +60,18 @@ def main() -> None:
     codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
         .CodeGenerator
 
+    sc = spark.sparkContext
     out: dict[str, float] = {}
     cg: dict[str, dict] = {}
+    jobs: dict[str, int] = {}
+    leaked: dict[str, int] = {}
     for name in args.keys:
         fn = QUERIES[name]
         best = None
         n0, ns0 = compiles.getCount(), codegen.compileTime()
+        group = f"bench:{name}"
+        sc.setJobGroup(group, group)
         for _ in range(args.repeat):
-            spark.sparkContext.setJobDescription(f"bench:{name}")
             t0 = time.perf_counter()
             df = fn(spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
@@ -70,6 +81,8 @@ def main() -> None:
         cg[name] = {"compiles": compiles.getCount() - n0,
                     "compile_ms": round((codegen.compileTime() - ns0) / 1e6,
                                         1)}
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setJobGroup("bench:plans", "bench:plans")
         if args.plans_dir:
             os.makedirs(args.plans_dir, exist_ok=True)
             txt = fn(spark, args.sf)._jdf.queryExecution().explainString(
@@ -79,11 +92,17 @@ def main() -> None:
                     args.plans_dir,
                     f"{name}_{args.plans_suffix}.txt"), "w") as fh:
                 fh.write(txt)
+        leaked[name] = sc._jsc.getPersistentRDDs().size()
+        spark.catalog.clearCache()
+        rdds = sc._jsc.getPersistentRDDs()
+        for rid in list(rdds.keySet()):
+            rdds.get(rid).unpersist(True)
     try:
         load = round(os.getloadavg()[0], 1)
     except OSError:
         load = None
-    print(json.dumps({"timings": out, "codegen": cg, "load_1m": load,
+    print(json.dumps({"timings": out, "codegen": cg, "jobs": jobs,
+                      "leaked_rdds": leaked, "load_1m": load,
                       "repo": repo, "sf": args.sf}))
 
 
