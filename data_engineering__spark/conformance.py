@@ -36,7 +36,7 @@ from .operators import relational as R
 from .operators import text as X
 from .operators import vector as V
 from .operators import window as W
-from .session import tune
+from .session import materialize, tune
 from .sources.io import read_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1127,10 +1127,10 @@ def kappa_lang_agreement(spark, sf_dir):
     from .operators.text import lang_id
     docs = read_table(spark, sf_dir, "documents")
     pred = lang_id(docs, "text")
-    conf = (pred.groupBy(F.col("lang").alias("a"),
-                         F.col("lang_pred").alias("b"))
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .localCheckpoint())
+    conf, _ = materialize(
+        pred.groupBy(F.col("lang").alias("a"),
+                     F.col("lang_pred").alias("b"))
+        .agg(F.count(F.lit(1)).cast("long").alias("c")))
     tot = conf.agg(F.sum("c").cast("long").alias("n"),
                    F.coalesce(F.sum(F.when(F.col("a") == F.col("b"),
                                            F.col("c"))), F.lit(0))
@@ -2523,8 +2523,9 @@ def minhash_incremental_pairs(spark, sf_dir):
         F.concat_ws(" ", F.slice(toks, 1, F.greatest(F.size(toks) - 1,
                                                      F.lit(1)))).alias("text"))
     n_parts = spark.sparkContext.defaultParallelism
-    index = D.minhash_signatures(docs.repartition(n_parts), "doc_id", "text",
-                                 num_hashes=32, shingle_n=3, seed=42).persist()
+    index, _ = materialize(D.minhash_signatures(
+        docs.repartition(n_parts), "doc_id", "text", num_hashes=32,
+        shingle_n=3, seed=42))
     return D.minhash_index_probe(index, batch.repartition(n_parts),
                                  "doc_id", "text", jaccard_threshold=0.8,
                                  num_hashes=32, bands=16)
@@ -3421,11 +3422,11 @@ def scd2_asof(spark, sf_dir):
     from .operators.merge import scd2_merge
     from .operators.temporal import asof_join
     hist, changes = _scd2_frames(spark, sf_dir)
-    # localCheckpoint: probes AND the as-of right side both consume the
+    # materialize: probes AND the as-of right side both consume the
     # merged history — without the cut each re-runs the whole SCD2 merge
     # lineage (16 scans on the bare plan)
-    merged = scd2_merge(hist, changes, "k", ["attr"], "2024-01-15") \
-        .localCheckpoint()
+    merged, _ = materialize(
+        scd2_merge(hist, changes, "k", ["attr"], "2024-01-15"))
     probes = (merged.select("k").distinct()
               .withColumn("ts", F.explode(F.array(
                   *[F.to_date(F.lit(d)) for d in _SCD2_PROBE_DATES]))))
@@ -4146,17 +4147,16 @@ def curate_corpus_funnel(spark, sf_dir):
     planted = (d.filter(F.col("doc_id") % 9 == 0)
                .select((F.col("doc_id") + 3000000).alias("doc_id"), "text"))
     corpus = d.unionByName(planted)
-    # each stage localCheckpoints (the funnel/CC lineage device): the
+    # each stage is materialized (the funnel/CC lineage device): the
     # per-stage counts and the next stage both read the materialized
     # frame instead of re-running the whole upstream funnel (was 16
     # document scans for 4 stage counts)
-    t1 = corpus.filter(token_count("text").between(20, 100)) \
-               .localCheckpoint()
+    t1, _ = materialize(corpus.filter(token_count("text").between(20, 100)))
     keep = (repetition_profile(t1, "doc_id", "text",
                                max_bigram_share=0.05, max_dup5_frac=0.30,
                                min_unique_ratio=0.40)
             .filter(F.col("keep")).select("doc_id"))
-    t2 = t1.join(keep, "doc_id").localCheckpoint()
+    t2, _ = materialize(t1.join(keep, "doc_id"))
     t3 = exact_text_dedup(t2, "text", [F.asc("doc_id")])
 
     def stage(df, name):
@@ -8035,11 +8035,11 @@ def lang_prf_report(spark, sf_dir):
     heuristic never emits have no predicted ones)."""
     from .operators.text import lang_id
     docs = read_table(spark, sf_dir, "documents")
-    conf = (lang_id(docs, "text")
-            .groupBy(F.col("lang").alias("a"),
-                     F.col("lang_pred").alias("b"))
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .localCheckpoint())
+    conf, _ = materialize(
+        lang_id(docs, "text")
+        .groupBy(F.col("lang").alias("a"),
+                 F.col("lang_pred").alias("b"))
+        .agg(F.count(F.lit(1)).cast("long").alias("c")))
     rowm = conf.groupBy(F.col("a").alias("label")).agg(
         F.sum("c").cast("long").alias("n_true"))
     colm = conf.groupBy(F.col("b").alias("label")).agg(

@@ -62,11 +62,6 @@ def coalesce_cols(*cols: str) -> Column:
     return F.coalesce(*[F.col(c) for c in cols])
 
 
-def parse_iso_date(col: str) -> Column:
-    """F9: ISO date parse ('2008-12-13' update_date)."""
-    return F.to_date(F.col(col))
-
-
 def parse_rfc1123(col: str) -> Column:
     """F9: RFC-1123 timestamp parse ('Sat, 31 Mar 2007 02:26:18 GMT' —
     the ``versions[].created`` field the reference stores raw).

@@ -23,44 +23,11 @@ an external SQL oracle recomputes every stage.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize, release
 from .text import py_tokens, tokens
-
-
-# ------------------------------------------------------------ materialization
-
-def materialize(df: DataFrame, **observed: Column) -> tuple[DataFrame, dict]:
-    """Compute ``df`` once and return it with its plan truncated, plus the
-    1-row scalars ``observed`` (name → aggregate Column) read in the SAME
-    job: ``(frame, {name: value})``; an empty frame gives NULL aggregates.
-
-    The one materialization policy for iterative loops and multi-action
-    DAGs. Every action re-analyzes, re-optimizes and re-plans its whole
-    logical tree — ``persist`` stores blocks but keeps the tree, so a loop
-    whose rounds reference the last round's persisted frame grows its
-    plan (and the driver time to plan it) every round. An eager
-    ``localCheckpoint`` replaces the tree with a scan of the stored
-    blocks, and the observed aggregates (a convergence sum, an id
-    watermark) ride that job instead of costing a ``collect`` of their
-    own. Blocks live in executor storage; a cluster that needs
-    lineage-based recovery swaps in a reliable ``checkpoint()``.
-
-    The blocks stay until ``release``: ``DataFrame.unpersist`` does not
-    free a local checkpoint."""
-    if not observed:
-        return df.localCheckpoint(eager=True), {}
-    obs = Observation()
-    cp = df.observe(obs, *[c.alias(k) for k, c in observed.items()]) \
-           .localCheckpoint(eager=True)
-    return cp, obs.get
-
-
-def release(df: DataFrame) -> None:
-    """Free the blocks behind a ``materialize`` result: the stored RDD of
-    its ``LogicalRDD`` plan. Nothing may read ``df`` afterwards."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 # ------------------------------------------------------------- parity dedup
@@ -285,7 +252,7 @@ def _verify_pairs(sig: DataFrame, pairs: DataFrame, num_hashes: int,
                   jaccard_threshold: float) -> DataFrame:
     """Shared verify stage over candidate (id_a, id_b) pairs: signature-
     agreement Jaccard estimate → threshold filter. Emits
-    (id_a, id_b, jaccard_est); ``sig`` should be persisted by the caller
+    (id_a, id_b, jaccard_est); ``sig`` should be materialized by the caller
     (it is consumed by banding AND both sides of the verify join)."""
     sa = sig.select(F.col("doc").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sig.select(F.col("doc").alias("id_b"), F.col("sig").alias("sig_b"))
@@ -310,13 +277,12 @@ def minhash_verified_pairs(df: DataFrame, id_col: str, text_col: str,
     so an external SQL oracle can recompute the exact pair set and
     estimates.
 
-    Caching note: the signature table is persisted here because the
-    returned (lazy) plan consumes it three times; the cache is
-    CALLER-OWNED — in a long-lived session, materialize the result and
-    then ``spark.catalog.clearCache()`` (or use ``minhash_dedup_cc``,
-    which releases its own signatures once the closure is computed)."""
-    sig = minhash_signatures(df, id_col, text_col, num_hashes,
-                             shingle_n, seed).persist()
+    The signature table is materialized here because the returned
+    (lazy) plan consumes it three times; the returned frame reads it, so
+    a long-lived session frees it with ``session.release`` once the
+    pairs are consumed (``minhash_dedup_cc`` releases its own)."""
+    sig, _ = materialize(minhash_signatures(df, id_col, text_col,
+                                            num_hashes, shingle_n, seed))
     return _verify_pairs(sig, _band_candidate_pairs(sig, num_hashes, bands),
                          num_hashes, jaccard_threshold)
 
@@ -344,8 +310,8 @@ def minhash_index_probe(index_sig: DataFrame, new_docs: DataFrame,
     the pair surface is exactly the full recompute's pairs restricted to
     pairs touching the new batch (same hash family ⇒ bit-identical
     estimates; the conformance oracle checks that equivalence)."""
-    new_sig = minhash_signatures(new_docs, id_col, text_col, num_hashes,
-                                 shingle_n, seed).persist()
+    new_sig, _ = materialize(minhash_signatures(
+        new_docs, id_col, text_col, num_hashes, shingle_n, seed))
     all_sig = index_sig.unionByName(new_sig)
     nb = _band_buckets(new_sig, num_hashes, bands).alias("n")
     ab = _band_buckets(all_sig, num_hashes, bands).alias("a")
@@ -700,7 +666,7 @@ def _shingle_rows_pandas(df: DataFrame, id_col: str, text_col: str,
 
 def _shingle_jaccard_pairs(sh: DataFrame, jaccard_threshold: float) -> DataFrame:
     """(id_a, id_b, jaccard) pairs with J ≥ ``jaccard_threshold`` over a
-    persisted ``_shingle_rows_pandas`` table, J rounded to 6 dp after the
+    materialized ``_shingle_rows_pandas`` table, J rounded to 6 dp after the
     test. The test compares the int/int double |∩|/|∪|, so J ≥ 0.5 is
     exact: a/b < 1/2 with b < 2^53 lies at least 1/(2b) below 0.5."""
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
@@ -731,15 +697,15 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     JVM-side. Prefer ``minhash_candidate_pairs`` when the corpus is
     web-scale and approximate similarity suffices.
 
-    Caching note: the shingle table is persisted here (the
+    The shingle table is materialized here (the
     ``minhash_verified_pairs`` convention) because the returned plan
     consumes it THREE times — sizes and both self-join sides — which
     otherwise re-runs the corpus scan and the Arrow shingle kernel per
     consumer (measured 8 scans on the bare plan, 16 through
-    ``related_docs_topk``'s symmetric union). Cache is CALLER-OWNED:
-    materialize, then ``spark.catalog.clearCache()`` in long sessions.
+    ``related_docs_topk``'s symmetric union); ``session.release`` frees
+    it once the result is consumed.
     """
-    sh = _shingle_rows_pandas(df, id_col, text_col, shingle_n).persist()
+    sh, _ = materialize(_shingle_rows_pandas(df, id_col, text_col, shingle_n))
     return _shingle_jaccard_pairs(sh, jaccard_threshold)
 
 
@@ -968,17 +934,17 @@ def duplicate_span_profile(df: DataFrame, id_col: str, text_col: str,
     broadcast — the membership probe is a shuffle-on-hash join of two
     fixed-width (id, 8-byte hash) surfaces (the standard big-big shape;
     bodies never shuffle), followed by one per-doc aggregation. The
-    shingle surface is MATERIALIZED once (localCheckpoint) and feeds
+    shingle surface is MATERIALIZED once (``materialize``) and feeds
     both the shared-set aggregation and the membership probe — the
     warehouse-scale equivalent is persisting the (id, hash) table
     before the self-aggregation. Docs shorter than ``n`` tokens emit no
     windows and report (0, 0, 0.0) via the left join + coalesce."""
-    # localCheckpoint: the shingle surface feeds BOTH the shared-set
+    # materialize: the shingle surface feeds BOTH the shared-set
     # aggregation and the membership probe — materializing the
     # fixed-width (id, hash) rows once halves the sha window passes
     # (measured 2.5 s → 1.76 s best-of-4 at sf0.1)
-    sh = shingle_sha_rows(df, [id_col], text_col, n,
-                          out_col="__h").localCheckpoint()
+    sh, _ = materialize(shingle_sha_rows(df, [id_col], text_col, n,
+                                         out_col="__h"))
     shared = (sh.groupBy("__h")
               .agg(F.countDistinct(id_col).alias("__nd"))
               .filter(F.col("__nd") >= min_docs)
@@ -1027,8 +993,9 @@ def prefix_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     the exact verify counts full-set intersections for candidate pairs
     (same verify device as ``containment_pairs``)."""
     p, q = threshold_num, threshold_den
-    sh = (shingle_sha_rows(df, [id_col], text_col, shingle_n, out_col="__h")
-          .distinct().localCheckpoint())
+    sh, _ = materialize(
+        shingle_sha_rows(df, [id_col], text_col, shingle_n, out_col="__h")
+        .distinct())
     dfreq = sh.groupBy("__h").agg(F.count(F.lit(1)).alias("__df"))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
     ranked = (sh.join(dfreq, "__h")
@@ -1088,15 +1055,15 @@ def span_removal_profile(df: DataFrame, id_col: str, text_col: str,
     an n× position explode, so the cost scales with flagged spans, not
     flagged spans × n. Short docs (<n tokens) emit no windows and
     report zeros with keep_frac 1."""
-    base = (df.select(F.col(id_col), tokens(text_col).alias("__tk"))
-            .select(F.col(id_col), F.size("__tk").alias("n_tokens"),
-                    F.col("__tk"))
-            .localCheckpoint())
-    spans = (base.filter(F.col("n_tokens") >= n)
-             .select(F.col(id_col),
-                     F.posexplode(_shingle_sha_of_tokens(F.col("__tk"), n))
-                      .alias("__i", "__h"))
-             .localCheckpoint())
+    base, _ = materialize(
+        df.select(F.col(id_col), tokens(text_col).alias("__tk"))
+        .select(F.col(id_col), F.size("__tk").alias("n_tokens"),
+                F.col("__tk")))
+    spans, _ = materialize(
+        base.filter(F.col("n_tokens") >= n)
+        .select(F.col(id_col),
+                F.posexplode(_shingle_sha_of_tokens(F.col("__tk"), n))
+                 .alias("__i", "__h")))
     shared = (spans.groupBy("__h")
               .agg(F.countDistinct(id_col).alias("__nd"))
               .filter(F.col("__nd") >= min_docs)
@@ -1161,8 +1128,9 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
     is 7 (sf0.01) / 25 (sf0.1) and the worst qualifying pair's rarest
     shared shingle has DF 3 / 11 — the default cap prunes nothing there.
     """
-    sh = (shingle_sha_rows(df, [id_col], text_col, shingle_n, out_col="__h")
-          .distinct().localCheckpoint())
+    sh, _ = materialize(
+        shingle_sha_rows(df, [id_col], text_col, shingle_n, out_col="__h")
+        .distinct())
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
     dfreq = sh.groupBy("__h").agg(F.count(F.lit(1)).alias("__df"))
     if max_df is None:
@@ -1182,7 +1150,7 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
     # auto-broadcasts one of them — which OOMs the driver the moment
     # the corpus outgrows it (round-9 synthetic-sf1 sweep, 100x). The
     # only broadcast kept is the genuinely 1-row ndocs frame above.
-    rare = sh.join(keep.hint("merge"), "__h").localCheckpoint()
+    rare, _ = materialize(sh.join(keep.hint("merge"), "__h"))
     a, b = rare.alias("a"), rare.alias("b")
     # one pruned co-occurrence join yields BOTH the candidate pairs and
     # their rare-shingle intersection counts
@@ -1196,8 +1164,9 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
     # rare-join count already equals the exact intersection, so the
     # expensive |cand|·|A| verify runs on the hot-doc pairs alone (empty
     # on corpora where the cap prunes nothing — the measured common case)
-    hot_docs = (sh.join(hot.hint("merge"), "__h").select(id_col).distinct()
-                .withColumn("__hd", F.lit(1)).localCheckpoint())
+    hot_docs, _ = materialize(
+        sh.join(hot.hint("merge"), "__h").select(id_col).distinct()
+        .withColumn("__hd", F.lit(1)))
     # persist: `marked` feeds BOTH the exact and dirty branches — without
     # the share each branch re-runs the co-occurrence join and the whole
     # dfreq/threshold lineage (measured: 12 SortMergeJoins /
@@ -1262,13 +1231,14 @@ def minhash_recall_report(df: DataFrame, id_col: str, text_col: str,
     exact ground truth needs the shared-shingle self-join. The
     candidate side stays the production banding plan; sizes/intersections
     are hash aggregates keyed on shingle value and pair. The shingle table
-    and the signature table are persisted (caller-owned, as in
+    and the signature table are materialized (as in
     ``ngram_jaccard_pairs`` / ``minhash_verified_pairs``): ``n_candidates``
     and ``n_hit`` both read the candidate pairs."""
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n,
-                             seed).persist()
+    sig, _ = materialize(minhash_signatures(df, id_col, text_col,
+                                            num_hashes, shingle_n, seed))
     cand = _band_candidate_pairs(sig, num_hashes, bands)
-    sh = _shingle_rows_pandas(df, id_col, text_col, shingle_n, seed).persist()
+    sh, _ = materialize(_shingle_rows_pandas(df, id_col, text_col,
+                                             shingle_n, seed))
     truth = _shingle_jaccard_pairs(sh, 0.5).select("id_a", "id_b")
     n_true = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true"))
     n_cand = cand.agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
@@ -1298,9 +1268,10 @@ def source_overlap_matrix(docs: DataFrame, source_col: str,
     cross-source duplication, and |union| = |A|+|B|−|∩| avoids a
     second join. Output: (source_a, source_b, n_shared, jaccard),
     overlapping pairs only."""
-    d = (docs.select(F.col(source_col).alias("__s"),
-                     F.sha2(F.col(text_col), 256).alias("__h"))
-         .distinct().localCheckpoint())
+    d, _ = materialize(
+        docs.select(F.col(source_col).alias("__s"),
+                    F.sha2(F.col(text_col), 256).alias("__h"))
+        .distinct())
     sizes = (d.select(F.col("__s").alias("__zs"))
              .groupBy("__zs").agg(F.count(F.lit(1)).alias("__n")))
     a = d.select(F.col("__s").alias("__sa"), F.col("__h"))

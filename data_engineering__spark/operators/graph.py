@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize, release
+
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
              damping: float = 0.85, n_iter: int = 3,
@@ -28,39 +30,53 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     not a decimal re-spelling.
 
     Scale: per iteration ONE shuffle (contribution sum on dst) plus the
-    node left-join; edges and out-degrees are computed once and reused;
-    per-iteration ``localCheckpoint`` truncates the logical plan so long
-    runs don't grow analysis cost (see the CC loops — same trap). Edge
-    multiplicity is collapsed (DISTINCT) so a duplicated edge cannot
-    double-ship rank.
+    node left-join. The edges, carrying their source's out-degree, and
+    the node set are materialized once (N observed in the same job, so
+    1/N and (1-d)/N are the same IEEE divisions in driver doubles); each
+    round's ranks are materialized (flat plans, as in the CC loops) and
+    the previous round's released. Edge multiplicity is collapsed
+    (DISTINCT) so a duplicated edge cannot double-ship rank.
     """
     e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
          .filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
-         .distinct().persist())
-    nodes = (e.select(F.col("u").alias("id"))
-             .unionByName(e.select(F.col("v").alias("id"))).distinct()
-             .persist())
-    n = F.broadcast(nodes.agg(F.count(F.lit(1)).alias("n")))
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg")).persist()
-    base = F.lit(1.0 - damping) / F.col("n")
-    ranks = (nodes.crossJoin(n)
-             .select("id", F.round(F.lit(1.0) / F.col("n"),
-                                   round_dp).alias("rank")))
+         .distinct())
+    ed, _ = materialize(
+        e.join(e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg")), "u"))
+    nodes, m = materialize(
+        ed.select(F.col("u").alias("id"))
+        .unionByName(ed.select(F.col("v").alias("id"))).distinct(),
+        n=F.count(F.lit(1)))
+    n = max(m["n"], 1)   # an empty graph ranks no node
+    ranks = nodes.select("id", F.round(F.lit(1.0 / n), round_dp).alias("rank"))
     for _ in range(n_iter):
-        contrib = (e.join(ranks, e["u"] == ranks["id"]).join(deg, "u")
-                   .groupBy("v")
+        contrib = (ed.join(ranks, ed["u"] == ranks["id"])
+                   .groupBy(F.col("v").alias("id"))
                    .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("s")))
-        ranks = (nodes.join(contrib, nodes["id"] == contrib["v"], "left")
-                 .crossJoin(n)
-                 .select(F.col("id"),
-                         F.round(base + F.lit(damping)
-                                 * F.coalesce(F.col("s"), F.lit(0.0)),
-                                 round_dp).alias("rank"))
-                 .localCheckpoint(eager=True))
-    e.unpersist()
-    deg.unpersist()
-    nodes.unpersist()
+        nxt, _ = materialize(
+            ranks.select("id").join(contrib, "id", "left")
+            .select("id", F.round(F.lit((1.0 - damping) / n) + F.lit(damping)
+                                  * F.coalesce(F.col("s"), F.lit(0.0)),
+                                  round_dp).alias("rank")))
+        release(ranks)   # round 1 frees the node set behind rank 0
+        ranks = nxt
+    release(ed)
     return ranks
+
+
+def _oriented(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(u, v) with u < v: the undirected simple graph's edges oriented
+    low→high, self-loops and multiplicity dropped."""
+    return (edges.select(F.least(F.col(src), F.col(dst)).alias("u"),
+                         F.greatest(F.col(src), F.col(dst)).alias("v"))
+            .filter(F.col("u") < F.col("v")).distinct())
+
+
+def _triangles(e: DataFrame) -> DataFrame:
+    """(a, b, c) once per triangle a<b<c of the oriented edges ``e``."""
+    e1 = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
+    e2 = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
+    e3 = e.select(F.col("u").alias("a"), F.col("v").alias("c"))
+    return e1.join(e2, "b").join(e3, ["a", "c"])
 
 
 def triangle_count(edges: DataFrame, src: str = "src",
@@ -79,20 +95,12 @@ def triangle_count(edges: DataFrame, src: str = "src",
     whose cost is Σ deg(u)·deg(v) over edges; orientation bounds the
     wedge generation by out-degree under the low→high order (the
     classic mitigation that keeps hub nodes from exploding the join).
+    The oriented edge table is materialized, as all THREE join legs (and
+    the returned frame) read it.
     """
-    # persist: the oriented edge table feeds all THREE join legs —
-    # without the cache each leg re-runs the dedup shuffle and the
-    # upstream edge derivation (caller-owned cache, the
-    # minhash_verified_pairs convention)
-    e = (edges.select(F.least(F.col(src), F.col(dst)).alias("u"),
-                      F.greatest(F.col(src), F.col(dst)).alias("v"))
-         .filter(F.col("u") < F.col("v")).distinct().persist())
-    e1 = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
-    e2 = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
-    e3 = e.select(F.col("u").alias("a"), F.col("v").alias("c"))
-    tri = (e1.join(e2, "b").join(e3, ["a", "c"])
-           .select(F.col("a").alias("node")))
-    return tri.groupBy("node").agg(F.count(F.lit(1)).alias("n_triangles"))
+    e, _ = materialize(_oriented(edges, src, dst))
+    return (_triangles(e).groupBy(F.col("a").alias("node"))
+            .agg(F.count(F.lit(1)).alias("n_triangles")))
 
 
 def bfs_hops(edges: DataFrame, seeds: list[int], src: str = "src",
@@ -107,29 +115,35 @@ def bfs_hops(edges: DataFrame, seeds: list[int], src: str = "src",
     expands the CURRENT frontier only (never re-expands settled nodes —
     the anti-join guarantees every node joins edges exactly once over
     the whole run), min-distance semantics fall out of first-discovery
-    order, and both accumulators are ``localCheckpoint``ed per round so
-    the lineage stays flat. The empty-frontier early exit is a scalar
-    driver probe (the documented legitimate collect class). Rounds =
-    graph diameter ∧ ``max_hops``; each is one join + distinct +
-    anti-join shuffle on the node id."""
+    order, and both accumulators are materialized per round (flat
+    lineage; each released once superseded). The frontier's size is
+    observed in the same job, so the empty-frontier exit costs no probe
+    job. Rounds = graph diameter ∧ ``max_hops``; each is one join +
+    distinct + anti-join shuffle on the node id."""
     spark = edges.sparkSession
-    bidir = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-             .unionByName(edges.select(F.col(dst).alias("u"),
-                                       F.col(src).alias("v")))
-             .distinct().localCheckpoint())
+    bidir, _ = materialize(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .unionByName(edges.select(F.col(dst).alias("u"),
+                                  F.col(src).alias("v")))
+        .distinct())
     dist = spark.createDataFrame([(int(s), 0) for s in seeds],
                                  "id long, hops int")
     frontier = dist.select("id")
     for i in range(1, max_hops + 1):
-        nxt = (frontier.join(bidir, frontier.id == bidir.u)
-               .select(F.col("v").alias("id")).distinct()
-               .join(dist.select("id"), "id", "left_anti")
-               .withColumn("hops", F.lit(i).cast("int"))
-               .localCheckpoint())
-        if not nxt.take(1):
-            break
-        dist = dist.unionByName(nxt).localCheckpoint()
+        nxt, m = materialize(
+            frontier.join(bidir, frontier.id == bidir.u)
+            .select(F.col("v").alias("id")).distinct()
+            .join(dist.select("id"), "id", "left_anti")
+            .withColumn("hops", F.lit(i).cast("int")),
+            n=F.count(F.lit(1)))
+        release(frontier)
         frontier = nxt.select("id")
+        if not m["n"]:
+            break
+        grown, _ = materialize(dist.unionByName(nxt))
+        release(dist)
+        dist = grown
+    release(frontier, bidir)
     return dist
 
 
@@ -178,23 +192,18 @@ def local_clustering(edges: DataFrame, src: str = "src",
     aggregates for its smallest vertex: spam/link-farm neighborhoods
     score near 1, tree-like citation frontiers near 0.
 
-    Same oriented low→high 3-way self-join as `triangle_count` (each
-    triangle materialized once), then every triangle credits ALL THREE
-    corners via an explode — no per-corner re-join. Degrees come from
-    one stub aggregation on the oriented edge list. Scale: the wedge
-    join dominates (Σ deg²); the explode adds 3 rows per triangle,
-    shuffled once on node id.
+    Same oriented low→high 3-way self-join over the same materialized
+    edge table as `triangle_count` (each triangle found once), then every
+    triangle credits ALL THREE corners via an explode — no per-corner
+    re-join. Degrees come from one stub aggregation on the oriented edge
+    list. Scale: the wedge join dominates (Σ deg²); the explode adds 3
+    rows per triangle, shuffled once on node id.
     """
-    e = (edges.select(F.least(F.col(src), F.col(dst)).alias("u"),
-                      F.greatest(F.col(src), F.col(dst)).alias("v"))
-         .filter(F.col("u") < F.col("v")).distinct().persist())
+    e, _ = materialize(_oriented(edges, src, dst))
     deg = (e.select(F.col("u").alias("node"))
            .unionByName(e.select(F.col("v").alias("node")))
            .groupBy("node").agg(F.count(F.lit(1)).alias("degree")))
-    e1 = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
-    e2 = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
-    e3 = e.select(F.col("u").alias("a"), F.col("v").alias("c"))
-    tri_nodes = (e1.join(e2, "b").join(e3, ["a", "c"])
+    tri_nodes = (_triangles(e)
                  .select(F.explode(F.array("a", "b", "c")).alias("node"))
                  .groupBy("node")
                  .agg(F.count(F.lit(1)).alias("n_triangles")))
@@ -220,26 +229,29 @@ def k_core(edges: DataFrame, k: int, src: str = "src",
     tree-like citation fringes peel away (complements `local_clustering`
     which scores density but never removes the fringe).
 
-    Fixed ``n_iter`` peeling rounds (a fixpoint is stable under extra
-    rounds, so a converged run is unaffected by the cap — same device
-    as the CC star loops). Per round: ONE stub aggregation for degrees
-    + two semi-joins keeping edges whose BOTH endpoints survive;
-    ``localCheckpoint`` per round keeps the lineage flat. Scale: every
-    step shuffles only node ids / edge keys, never payloads; rounds
-    bounded by the cap, each strictly shrinking the edge set.
+    At most ``n_iter`` peeling rounds. Per round: ONE stub aggregation
+    for degrees + two semi-joins keeping edges whose BOTH endpoints
+    survive, materialized (flat lineage) with its edge count observed in
+    the same job; the previous round's edges are released. A round that
+    peels no edge is the fixpoint and ends the loop. Scale: every step
+    shuffles only node ids / edge keys, never payloads; rounds bounded
+    by the cap, each strictly shrinking the edge set.
     """
-    e = (edges.select(F.least(F.col(src), F.col(dst)).alias("u"),
-                      F.greatest(F.col(src), F.col(dst)).alias("v"))
-         .filter(F.col("u") < F.col("v")).distinct()
-         .localCheckpoint(eager=True))
+    e, m = materialize(_oriented(edges, src, dst), n=F.count(F.lit(1)))
     for _ in range(n_iter):
+        n = m["n"]
         deg = (e.select(F.col("u").alias("node"))
                .unionByName(e.select(F.col("v").alias("node")))
                .groupBy("node").agg(F.count(F.lit(1)).alias("dg"))
                .filter(F.col("dg") >= k))
-        e = (e.join(deg.select(F.col("node").alias("u")), "u", "semi")
-             .join(deg.select(F.col("node").alias("v")), "v", "semi")
-             .localCheckpoint(eager=True))
+        peeled, m = materialize(
+            e.join(deg.select(F.col("node").alias("u")), "u", "semi")
+            .join(deg.select(F.col("node").alias("v")), "v", "semi"),
+            n=F.count(F.lit(1)))
+        release(e)
+        e = peeled
+        if m["n"] == n:
+            break
     return (e.select(F.col("u").alias("node"))
             .unionByName(e.select(F.col("v").alias("node")))
             .groupBy("node")
@@ -257,11 +269,13 @@ def reciprocity(edges: DataFrame, src: str = "src",
 
     ONE scalar row: (n_edges, n_reciprocal, reciprocity). The check
     is a self semi-join on the flipped key — no explode, no pairs
-    materialized."""
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .filter(F.col(src).isNotNull() & F.col(dst).isNotNull()
-                 & (F.col(src) != F.col(dst)))
-         .distinct().persist())
+    materialized; only the edge table is, as both semi-join sides, the
+    edge count and the result read it."""
+    e, _ = materialize(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .filter(F.col(src).isNotNull() & F.col(dst).isNotNull()
+                & (F.col(src) != F.col(dst)))
+        .distinct())
     flipped = e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     recip = e.join(flipped, ["u", "v"], "semi")
     agg = (e.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))

@@ -49,13 +49,6 @@ FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def read_binary_dir(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """L5 source: ``binaryFile`` scan → (path, modificationTime, length,
-    content). Path/length predicates push down; content is lazily read."""
-    return (spark.read.format("binaryFile")
-            .option("pathGlobFilter", glob).load(path))
-
-
 def synthesize_media(spark: SparkSession, n: int = 64, seed: int = 42,
                      key_mod: int | None = None) -> DataFrame:
     """Deterministic fake media table for tests (no codec libs in container):

@@ -34,13 +34,6 @@ def project(df: DataFrame, *cols: str | Column) -> DataFrame:
     return df.select(*cols)
 
 
-def drop_columns(df: DataFrame, *cols: str) -> DataFrame:
-    """P2: schema narrowing as a pipeline step (``ALTER TABLE ... DROP COLUMN
-    abstract``, ``process_publications_dag.py:110-117``). In a columnar
-    engine this is free at read time; persisting it is a table rewrite."""
-    return df.drop(*cols)
-
-
 # ------------------------------------------------------------------- filters
 
 def filter_rows(df: DataFrame, predicate: Column) -> DataFrame:
@@ -137,19 +130,6 @@ def having(df: DataFrame, keys: list[str], agg: Column, post_filter: Column) -> 
     exactly like SQL ``COUNT(doi)`` — the NULL-key group can never be flagged
     (SURVEY §1.3)."""
     return df.groupBy(*keys).agg(agg).filter(post_filter)
-
-
-def profile_stats(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
-    """A9 EXT: one-pass multi-stat profile generalizing the reference's
-    validation counters (``process_publications_dag.py:497-514``)."""
-    return df.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.round(F.sum(value_col), 2).alias("sum_val"),
-        F.round(F.avg(value_col), 2).alias("avg_val"),
-        F.min(value_col).alias("min_val"),
-        F.max(value_col).alias("max_val"),
-        F.approx_count_distinct(value_col).alias("approx_distinct_val"),
-    )
 
 
 # ------------------------------------------------------------ sorts / limits

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 DEFAULT_LG_K = 12  # ~1.6% relative standard error, 4 KiB per sketch
 
 
@@ -613,18 +615,17 @@ def hdr_quantile_report(df: DataFrame, cents_col, m_bits: int = 5,
     histogram in one partition; n and the probe thresholds ride as 1-row
     broadcasts."""
     col = F.col(cents_col) if isinstance(cents_col, str) else cents_col
-    c = (df.select(col.alias("__c")).filter(F.col("__c") > 0)
-         .localCheckpoint())
+    c, _ = materialize(df.select(col.alias("__c")).filter(F.col("__c") > 0))
     n = c.agg(F.count(F.lit(1)).cast("long").alias("__n"))
     two_m = 1 << m_bits
     e = F.floor(F.log2(F.col("__c").cast("double"))).cast("long")
-    bk = (c.select(e.alias("__e"),
-                   (F.expr(f"(__c * {two_m}) div "
-                           f"cast(pow(2.0d, floor(log2(cast(__c as "
-                           f"double)))) as bigint)")
-                    - two_m).alias("__s"))
-          .groupBy("__e", "__s").agg(F.count(F.lit(1)).alias("__cnt"))
-          .localCheckpoint())
+    bk, _ = materialize(
+        c.select(e.alias("__e"),
+                 (F.expr(f"(__c * {two_m}) div "
+                         f"cast(pow(2.0d, floor(log2(cast(__c as "
+                         f"double)))) as bigint)")
+                  - two_m).alias("__s"))
+        .groupBy("__e", "__s").agg(F.count(F.lit(1)).alias("__cnt")))
     nbuck = bk.agg(F.count(F.lit(1)).cast("long").alias("n_buckets"))
     wcum = (Window.orderBy("__e", "__s")
             .rowsBetween(Window.unboundedPreceding, 0))

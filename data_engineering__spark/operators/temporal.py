@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 
 def asof_join(left: DataFrame, right: DataFrame, ts_col: str,
               partition_cols: list[str], right_cols: list[str],
@@ -428,15 +430,15 @@ def periodogram_counts(df: DataFrame, ts_col: str,
                 .groupBy("__h").agg(F.count(F.lit(1)).alias("__c")))
     anchor = counts.agg(F.min("__h").alias("__h0"),
                         F.max("__h").alias("__h1"))
-    grid = (anchor.select(
-        F.explode(F.sequence(F.lit(0),
-                             (F.col("__h1") - F.col("__h0")).cast("long")))
-        .alias("__i"), F.col("__h0"))
+    grid, _ = materialize(
+        anchor.select(
+            F.explode(F.sequence(F.lit(0),
+                                 (F.col("__h1") - F.col("__h0")).cast("long")))
+            .alias("__i"), F.col("__h0"))
         .join(counts,
               F.col("__h") == F.col("__i") + F.col("__h0"), "left")
         .select("__i", F.coalesce(F.col("__c"), F.lit(0)).cast("long")
-                .alias("__x"))
-        .localCheckpoint())
+                .alias("__x")))
     glob = grid.agg(
         F.count(F.lit(1)).cast("long").alias("__n"),
         F.sum("__x").cast("long").alias("__S"),
@@ -494,16 +496,16 @@ def pettitt_changepoint(df: DataFrame, ts_col: str,
                 .groupBy("__h").agg(F.count(F.lit(1)).alias("__c")))
     anchor = counts.agg(F.min("__h").alias("__h0"),
                         F.max("__h").alias("__h1"))
-    grid = (anchor.select(
-        F.explode(F.sequence(F.lit(0),
-                             (F.col("__h1") - F.col("__h0")).cast("long")))
-        .alias("__i"), F.col("__h0"))
+    grid, _ = materialize(
+        anchor.select(
+            F.explode(F.sequence(F.lit(0),
+                                 (F.col("__h1") - F.col("__h0")).cast("long")))
+            .alias("__i"), F.col("__h0"))
         .join(counts,
               F.col("__h") == F.col("__i") + F.col("__h0"), "left")
         .select((F.col("__i") + 1).alias("__t"),
                 F.coalesce(F.col("__c"), F.lit(0)).cast("long")
-                .alias("__x"))
-        .localCheckpoint())
+                .alias("__x")))
     hist = grid.groupBy("__x").agg(F.count(F.lit(1)).alias("__hc"))
     wv = Window.orderBy("__x").rowsBetween(Window.unboundedPreceding, 0)
     m2 = (hist.withColumn("__cum", F.sum("__hc").over(wv))

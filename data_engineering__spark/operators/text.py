@@ -12,6 +12,8 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 # Tiny per-language stopword lists for the n-gram/stopword-ratio heuristic.
 # Deliberately small: language ID at 100 TB must stay in codegen; a real
 # deployment would swap in fastText via mapInPandas (see lang_id_pandas stub).
@@ -64,10 +66,6 @@ def bpe_ish_token_count(text_col: str) -> Column:
     letter runs | digit runs | non-space-non-alnum runs)."""
     pieces = F.regexp_extract_all(F.col(text_col), F.lit(r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]+"), 0)
     return F.size(pieces)
-
-
-def char_count(text_col: str) -> Column:
-    return F.length(F.col(text_col))
 
 
 def stopword_ratio(text_col: str, lang: str) -> Column:
@@ -252,12 +250,12 @@ def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str,
     carry (id, term, count) rows, not document bodies.
     """
     toks = (df.select(F.col(id_col), F.explode(tokens(text_col)).alias("term")))
-    # localCheckpoint: three consumers (scores join, df, N) read the
+    # materialize: three consumers (scores join, df, N) read the
     # materialized tf table — without it each branch re-runs the corpus
     # explode (column pruning makes the subtrees non-identical, so
     # exchange reuse can't dedupe them)
-    tf = (toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-          .localCheckpoint())
+    tf, _ = materialize(
+        toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = tf.agg(F.count_distinct(F.col(id_col)).alias("n"))
     scored = (tf.join(dfreq, "term")
@@ -283,12 +281,12 @@ def token_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     Scale: explode → (id, term) hash agg → (id) hash agg; both shuffles
     carry counted token rows, never bodies; docs with zero tokens drop
     (no distribution to measure)."""
-    # localCheckpoint: both consumers (per-doc totals, the p·ln p join)
+    # materialize: both consumers (per-doc totals, the p·ln p join)
     # read the materialized (id, term, c) table instead of re-running
     # the corpus explode per branch
-    tf = (df.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
-          .groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("c"))
-          .localCheckpoint())
+    tf, _ = materialize(
+        df.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
+        .groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("c")))
     tot = tf.groupBy(id_col).agg(F.sum("c").alias("t"))
     p = F.col("c").cast("double") / F.col("t")
     return (tf.join(tot, id_col)
@@ -1022,7 +1020,7 @@ def tfidf_cosine_pairs(df: DataFrame, id_col: str, text_col: str,
     pinned by test). idf = ln(N/df) with N = docs having ≥1 token
     (pre-cap), w = tf·idf.
 
-    Scale shape: explode → ONE (id, term) hash agg (localCheckpoint — the
+    Scale shape: explode → ONE (id, term) hash agg (materialized — the
     postings, norms and df branches all reuse it); df/N derive from that
     tf table without re-scanning the corpus; the pair join shuffles
     (term, id, w) postings whose per-term width the cap bounds (bounding
@@ -1032,17 +1030,17 @@ def tfidf_cosine_pairs(df: DataFrame, id_col: str, text_col: str,
     ~linear in corpus size."""
     toks = df.select(F.col(id_col).alias("__id"),
                      F.explode(tokens(text_col)).alias("__t"))
-    tf = (toks.groupBy("__id", "__t").agg(F.count(F.lit(1)).alias("__tf"))
-          .localCheckpoint())
+    tf, _ = materialize(
+        toks.groupBy("__id", "__t").agg(F.count(F.lit(1)).alias("__tf")))
     n = tf.agg(F.count_distinct("__id").alias("__n"))
     dfreq = (tf.groupBy("__t").agg(F.count(F.lit(1)).alias("__df"))
              .filter((F.col("__df") >= 2) & (F.col("__df") <= max_df)))
-    w = (tf.join(dfreq, "__t").crossJoin(F.broadcast(n))
-         .select("__id", "__t",
-                 (F.col("__tf").cast("double")
-                  * F.log(F.col("__n").cast("double")
-                          / F.col("__df").cast("double"))).alias("__w"))
-         .localCheckpoint())
+    w, _ = materialize(
+        tf.join(dfreq, "__t").crossJoin(F.broadcast(n))
+        .select("__id", "__t",
+                (F.col("__tf").cast("double")
+                 * F.log(F.col("__n").cast("double")
+                         / F.col("__df").cast("double"))).alias("__w")))
     norms = w.groupBy("__id").agg(F.sum(F.col("__w") * F.col("__w"))
                                   .alias("__s2"))
     a, b = w.alias("a"), w.alias("b")
@@ -1080,7 +1078,7 @@ def lm_score_docs(df: DataFrame, id_col: str, text_col: str,
 
     Scale shape: ONE posexplode of the corpus; per-doc lag window
     (partition = doc, bounded by doc length — never global) produces the
-    bigram stream, localCheckpointed and reused by BOTH the LM-count
+    bigram stream, materialized and reused by BOTH the LM-count
     branch and the scoring join, so the corpus explodes once; LM tables
     are (w₁,w₂)- and w₁-grain hash aggs; scoring is a hash join on the
     bigram key followed by a doc-grain agg. Token/bigram rows shuffle,
@@ -1090,18 +1088,18 @@ def lm_score_docs(df: DataFrame, id_col: str, text_col: str,
                      F.posexplode(tokens(text_col))
                      .alias("__pos", "__w"))
     wd = Window.partitionBy("__id").orderBy("__pos")
-    big = (toks.select("__id",
-                       F.lag("__w").over(wd).alias("__w1"),
-                       F.col("__w").alias("__w2"))
-           .filter(F.col("__w1").isNotNull())
-           .localCheckpoint())
+    big, _ = materialize(
+        toks.select("__id",
+                    F.lag("__w").over(wd).alias("__w1"),
+                    F.col("__w").alias("__w2"))
+        .filter(F.col("__w1").isNotNull()))
     lm2 = (big.groupBy("__w1", "__w2")
            .agg(F.count(F.lit(1)).alias("__c12"))
            .filter(F.col("__c12") >= min_bigram_count))
     # unigram counts / total over ALL tokens (not just bigram starts)
-    uni = (toks.groupBy(F.col("__w").alias("__u"))
-           .agg(F.count(F.lit(1)).alias("__c1"))
-           .localCheckpoint())
+    uni, _ = materialize(
+        toks.groupBy(F.col("__w").alias("__u"))
+        .agg(F.count(F.lit(1)).alias("__c1")))
     tot = uni.agg(F.sum("__c1").alias("__tot"))
     c1_of_w1 = uni.select(F.col("__u").alias("__w1"),
                           F.col("__c1").alias("__cw1"))
@@ -1167,14 +1165,14 @@ def rake_keyphrases(df: DataFrame, text_col: str, k: int = 25,
         toks, lambda t: F.when(t.isin(*RAKE_STOPWORDS), F.lit("|"))
                          .otherwise(t))
     phrases_arr = F.split(F.array_join(marked, " "), r"\|")
-    phr = (df.select(F.explode(phrases_arr).alias("__raw"))
-           .select(F.trim(F.col("__raw")).alias("phrase"))
-           .filter(F.col("phrase") != "")
-           .localCheckpoint())
-    inst_words = (phr.select(
-        "phrase", F.size(F.split(F.col("phrase"), " ")).alias("__len"),
-        F.explode(F.split(F.col("phrase"), " ")).alias("__w"))
-        .localCheckpoint())
+    phr, _ = materialize(
+        df.select(F.explode(phrases_arr).alias("__raw"))
+        .select(F.trim(F.col("__raw")).alias("phrase"))
+        .filter(F.col("phrase") != ""))
+    inst_words, _ = materialize(
+        phr.select(
+            "phrase", F.size(F.split(F.col("phrase"), " ")).alias("__len"),
+            F.explode(F.split(F.col("phrase"), " ")).alias("__w")))
     wstat = (inst_words.groupBy("__w")
              .agg(F.count(F.lit(1)).alias("__freq"),
                   F.sum("__len").alias("__deg")))

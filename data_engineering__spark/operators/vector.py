@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Σ aᵢbᵢ as a codegen fold (sequential, deterministic order)."""
@@ -874,11 +876,12 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
     # r11 (guide §2.4): the assign kernel carries the vector through —
     # the (id, cell) ⋈ (id, vec) corpus self-join is gone; placement is
     # ONE map-side pass.
-    # localCheckpoint: the (id, cell, vec) table feeds BOTH self-join
+    # materialize: the (id, cell, vec) table feeds BOTH self-join
     # sides and the survivor projection — without the cut each consumer
     # re-runs the corpus scan + Arrow assignment (was 10 scans)
-    placed = (kmeans_assign(df, cents, id_col, vec_col, keep_vec=True)
-              .withColumnRenamed(vec_col, "__v").localCheckpoint())
+    placed, _ = materialize(
+        kmeans_assign(df, cents, id_col, vec_col, keep_vec=True)
+        .withColumnRenamed(vec_col, "__v"))
     x = placed.select(F.col("cell"), F.col(id_col).alias("__ida"),
                       F.col("__v").alias("__va"))
     y = placed.select(F.col("cell"), F.col(id_col).alias("__idb"),
@@ -1465,16 +1468,16 @@ def ivf_nprobe_curve(candidates: DataFrame, queries: DataFrame,
     # r11 (guide §4.2): the corpus × anchors scoring grid runs as ONE
     # map-side Arrow kernel (sequential-fold-exact cosine) instead of a
     # broadcast nested-loop join with interpreted folds per pair.
-    pairs = (cos_grid_pandas(
-                 assign.select(F.col(id_col).alias("__id"),
-                               F.col(vec_col).alias("__v"), F.col("cell")),
-                 q, lid="__id", qid="__qid", l_extra=("cell",),
-                 out="__cos")
-             .join(F.broadcast(cellrank),
-                   (F.col("__qid") == F.col("__cq"))
-                   & (F.col("cell") == F.col("__cc")))
-             .select("__qid", "__id", "__cos", "__crk")
-             .localCheckpoint())
+    pairs, _ = materialize(
+        cos_grid_pandas(
+            assign.select(F.col(id_col).alias("__id"),
+                          F.col(vec_col).alias("__v"), F.col("cell")),
+            q, lid="__id", qid="__qid", l_extra=("cell",),
+            out="__cos")
+        .join(F.broadcast(cellrank),
+              (F.col("__qid") == F.col("__cq"))
+              & (F.col("cell") == F.col("__cc")))
+        .select("__qid", "__id", "__cos", "__crk"))
     wt = Window.partitionBy("__qid").orderBy(
         F.round(F.col("__cos"), 6).desc(), F.col("__id").asc())
     truth = (pairs.withColumn("__rn", F.row_number().over(wt))

@@ -24,11 +24,12 @@ from pyspark.sql import functions as F
 from collections.abc import Callable
 
 from ..functions.derive import case_when_contains
-from ..operators.dedup import dedup_by_key, materialize
+from ..operators.dedup import dedup_by_key
 from ..operators.merge import assign_ids, dim_upsert, upsert_merge
 from ..operators.quality import audit_diff, check, duplicate_key_audit
 from ..operators.relational import min_trimmed_length
 from ..operators.window import topk_per_group
+from ..session import materialize
 
 #: Ordered bibtex keyword → publication type (process_publications_dag.py:271-304).
 #: ORDER MATTERS: '@article' before '@inproceedings'; specific thesis forms

@@ -10,13 +10,14 @@ Scale posture (tested on local[*], designed for a 1000-executor cluster):
   and dynamic broadcast conversion replace hand-tuned partition counts.
 - Arrow on: any unavoidable Python execution is Arrow-batched, never row-wise.
 - Session timezone pinned to UTC so timestamp semantics are cluster-invariant.
+- One materialization policy: ``materialize`` stores, ``release`` frees.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 #: Confs applied at session build (``get_spark()``) and again by ``tune()``
 #: to ANY session we are handed (the driver owns session creation in
@@ -73,3 +74,45 @@ def get_spark(app_name: str = "data_engineering__spark", master: str | None = No
     builder = builder.config("spark.ui.enabled", "false")
     spark = builder.getOrCreate()
     return tune(spark)
+
+
+def materialize(df: DataFrame, **observed: Column) -> tuple[DataFrame, dict]:
+    """Compute ``df`` once and return it with its plan truncated, plus the
+    1-row scalars ``observed`` (name → aggregate Column) read in the SAME
+    job: ``(frame, {name: value})``; an empty frame gives NULL aggregates.
+
+    The one materialization policy for iterative loops and multi-action
+    DAGs. Every action re-analyzes, re-optimizes and re-plans its whole
+    logical tree — ``persist`` stores blocks but keeps the tree, so a loop
+    whose rounds reference the last round's persisted frame grows its
+    plan (and the driver time to plan it) every round. An eager
+    ``localCheckpoint`` replaces the tree with a scan of the stored
+    blocks, and the observed aggregates (a convergence sum, a row count,
+    an id watermark) ride that job instead of costing a probe job of
+    their own. Blocks live in executor storage; a cluster that needs
+    lineage-based recovery swaps in a reliable ``checkpoint()``.
+
+    The blocks stay until ``release``: ``DataFrame.unpersist`` does not
+    free a local checkpoint."""
+    if not observed:
+        return df.localCheckpoint(eager=True), {}
+    obs = Observation()
+    cp = df.observe(obs, *[c.alias(k) for k, c in observed.items()]) \
+           .localCheckpoint(eager=True)
+    return cp, obs.get
+
+
+def release(*dfs: DataFrame) -> None:
+    """Free the stored blocks each of ``dfs`` reads: the RDD of every
+    ``LogicalRDD`` leaf of its plan — a ``materialize`` result, or a frame
+    derived from one (a loop's returned labels or ranks), including any
+    stored input that frame reads. Nothing may read those frames, or any
+    other frame over the same blocks, afterwards."""
+    for df in dfs:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        for leaf in map(leaves.apply, range(leaves.size())):
+            if leaf.getClass().getSimpleName() == "LogicalRDD":
+                # what RDD.unpersist calls, minus its per-call warning
+                # that a local checkpoint's lineage is gone
+                df.sparkSession.sparkContext._jsc.sc().unpersistRDD(
+                    leaf.rdd().id(), False)

@@ -34,8 +34,6 @@ COLLECT_ALLOWLIST = {
     ("operators/analytics.py", "markov_stationary"):
         (1, "|states|^2 transition matrix (event-type vocabulary, not "
             "rows) — driver power iteration, markov_attribution precedent"),
-    ("operators/analytics.py", "funnel_within"):
-        (1, "k-row funnel-step counts (k = number of steps)"),
     ("operators/merge.py", "assign_ids"):
         (1, "per-partition count map (numPartitions rows)"),
     ("operators/merge.py", "dim_upsert"):
@@ -51,6 +49,25 @@ COLLECT_ALLOWLIST = {
         (1, "the query frame's vectors for the ADC lookup table (one "
             "query by contract; the first row is used)"),
 }
+
+# (module-relative path, enclosing function) ->
+#     (expected site COUNT, why the frame is stored by hand).
+# Every other stored intermediate goes through ``session.materialize`` and
+# is freed by ``session.release``; these three are lazy persists, which
+# ``materialize`` (always an eager checkpoint) does not replace.
+STORE_ALLOWLIST = {
+    ("operators/merge.py", "assign_ids"):
+        (1, "correctness: the range boundaries are sampled per run, so the "
+            "count pass and the id pass must read the same stored rows"),
+    ("operators/dedup.py", "containment_pairs"):
+        (1, "the pair frame shared by the exact and dirty branches: lazy "
+            "measured faster than an eager checkpoint's write barrier"),
+    ("plans/pipeline.py", "run_pipeline"):
+        (1, "the cleaned publications hub on the ETL path, read by every "
+            "later stage"),
+}
+STORE_CALLS = ("localCheckpoint", "persist", "cache", "checkpoint",
+               "unpersist")
 
 
 def _calls(n, attr):
@@ -104,6 +121,9 @@ def _scan():
                     if (isinstance(fn, ast.Attribute) and fn.attr == "udf") \
                             or (isinstance(fn, ast.Name) and fn.id == "udf"):
                         hits.append(("udf", rel, self.stack[-1], n.lineno))
+                    if (isinstance(fn, ast.Attribute) and fn.attr in STORE_CALLS
+                            and rel != "session.py"):
+                        hits.append(("store", rel, self.stack[-1], n.lineno))
                     if _is_column_tokenizer(n):
                         hits.append(("tok_col", rel, self.stack[-1], n.lineno))
                     if _is_python_tokenizer(n):
@@ -152,3 +172,18 @@ def test_one_tokenizer_column_and_python():
     py = [(h[1], h[2]) for h in hits if h[0] == "tok_py"]
     assert col == [("operators/text.py", "tokens")], col
     assert py == [("operators/text.py", "py_tokens")], py
+
+
+def test_one_materialization_policy():
+    """``session.materialize``/``release`` own every stored intermediate:
+    outside ``session.py`` no code checkpoints, persists, caches or
+    unpersists by hand, except the allowlisted lazy persists, pinned by
+    count. A hand-rolled ``localCheckpoint`` is never freed
+    (``unpersist`` is a no-op on it), and a probe job after it is a
+    scalar ``materialize`` observes in the same job."""
+    from collections import Counter
+    live = Counter((h[1], h[2]) for h in _scan() if h[0] == "store")
+    want = {k: n for k, (n, _why) in STORE_ALLOWLIST.items()}
+    assert dict(live) == want, (
+        "stored-intermediate sites drifted (live vs allowlist) — route the "
+        f"site through session.materialize/release: {dict(live)}")

@@ -5,6 +5,7 @@ jobs, so we buy breadth with distinct properties, not example count."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
@@ -191,36 +192,112 @@ def test_minhash_cc_chained_duplicate_corpus(spark, sf_dir):
 def test_cc_star_chain_rounds_logarithmic(spark):
     """Star contraction's raison d'être: an L-node path converges in
     O(log L) rounds where label propagation needs ~L-1 — verify on a
-    64-node chain (label propagation would need ~63 rounds)."""
+    64-node chain with monotone and with shuffled ids (label propagation
+    would need ~63 and ~45 rounds)."""
     from data_engineering__spark.operators.dedup import connected_components_star
 
-    edges = [(i, i + 1) for i in range(63)]
-    df = spark.createDataFrame([{"id_a": a, "id_b": b} for a, b in edges])
-    stats = {}
-    got = {r.id: r.component
-           for r in connected_components_star(df, stats=stats).collect()}
-    assert got == {i: 0 for i in range(64)}
-    assert stats["rounds"] <= 10, stats   # ~log2(64)=6 + confirm rounds
+    import random
+
+    ids = list(range(64))
+    random.Random(7).shuffle(ids)
+    # the monotone path, then the same path over shuffled ids (where
+    # min-label propagation needs ~45 rounds and pointer jumping gains
+    # about one step a round)
+    for order in (list(range(64)), ids):
+        df = spark.createDataFrame([{"id_a": a, "id_b": b}
+                                    for a, b in zip(order, order[1:])])
+        stats = {}
+        got = {r.id: r.component
+               for r in connected_components_star(df, stats=stats).collect()}
+        assert got == {i: 0 for i in range(64)}
+        assert stats["rounds"] <= 10, stats   # ~log2(64)=6 + confirm rounds
 
 
-def test_cc_engines_release_their_intermediates(spark):
-    """Both CC engines free every round's stored frame: after a run, the
-    persistent RDD set grows by at most the one RDD behind the returned
-    labels. ``DataFrame.unpersist`` is a no-op on a local checkpoint, so
-    an engine that unpersists its checkpointed rounds leaks one RDD per
-    round (a 12-node chain left 3 behind, a 64-node star chain 7)."""
-    from data_engineering__spark.operators.dedup import (
-        connected_components, connected_components_star)
+def _chain(spark, n, a="id_a", b="id_b"):
+    return spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
+                                 f"{a} long, {b} long")
+
+
+def _funnel_events(spark):
+    from datetime import datetime, timedelta
+
+    t = datetime(2024, 1, 1)
+    rows = [(u, t + timedelta(hours=h), e) for u in range(6)
+            for h, e in [(0, "view"), (1 + u % 3, "click"),
+                         (5 + u % 2, "purchase")]]
+    return spark.createDataFrame(
+        rows, "user_id long, ts timestamp, event_type string")
+
+
+def _loop_cases():
+    from data_engineering__spark.operators import analytics as A
+    from data_engineering__spark.operators import dedup as D
+    from data_engineering__spark.operators import graph as G
+
+    def k_core(spark):
+        # a 4-clique with a 6-node tail: k=3 peels one tail node a round
+        clique = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+        tail = [(i, i + 1) for i in range(3, 9)]
+        return G.k_core(spark.createDataFrame(clique + tail,
+                                              "src long, dst long"), k=3)
+
+    steps = ["view", "click", "purchase"]
+    return {
+        "bfs_hops": lambda s: G.bfs_hops(_chain(s, 12, "src", "dst"), [0],
+                                         max_hops=20),
+        "k_core": k_core,
+        "pagerank": lambda s: G.pagerank(_chain(s, 6, "src", "dst"),
+                                         n_iter=4),
+        "conversion_funnel": lambda s: A.conversion_funnel(
+            _funnel_events(s), steps),
+        "funnel_gap_stats": lambda s: A.funnel_gap_stats(
+            _funnel_events(s), steps),
+        "funnel_within": lambda s: A.funnel_within(
+            _funnel_events(s), steps, 3 * 3600),
+        "connected_components": lambda s: D.connected_components(
+            _chain(s, 12)),
+        "connected_components_star": lambda s: D.connected_components_star(
+            _chain(s, 64)),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_loop_cases()))
+def test_loop_operators_release_their_intermediates(spark, op):
+    """Every iterative operator frees each round it has finished with:
+    after a run, the persistent RDD set grows by at most the one RDD
+    behind the returned frame, and ``session.release`` of that frame
+    frees it. ``DataFrame.unpersist`` is a no-op on a local checkpoint,
+    so an operator that unpersists or forgets its checkpointed rounds
+    leaks one RDD per round (a 12-node chain left 3 behind in
+    ``connected_components``, and ``bfs_hops`` one per hop)."""
+    from data_engineering__spark.session import release
 
     jsc = spark.sparkContext._jsc
-    for cc, n in [(connected_components, 12), (connected_components_star, 64)]:
-        df = spark.createDataFrame([{"id_a": i, "id_b": i + 1}
-                                    for i in range(n - 1)])
-        before = jsc.getPersistentRDDs().size()
-        got = {r.id: r.component for r in cc(df).collect()}
-        assert got == {i: 0 for i in range(n)}, cc.__name__
-        grew = jsc.getPersistentRDDs().size() - before
-        assert grew <= 1, (cc.__name__, grew)
+    before = jsc.getPersistentRDDs().size()
+    out = _loop_cases()[op](spark)
+    assert out.collect()
+    grew = jsc.getPersistentRDDs().size() - before
+    assert grew <= 1, (op, grew)
+    release(out)
+    assert jsc.getPersistentRDDs().size() <= before, op
+
+
+@pytest.mark.parametrize("key", ["minhash_cc_dedup", "supplier_er_clusters"])
+def test_release_frees_the_stored_rdd_a_cc_result_reads(spark, sf_dir, key):
+    """A near-dup closure's result reads the stored labels of its last
+    CC round; ``session.release`` on the collected result walks the
+    plan's leaves and frees that RDD, which ``unpersist`` and
+    ``clearCache`` cannot."""
+    from data_engineering__spark.conformance import QUERIES
+    from data_engineering__spark.session import release
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    out = QUERIES[key](spark, sf_dir)
+    out.collect()
+    assert jsc.getPersistentRDDs().size() - before == 1
+    release(out)
+    assert jsc.getPersistentRDDs().size() <= before
 
 
 def test_cc_reports_convergence(spark):
