@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import materialize, release
+from .window import order_stats, scan_tree
 
 WEEK_SECONDS = 7 * 86400
 
@@ -150,37 +151,18 @@ def winsorized_stats(df: DataFrame, group_cols: list[str],
     is engine- and partition-invariant.
 
     Scale shape: raw rows collapse to a per-(group, value) HISTOGRAM
-    first (one shuffle, partial counts fold map-side) — the cumulative
-    window then runs over distinct values per group, typically orders of
-    magnitude smaller than the data, instead of a per-row rank window
-    that would serialize each group. Thresholds broadcast back onto the
-    histogram, never onto raw rows."""
+    first (one shuffle, partial counts fold map-side) — the
+    ``window.order_stats`` cumulative window then runs over distinct
+    values per group, typically orders of magnitude smaller than the
+    data, instead of a per-row rank window that would serialize each
+    group. Thresholds broadcast back onto the histogram, never onto raw
+    rows."""
     g = [F.col(c) for c in group_cols]
     hist = (df.select(*g, value_int.cast("long").alias("__v"))
             .groupBy(*group_cols, "__v")
             .agg(F.count(F.lit(1)).alias("__c")))
-    w = (Window.partitionBy(*group_cols).orderBy(F.col("__v").asc())
-         .rowsBetween(Window.unboundedPreceding, 0))
-    cum = hist.withColumn("__cum", F.sum("__c").over(w))
-    totals = (hist.groupBy(*group_cols)
-              .agg(F.sum("__c").alias("__n")))
-    ln, ld = p_lo
-    hn, hd = p_hi
-    ks = totals.select(
-        *group_cols, "__n",
-        # ceil(n * num / den) in pure INTEGER arithmetic (DIV — a float
-        # divide + CAST truncates in Spark but rounds in a DuckDB CAST)
-        F.expr(f"CAST((__n * {ln} + {ld - 1}) DIV {ld} AS BIGINT)")
-         .alias("__k_lo"),
-        F.expr(f"CAST((__n * {hn} + {hd - 1}) DIV {hd} AS BIGINT)")
-         .alias("__k_hi"))
-    both = cum.join(ks, group_cols)
-    thr = (both.groupBy(*group_cols)
-           .agg(F.max("__n").alias("n"),
-                F.min(F.when(F.col("__cum") >= F.col("__k_lo"),
-                             F.col("__v"))).alias("lo"),
-                F.min(F.when(F.col("__cum") >= F.col("__k_hi"),
-                             F.col("__v"))).alias("hi")))
+    thr = (order_stats(hist, group_cols, lo=p_lo, hi=p_hi)
+           .withColumnRenamed("__n", "n"))
     rep = (hist.join(thr, group_cols)
            .groupBy(*group_cols)
            .agg(F.max("n").cast("long").alias("n"),
@@ -367,38 +349,13 @@ def exact_quantiles(df: DataFrame, value_int, qs: list[tuple[int, int]],
 
     Scale shape (100 TB): raw rows collapse to a VALUE HISTOGRAM (one
     shuffle; partial counts fold map-side), the global cumulative count
-    is the classic two-level scan tree over value-range buckets — bucket
-    totals (tiny) get the ordered window, within-bucket cumsums run
-    partitioned — so no window ever sees more than one bucket of
-    distinct values in one partition. The k-rank spec (|qs| rows) and
-    bucket offsets broadcast; the rank→value probe is a broadcast
-    range-join against the histogram."""
-    vals = df.select(value_int.cast("long").alias("__v")) \
-             .filter(F.col("__v").isNotNull())
-    hist = (vals.groupBy("__v").agg(F.count(F.lit(1)).alias("__c"))
-            .withColumn("__bucket", F.expr(f"__v div {bucket_width}")))
-    btot = hist.groupBy("__bucket").agg(F.sum("__c").alias("__bt"))
-    w_b = Window.orderBy("__bucket").rowsBetween(Window.unboundedPreceding, -1)
-    boff = btot.select(
-        "__bucket", F.coalesce(F.sum("__bt").over(w_b), F.lit(0)).alias("__boff"))
-    w_in = (Window.partitionBy("__bucket").orderBy("__v")
-            .rowsBetween(Window.unboundedPreceding, 0))
-    cum = (hist.join(F.broadcast(boff), "__bucket")
-           .withColumn("__cum", F.col("__boff") + F.sum("__c").over(w_in)))
-    n1 = vals.agg(F.count(F.lit(1)).alias("__n"))
-    spec = df.sparkSession.createDataFrame(
-        [(int(num), int(den)) for num, den in qs], "q_num long, q_den long")
-    ranks = (spec.crossJoin(F.broadcast(n1))
-             .select("q_num", "q_den", "__n",
-                     F.expr("CAST((__n * q_num + q_den - 1) DIV q_den "
-                            "AS BIGINT)").alias("__r")))
-    return (cum.join(F.broadcast(ranks),
-                     (F.col("__cum") >= F.col("__r"))
-                     & (F.col("__cum") - F.col("__c") < F.col("__r")))
-            .select((F.col("q_num").cast("double") / F.col("q_den"))
-                    .alias("q"),
-                    F.col("__r").alias("rank"),
-                    F.col("__v").alias("value")))
+    is ``window.scan_tree`` over value-range buckets, so no window ever
+    sees more than one bucket of distinct values in one partition. The
+    k-rank spec (|qs| rows) broadcasts; the rank→value probe is a
+    broadcast range-join against the histogram. It is
+    ``weighted_quantiles`` with unit weights."""
+    return (weighted_quantiles(df, value_int, F.lit(1), qs, bucket_width)
+            .select("q", F.col("w_rank").alias("rank"), "value"))
 
 
 #: cumulative Poisson(1) probabilities P(X <= k) for k = 0..7 — literal
@@ -1027,10 +984,9 @@ def quantile_normalize(df: DataFrame, group_cols: list[str], value_int,
     (map-side partial agg); within-group cumulative ranks run under
     windows PARTITIONED by group (a partition holds one group's
     distinct values, never raw rows); the global cumulative count uses
-    the two-level scan tree (no global sort, no single-partition
-    window); the rank→value probe is a range join against the global
-    histogram — both sides distinct-value-scale, the histogram side
-    broadcast. Integer products r·N stay in long range for N < ~3·10⁹
+    ``window.scan_tree`` (no global sort, no single-partition window);
+    the rank→value probe is a range join against the global histogram —
+    both sides distinct-value-scale, the histogram side broadcast. Integer products r·N stay in long range for N < ~3·10⁹
     rows; shard or pre-bucket beyond that."""
     vals = (df.select(*group_cols, value_int.cast("long").alias("__v"))
             .filter(F.col("__v").isNotNull()))
@@ -1041,20 +997,10 @@ def quantile_normalize(df: DataFrame, group_cols: list[str], value_int,
     w_g = (Window.partitionBy(*group_cols).orderBy("__v")
            .rowsBetween(Window.unboundedPreceding, 0))
     gcum = grid.withColumn("__gc", F.sum("__c").over(w_g).cast("long"))
-    hist = (vals.groupBy("__v").agg(F.count(F.lit(1)).alias("__hc"))
-            .withColumn("__bucket", F.expr(f"__v div {bucket_width}")))
-    btot = hist.groupBy("__bucket").agg(F.sum("__hc").alias("__bt"))
-    w_b = Window.orderBy("__bucket").rowsBetween(Window.unboundedPreceding, -1)
-    boff = btot.select(
-        "__bucket",
-        F.coalesce(F.sum("__bt").over(w_b), F.lit(0)).alias("__boff"))
-    w_in = (Window.partitionBy("__bucket").orderBy("__v")
-            .rowsBetween(Window.unboundedPreceding, 0))
-    hcum = (hist.join(F.broadcast(boff), "__bucket")
-            .select(F.col("__v").alias("__tv"), F.col("__hc").cast("long")
-                    .alias("__thc"),
-                    (F.col("__boff") + F.sum("__hc").over(w_in))
-                    .cast("long").alias("__tcum")))
+    hist = vals.groupBy("__v").agg(F.count(F.lit(1)).alias("__hc"))
+    hcum = scan_tree(hist, "__v", bucket_width, "__hc").select(
+        F.col("__v").alias("__tv"), F.col("__hc").cast("long").alias("__thc"),
+        F.col("__hc_cum").cast("long").alias("__tcum"))
     n1 = vals.agg(F.count(F.lit(1)).cast("long").alias("__n"))
     ranks = (gcum.join(ng, group_cols).crossJoin(F.broadcast(n1))
              .withColumn("__k", F.expr(
@@ -1095,34 +1041,27 @@ def weighted_quantiles(df: DataFrame, value_int, weight_int,
 
     Scale shape (100 TB): identical to ``exact_quantiles`` — rows
     collapse to a per-value WEIGHT histogram (map-side partial sums),
-    cumulative weights via the two-level scan tree, the |qs|-row rank
+    cumulative weights via ``window.scan_tree``, the |qs|-row rank
     spec broadcasts, and the rank→value probe is a broadcast range
     join. Weights must be non-negative integers; zero-weight values
     can never host a quantile (the range (cum−w, cum] is empty)."""
     vals = (df.select(value_int.cast("long").alias("__v"),
                       weight_int.cast("long").alias("__w"))
             .filter(F.col("__v").isNotNull() & F.col("__w").isNotNull()))
-    hist = (vals.groupBy("__v").agg(F.sum("__w").alias("__hw"))
-            .withColumn("__bucket", F.expr(f"__v div {bucket_width}")))
-    btot = hist.groupBy("__bucket").agg(F.sum("__hw").alias("__bt"))
-    w_b = Window.orderBy("__bucket").rowsBetween(Window.unboundedPreceding, -1)
-    boff = btot.select(
-        "__bucket",
-        F.coalesce(F.sum("__bt").over(w_b), F.lit(0)).alias("__boff"))
-    w_in = (Window.partitionBy("__bucket").orderBy("__v")
-            .rowsBetween(Window.unboundedPreceding, 0))
-    cum = (hist.join(F.broadcast(boff), "__bucket")
-           .withColumn("__cum", F.col("__boff") + F.sum("__hw").over(w_in)))
+    cum = scan_tree(vals.groupBy("__v").agg(F.sum("__w").alias("__hw")),
+                    "__v", bucket_width, "__hw")
     tot = vals.agg(F.sum("__w").alias("__tw"))
-    spec = df.sparkSession.createDataFrame(
-        [(int(num), int(den)) for num, den in qs], "q_num long, q_den long")
+    spec = df.sparkSession.range(1).select(F.inline(F.array(*[
+        F.struct(F.lit(int(num)).cast("long").alias("q_num"),
+                 F.lit(int(den)).cast("long").alias("q_den"))
+        for num, den in qs])))
     ranks = (spec.crossJoin(F.broadcast(tot))
              .select("q_num", "q_den", "__tw",
                      F.expr("CAST((__tw * q_num + q_den - 1) DIV q_den "
                             "AS BIGINT)").alias("__r")))
     return (cum.join(F.broadcast(ranks),
-                     (F.col("__cum") >= F.col("__r"))
-                     & (F.col("__cum") - F.col("__hw") < F.col("__r")))
+                     (F.col("__hw_cum") >= F.col("__r"))
+                     & (F.col("__hw_cum") - F.col("__hw") < F.col("__r")))
             .select((F.col("q_num").cast("double") / F.col("q_den"))
                     .alias("q"),
                     F.col("__r").alias("w_rank"),
@@ -1416,40 +1355,25 @@ def ks_two_sample(df: DataFrame, label_col, value_int,
 
     Scale shape: raw rows collapse to a per-(value, cohort) histogram
     (map-side partial agg — the shuffle moves distinct values, not
-    rows); cumulative counts run as a TWO-LEVEL scan tree (per-bucket
-    windows + a tiny window over bucket totals — the ``pack_sequences``
-    device, so no window ever sees the whole support in one partition);
-    the two cohort totals broadcast as a 1-row cross join; final MAX is
-    a scalar aggregate. No sort of raw data anywhere."""
-    bucket_size = 1024
+    rows); cumulative counts run through ``window.scan_tree`` (no window
+    ever sees the whole support in one partition); the two cohort totals
+    broadcast as a 1-row cross join; the final MAX groups on them, so an
+    empty input yields no row. No sort of raw data anywhere."""
     tagged = df.select(
         F.when(label_col == label_a, F.lit("a"))
          .when(label_col == label_b, F.lit("b")).alias("__g"),
         value_int.cast("long").alias("__v")).filter(F.col("__g").isNotNull())
     hist = (tagged.groupBy("__v")
             .agg(F.count(F.when(F.col("__g") == "a", 1)).alias("__ca"),
-                 F.count(F.when(F.col("__g") == "b", 1)).alias("__cb"))
-            .withColumn("__bucket", F.expr(f"__v div {bucket_size}")))
-    btot = hist.groupBy("__bucket").agg(F.sum("__ca").alias("__ba"),
-                                        F.sum("__cb").alias("__bb"))
-    wb = Window.orderBy("__bucket").rowsBetween(Window.unboundedPreceding, -1)
-    boff = btot.select(
-        "__bucket",
-        F.coalesce(F.sum("__ba").over(wb), F.lit(0)).alias("__offa"),
-        F.coalesce(F.sum("__bb").over(wb), F.lit(0)).alias("__offb"))
-    wi = (Window.partitionBy("__bucket").orderBy(F.col("__v").asc())
-          .rowsBetween(Window.unboundedPreceding, 0))
-    cum = (hist.join(F.broadcast(boff), "__bucket")
-           .select((F.col("__offa") + F.sum("__ca").over(wi)).alias("__cuma"),
-                   (F.col("__offb") + F.sum("__cb").over(wi)).alias("__cumb")))
+                 F.count(F.when(F.col("__g") == "b", 1)).alias("__cb")))
+    cum = scan_tree(hist, "__v", 1024, "__ca", "__cb")
     totals = tagged.agg(
         F.count(F.when(F.col("__g") == "a", 1)).cast("long").alias("n_a"),
         F.count(F.when(F.col("__g") == "b", 1)).cast("long").alias("n_b"))
-    d = F.abs(F.col("__cuma").cast("double") / F.col("n_a")
-              - F.col("__cumb").cast("double") / F.col("n_b"))
-    return (cum.crossJoin(F.broadcast(totals))
-            .agg(F.max("n_a").alias("n_a"), F.max("n_b").alias("n_b"),
-                 F.round(F.max(d), 6).alias("ks_stat")))
+    d = F.abs(F.col("__ca_cum").cast("double") / F.col("n_a")
+              - F.col("__cb_cum").cast("double") / F.col("n_b"))
+    return (cum.crossJoin(F.broadcast(totals)).groupBy("n_a", "n_b")
+            .agg(F.round(F.max(d), 6).alias("ks_stat")))
 
 
 def mad_profile(df: DataFrame, group_cols: list[str], value_int,
@@ -1464,43 +1388,27 @@ def mad_profile(df: DataFrame, group_cols: list[str], value_int,
     the c·MAD threshold — is exact INTEGER arithmetic: the whole report
     contains zero float operations.
 
-    Scale shape (the ``winsorized_stats`` discipline, twice): raw rows
-    collapse to a per-(group, value) histogram; the cumulative window
-    runs over distinct values per group, never raw rows; the per-group
-    median (one row per group) broadcasts back onto the histogram to
-    form the deviation histogram, and the same order-statistic device
-    yields the MAD. Three hash aggregations, two tiny broadcasts."""
+    Scale shape (``window.order_stats``, twice): raw rows collapse to a
+    per-(group, value) histogram; the cumulative window runs over
+    distinct values per group, never raw rows; the per-group median (one
+    row per group) broadcasts back onto the histogram to form the
+    deviation histogram, and ``order_stats`` over it yields the MAD.
+    Three hash aggregations, two tiny broadcasts."""
     hist = (df.select(*group_cols, value_int.cast("long").alias("__v"))
             .groupBy(*group_cols, "__v")
             .agg(F.count(F.lit(1)).alias("__c")))
 
-    def order_stat(h, val_col):
-        """min val with cumcount ≥ ceil(n/2), per group — (group, stat, n)."""
-        w = (Window.partitionBy(*group_cols).orderBy(F.col(val_col).asc())
-             .rowsBetween(Window.unboundedPreceding, 0))
-        cum = h.withColumn("__cum", F.sum("__c").over(w))
-        tot = h.groupBy(*group_cols).agg(F.sum("__c").alias("__n"))
-        ks = tot.select(*group_cols, "__n",
-                        F.expr("CAST((__n + 1) DIV 2 AS BIGINT)").alias("__k"))
-        return (cum.join(F.broadcast(ks), group_cols)
-                .groupBy(*group_cols)
-                .agg(F.max("__n").alias("__n"),
-                     F.min(F.when(F.col("__cum") >= F.col("__k"),
-                                  F.col(val_col))).alias("__stat")))
-
-    med = order_stat(hist, "__v").select(
-        *group_cols, F.col("__n"), F.col("__stat").alias("__med"))
+    med = order_stats(hist, group_cols, __med=(1, 2))
     dev_hist = (hist.join(F.broadcast(med.select(*group_cols, "__med")),
                           group_cols)
                 .groupBy(*group_cols,
-                         F.abs(F.col("__v") - F.col("__med")).alias("__d"))
+                         F.abs(F.col("__v") - F.col("__med")).alias("__v"))
                 .agg(F.sum("__c").alias("__c")))
-    mad = order_stat(dev_hist, "__d").select(
-        *group_cols, F.col("__stat").alias("__mad"))
+    mad = order_stats(dev_hist, group_cols, __mad=(1, 2)).drop("__n")
     out_counts = (dev_hist.join(F.broadcast(mad), group_cols)
                   .groupBy(*group_cols)
                   .agg(F.coalesce(F.sum(F.when(
-                      F.col("__d") > F.lit(c) * F.col("__mad"),
+                      F.col("__v") > F.lit(c) * F.col("__mad"),
                       F.col("__c"))), F.lit(0)).alias("__nout")))
     return (med.join(mad, group_cols).join(out_counts, group_cols)
             .select(*group_cols, F.col("__n").cast("long").alias("n"),
@@ -1597,7 +1505,7 @@ def funnel_gap_stats(events: DataFrame, steps: list[str],
 
     Exactness: gaps are integer epoch-µs differences; median/p90 are
     k-th order statistics (k = ceil(p·n), integer DIV) over a per-step
-    gap histogram — the ``winsorized_stats`` device — and the mean is
+    gap histogram — ``window.order_stats`` — and the mean is
     Σgap/n with a single divide. Scale shape: per-step frontiers are
     user-keyed joins + min-aggregates (each materialized for its two
     consumers, the CC/funnel convention, and released once the gap
@@ -1629,28 +1537,18 @@ def funnel_gap_stats(events: DataFrame, steps: list[str],
     gaps = gap_frames[0]
     for g in gap_frames[1:]:
         gaps = gaps.unionByName(g)
-    hist, _ = materialize(gaps.groupBy("step", "stage", "__g")
+    hist, _ = materialize(gaps.groupBy("step", "stage",
+                                       F.col("__g").alias("__v"))
                           .agg(F.count(F.lit(1)).alias("__c")))
     release(*stored)
-    w = (Window.partitionBy("step", "stage").orderBy(F.col("__g").asc())
-         .rowsBetween(Window.unboundedPreceding, 0))
-    cum = hist.withColumn("__cum", F.sum("__c").over(w))
-    tot = (hist.groupBy("step", "stage")
-           .agg(F.sum("__c").alias("__n"),
-                F.sum(F.col("__g") * F.col("__c")).alias("__sum")))
-    ks = tot.select("step", "stage", "__n", "__sum",
-                    F.expr("CAST((__n + 1) DIV 2 AS BIGINT)").alias("__k50"),
-                    F.expr("CAST((__n * 9 + 9) DIV 10 AS BIGINT)")
-                    .alias("__k90"))
-    return (cum.join(F.broadcast(ks), ["step", "stage"])
-            .groupBy("step", "stage")
-            .agg(F.max("__n").cast("long").alias("n_users"),
-                 F.min(F.when(F.col("__cum") >= F.col("__k50"),
-                              F.col("__g"))).cast("long").alias("median_us"),
-                 F.min(F.when(F.col("__cum") >= F.col("__k90"),
-                              F.col("__g"))).cast("long").alias("p90_us"),
-                 F.round(F.max("__sum").cast("double")
-                         / F.max("__n").cast("double"), 2).alias("mean_us")))
+    gs = order_stats(hist, ["step", "stage"],
+                     F.sum(F.col("__v") * F.col("__c")).alias("__sum"),
+                     median_us=(1, 2), p90_us=(9, 10))
+    return gs.select(
+        "step", "stage", F.col("__n").cast("long").alias("n_users"),
+        F.col("median_us").cast("long"), F.col("p90_us").cast("long"),
+        F.round(F.col("__sum").cast("double")
+                / F.col("__n").cast("double"), 2).alias("mean_us"))
 
 
 def auc_report(df: DataFrame, score_int, label_bool) -> DataFrame:
@@ -1700,21 +1598,14 @@ def _quantile_bounds(per: DataFrame, col: str, n_bins: int) -> DataFrame:
     """ONE-row frame holding the (n_bins − 1) interior quantile
     boundaries of ``col`` as an ascending array: boundary_i = the k-th
     smallest value at k = ceil(n·i/n_bins), read off a value histogram
-    whose cumulative window runs over DISTINCT values (compact — never
-    a single-partition sort over the rows themselves), then reduced by
-    one conditional-min scalar aggregate."""
+    by ``window.order_stats`` with no group: its cumulative window runs
+    over DISTINCT values (compact — never a single-partition sort over
+    the rows themselves)."""
     hist = per.groupBy(F.col(col).alias("__v")) \
               .agg(F.count(F.lit(1)).alias("__c"))
-    w = (Window.orderBy(F.col("__v").asc())
-         .rowsBetween(Window.unboundedPreceding, 0))
-    cum = hist.withColumn("__cum", F.sum("__c").over(w))
-    tot = hist.agg(F.sum("__c").alias("__n"))
-    # cum*bins >= n*i  ⟺  cum >= ceil(n*i/bins) in integers
-    return (cum.crossJoin(F.broadcast(tot))
-            .agg(F.array(*[
-                F.min(F.when(F.col("__cum") * n_bins
-                             >= F.col("__n") * i, F.col("__v")))
-                for i in range(1, n_bins)]).alias(f"__b_{col}")))
+    bounds = {f"__b{i}": (i, n_bins) for i in range(1, n_bins)}
+    return order_stats(hist, [], **bounds).select(
+        F.array(*bounds).alias(f"__b_{col}"))
 
 
 def rfm_segments(orders: DataFrame, cust_col: str = "o_custkey",
@@ -2103,40 +1994,26 @@ def cvm_two_sample(df: DataFrame, label_col, value_int,
     engine-stable. One row out: ``n_a``, ``n_b``, ``cvm_stat``.
 
     Scale shape: identical to ``ks_two_sample`` — per-value histogram
-    (map-side partial agg), two-level cumulative scan tree (per-bucket
-    windows + a bucket-total window, no single-partition support
-    window), broadcast scalar totals, one final aggregate."""
-    bucket_size = 1024
+    (map-side partial agg), ``window.scan_tree`` cumulative counts (no
+    single-partition support window), broadcast scalar totals, one
+    final aggregate grouped on them."""
     tagged = df.select(
         F.when(label_col == label_a, F.lit("a"))
          .when(label_col == label_b, F.lit("b")).alias("__g"),
         value_int.cast("long").alias("__v")).filter(F.col("__g").isNotNull())
     hist = (tagged.groupBy("__v")
             .agg(F.count(F.when(F.col("__g") == "a", 1)).alias("__ca"),
-                 F.count(F.when(F.col("__g") == "b", 1)).alias("__cb"))
-            .withColumn("__bucket", F.expr(f"__v div {bucket_size}")))
-    btot = hist.groupBy("__bucket").agg(F.sum("__ca").alias("__ba"),
-                                        F.sum("__cb").alias("__bb"))
-    wb = Window.orderBy("__bucket").rowsBetween(Window.unboundedPreceding, -1)
-    boff = btot.select(
-        "__bucket",
-        F.coalesce(F.sum("__ba").over(wb), F.lit(0)).alias("__offa"),
-        F.coalesce(F.sum("__bb").over(wb), F.lit(0)).alias("__offb"))
-    wi = (Window.partitionBy("__bucket").orderBy(F.col("__v").asc())
-          .rowsBetween(Window.unboundedPreceding, 0))
-    cum = (hist.join(F.broadcast(boff), "__bucket")
-           .select((F.col("__ca") + F.col("__cb")).alias("__w"),
-                   (F.col("__offa") + F.sum("__ca").over(wi)).alias("__cuma"),
-                   (F.col("__offb") + F.sum("__cb").over(wi)).alias("__cumb")))
+                 F.count(F.when(F.col("__g") == "b", 1)).alias("__cb")))
+    cum = scan_tree(hist, "__v", 1024, "__ca", "__cb")
     totals = tagged.agg(
         F.count(F.when(F.col("__g") == "a", 1)).cast("long").alias("n_a"),
         F.count(F.when(F.col("__g") == "b", 1)).cast("long").alias("n_b"))
-    d = (F.col("n_b") * F.col("__cuma")
-         - F.col("n_a") * F.col("__cumb")).cast("decimal(18,0)")
-    term = F.col("__w").cast("decimal(10,0)") * d * d
-    s = (cum.crossJoin(F.broadcast(totals))
-            .agg(F.max("n_a").alias("n_a"), F.max("n_b").alias("n_b"),
-                 F.sum(term).alias("__s")))
+    d = (F.col("n_b") * F.col("__ca_cum")
+         - F.col("n_a") * F.col("__cb_cum")).cast("decimal(18,0)")
+    w = F.col("__ca") + F.col("__cb")
+    term = w.cast("decimal(10,0)") * d * d
+    s = (cum.crossJoin(F.broadcast(totals)).groupBy("n_a", "n_b")
+         .agg(F.sum(term).alias("__s")))
     n = F.col("n_a").cast("double")
     m = F.col("n_b").cast("double")
     nn = (F.col("n_a") + F.col("n_b")).cast("double")
@@ -2362,9 +2239,9 @@ def quantile_treatment_effect(df: DataFrame, user_col: str, outcome_when,
     the effect is an integer difference of integer cents.
 
     Scale shape: one shuffle to the per-user grain, map-side histogram
-    collapse, per-arm cumulative windows over DISTINCT outcome values
-    only, one ≤ (bins−1)-row final aggregate. No sort of users, no
-    NTILE."""
+    collapse, ``window.order_stats`` per (decile, arm) (cumulative
+    windows over DISTINCT outcome values only), one ≤ (bins−1)-row final
+    aggregate. No sort of users, no NTILE."""
     from .sampling import hash_bucket
 
     users = (df.groupBy(F.col(user_col).alias("__u"))
@@ -2375,22 +2252,15 @@ def quantile_treatment_effect(df: DataFrame, user_col: str, outcome_when,
         F.when(arm_a, F.lit("a")).otherwise(F.lit("b")).alias("__g"), "__o")
     hist = armed.groupBy("__g", F.col("__o").alias("__v")) \
                 .agg(F.count(F.lit(1)).alias("__c"))
-    w = (Window.partitionBy("__g").orderBy(F.col("__v").asc())
-         .rowsBetween(Window.unboundedPreceding, 0))
-    cum = hist.withColumn("__cum", F.sum("__c").over(w))
-    tot = armed.groupBy("__g").agg(F.count(F.lit(1)).alias("__n"))
     dd = F.explode(F.sequence(F.lit(1), F.lit(n_bins - 1))).alias("__d")
     ds = df.sparkSession.range(1).select(dd)
-    q = (cum.join(tot, "__g").crossJoin(F.broadcast(ds))
-         .groupBy("__d")
-         .agg(F.min(F.when((F.col("__g") == "a")
-                           & (F.col("__cum") * n_bins
-                              >= F.col("__n") * F.col("__d")),
-                           F.col("__v"))).alias("q_a_cents"),
-              F.min(F.when((F.col("__g") == "b")
-                           & (F.col("__cum") * n_bins
-                              >= F.col("__n") * F.col("__d")),
-                           F.col("__v"))).alias("q_b_cents")))
+    # the decile rides as a group: one order statistic per (decile, arm)
+    # spreads the pick over 2·(bins−1) window partitions instead of 2
+    qs = order_stats(hist.crossJoin(F.broadcast(ds)), ["__d", "__g"],
+                     __q=F.col("__cum") * n_bins >= F.col("__n") * F.col("__d"))
+    arm = lambda g: F.max(F.when(F.col("__g") == g, F.col("__q")))  # noqa: E731
+    q = qs.groupBy("__d").agg(arm("a").alias("q_a_cents"),
+                              arm("b").alias("q_b_cents"))
     return q.select(
         F.col("__d").cast("long").alias("decile"),
         "q_a_cents", "q_b_cents",
@@ -3257,37 +3127,22 @@ def threshold_sweep(df: DataFrame, score_int, label_bool,
 
     Scale shape: rows collapse to the distinct-score histogram (one
     hash agg — the sweep is histogram-sized, not row-sized); the
-    suffix sums reuse the R120 two-level scan tree (tiny bucket-total
-    window + partitioned within-bucket windows) so no single partition
-    ever holds the whole histogram; global totals ride as a 1-row
-    broadcast."""
+    suffix sums are ``window.scan_tree`` over the negated score, so no
+    single partition ever holds the whole histogram; global totals ride
+    as a 1-row broadcast."""
     base = df.select(score_int.cast("long").alias("__s"),
                      F.when(label_bool, 1).otherwise(0).alias("__y"))
     hist, _ = materialize(
         base.groupBy("__s")
         .agg(F.count(F.lit(1)).alias("__n"),
-             F.sum("__y").alias("__p"))
-        .withColumn("__b", F.expr("__s div 100000")))
+             F.sum("__y").alias("__p")))
     tot = hist.agg(F.sum("__n").cast("long").alias("__N"),
                    F.sum("__p").cast("long").alias("__P"))
-    # suffix sums via two-level tree on DESCENDING score order
-    btot = hist.groupBy("__b").agg(F.sum("__n").alias("__bn"),
-                                   F.sum("__p").alias("__bp"))
-    w_b = (Window.orderBy(F.col("__b").desc())
-           .rowsBetween(Window.unboundedPreceding, -1))
-    boff = btot.select("__b",
-                       F.coalesce(F.sum("__bn").over(w_b), F.lit(0))
-                       .alias("__on"),
-                       F.coalesce(F.sum("__bp").over(w_b), F.lit(0))
-                       .alias("__op"))
-    w_in = (Window.partitionBy("__b").orderBy(F.col("__s").desc())
-            .rowsBetween(Window.unboundedPreceding, 0))
-    cum = (hist.join(F.broadcast(boff), "__b")
-           .select("__s",
-                   (F.col("__on") + F.sum("__n").over(w_in))
-                   .alias("__pred_pos"),
-                   (F.col("__op") + F.sum("__p").over(w_in))
-                   .alias("__tp")))
+    # suffix sums: the scan tree over the NEGATED score is a descending scan
+    cum = scan_tree(hist.withColumn("__ns", -F.col("__s")), "__ns",
+                    100_000, "__n", "__p").select(
+        "__s", F.col("__n_cum").alias("__pred_pos"),
+        F.col("__p_cum").alias("__tp"))
     g = cum.crossJoin(F.broadcast(tot))
     tp = F.col("__tp").cast("double")
     fp = (F.col("__pred_pos") - F.col("__tp")).cast("double")
@@ -4214,29 +4069,17 @@ def group_quartiles(df: DataFrame, group_col: str, value_long,
     Zero floats: per-group value histogram, cumulative window over
     DISTINCT values only, quartile i = MIN(v | cum·4 ≥ n·i) — integer
     comparisons end to end. Scale: one hash agg to the (group, value)
-    histogram, windows partitioned per group over its distinct values,
-    one conditional-min rollup."""
+    histogram, then ``window.order_stats`` (windows partitioned per
+    group over its distinct values, one conditional-min rollup)."""
     base = df.select(F.col(group_col).alias("__g"),
                      value_long.cast("long").alias("__v"))
     hist = base.groupBy("__g", "__v").agg(F.count(F.lit(1)).alias("__c"))
-    w = (Window.partitionBy("__g").orderBy(F.col("__v").asc())
-         .rowsBetween(Window.unboundedPreceding, 0))
-    cum = hist.withColumn("__cum", F.sum("__c").over(w))
-    tot = (base.select(F.col("__g").alias("__gt"))
-           .groupBy("__gt").agg(F.count(F.lit(1)).alias("__n")))
-    j = cum.join(F.broadcast(tot), F.col("__g") == F.col("__gt"))
-    qcol = lambda i: F.min(  # noqa: E731
-        F.when(F.col("__cum") * 4 >= F.col("__n") * i, F.col("__v")))
-    out = j.groupBy("__g").agg(
-        F.max("__n").cast("long").alias("n"),
-        qcol(1).cast("long").alias(f"{out_prefix}1"),
-        qcol(2).cast("long").alias(f"{out_prefix}2"),
-        qcol(3).cast("long").alias(f"{out_prefix}3"))
-    return out.select(
-        F.col("__g").alias(group_col), "n",
-        f"{out_prefix}1", f"{out_prefix}2", f"{out_prefix}3",
-        (F.col(f"{out_prefix}3") - F.col(f"{out_prefix}1")).cast("long")
-        .alias("iqr"))
+    qs = order_stats(hist, ["__g"], __q1=(1, 4), __q2=(2, 4), __q3=(3, 4))
+    return qs.select(
+        F.col("__g").alias(group_col), F.col("__n").cast("long").alias("n"),
+        *[F.col(f"__q{i}").cast("long").alias(f"{out_prefix}{i}")
+          for i in (1, 2, 3)],
+        (F.col("__q3") - F.col("__q1")).cast("long").alias("iqr"))
 
 
 def slo_burn(events: DataFrame, value_long, threshold: int,
@@ -4250,27 +4093,18 @@ def slo_burn(events: DataFrame, value_long, threshold: int,
 
     Daily p95 is the k-th smallest at ⌈n·0.95⌉ via the per-(series,
     day) value histogram (integer-only, the R268 device: cum·20 ≥
-    n·19). Breach and worst-day selection are integer comparisons; the
-    worst day is a struct-max (p95 desc, day asc on ties). Scale: one
-    histogram agg, windows over per-day distinct values, a day-count
-    rollup."""
+    n·19, ``window.order_stats``). Breach and worst-day selection are
+    integer comparisons; the worst day is a struct-max (p95 desc, day
+    asc on ties). Scale: one histogram agg, windows over per-day
+    distinct values, a day-count rollup."""
     day = F.expr(f"unix_date(CAST({ts_col} AS DATE))").cast("long")
     base = events.select(F.col(type_col).alias("__g"),
                          day.alias("__d"),
                          value_long.cast("long").alias("__v"))
     hist = (base.groupBy("__g", "__d", "__v")
             .agg(F.count(F.lit(1)).alias("__c")))
-    w = (Window.partitionBy("__g", "__d").orderBy(F.col("__v").asc())
-         .rowsBetween(Window.unboundedPreceding, 0))
-    cum = hist.withColumn("__cum", F.sum("__c").over(w))
-    tot = (base.select(F.col("__g").alias("__gt"),
-                       F.col("__d").alias("__dt"))
-           .groupBy("__gt", "__dt").agg(F.count(F.lit(1)).alias("__n")))
-    p95 = (cum.join(tot, (F.col("__g") == F.col("__gt"))
-                    & (F.col("__d") == F.col("__dt")))
-           .groupBy("__g", "__d")
-           .agg(F.min(F.when(F.col("__cum") * 20 >= F.col("__n") * 19,
-                             F.col("__v"))).cast("long").alias("__p95")))
+    p95 = order_stats(hist, ["__g", "__d"], __p95=(19, 20)).select(
+        "__g", "__d", F.col("__p95").cast("long"))
     worst = F.max(F.struct(F.col("__p95").alias("p"),
                            (-F.col("__d")).alias("nd")))
     per = p95.groupBy("__g").agg(
@@ -4786,37 +4620,24 @@ def median_ci(df: DataFrame, group_col: str, value_long,
 
     The only float is z·√n — one fixed-shape expression per group
     whose floor/ceil agree cross-engine (same double in, same
-    integer out); everything else is the integer histogram-cum
-    device. Output: (group, n, median, ci_lo, ci_hi)."""
+    integer out); everything else is the integer histogram pick of
+    ``window.order_stats``. Output: (group, n, median, ci_lo, ci_hi)."""
     base = df.select(F.col(group_col).alias("__g"),
                      value_long.cast("long").alias("__v"))
     hist = base.groupBy("__g", "__v").agg(F.count(F.lit(1))
                                           .alias("__c"))
-    w = (Window.partitionBy("__g").orderBy(F.col("__v").asc())
-         .rowsBetween(Window.unboundedPreceding, 0))
-    cum = hist.withColumn("__cum", F.sum("__c").over(w))
-    tot = (base.select(F.col("__g").alias("__gt"))
-           .groupBy("__gt").agg(F.count(F.lit(1)).alias("__n")))
     nD = F.col("__n").cast("double")
-    k_med = F.ceil(nD / 2).cast("long")
     k_lo = F.greatest(F.lit(1).cast("long"),
                       F.floor((nD - F.lit(z) * F.sqrt(nD)) / 2)
                       .cast("long"))
     k_hi = F.least(F.col("__n").cast("long"),
                    F.ceil(F.lit(1.0) + (nD + F.lit(z) * F.sqrt(nD))
                           / 2).cast("long"))
-    j = (cum.join(F.broadcast(tot), F.col("__g") == F.col("__gt"))
-         .withColumn("__km", k_med).withColumn("__kl", k_lo)
-         .withColumn("__kh", k_hi))
-    pick = lambda kc: F.min(  # noqa: E731
-        F.when(F.col("__cum") >= F.col(kc), F.col("__v")))
-    return (j.groupBy("__g")
-            .agg(F.max("__n").cast("long").alias("n"),
-                 pick("__km").cast("long").alias("median"),
-                 pick("__kl").cast("long").alias("ci_lo"),
-                 pick("__kh").cast("long").alias("ci_hi"))
-            .select(F.col("__g").alias(group_col), "n", "median",
-                    "ci_lo", "ci_hi"))
+    cum = F.col("__cum")
+    return order_stats(hist, ["__g"], median=(1, 2), ci_lo=cum >= k_lo,
+                       ci_hi=cum >= k_hi).select(
+        F.col("__g").alias(group_col), F.col("__n").cast("long").alias("n"),
+        *[F.col(c).cast("long") for c in ("median", "ci_lo", "ci_hi")])
 
 
 def oof_target_encoding(df: DataFrame, cat_col: str, key_col: str,

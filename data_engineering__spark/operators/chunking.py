@@ -11,10 +11,11 @@ Two operators:
   deterministic document order, cut every ``capacity`` tokens into training
   sequences (documents may straddle sequence boundaries, exactly like GPT-
   style pretraining packing). Implemented as a distributed two-level prefix
-  sum: per-bucket token totals (one small aggregate) feed bucket offsets,
-  then a window PARTITIONED BY bucket computes within-bucket offsets — no
-  global single-partition window over the corpus, so the plan scales: the
-  only ordered pass is over ~n_docs/bucket_size bucket-total rows.
+  sum (``window.scan_tree``): per-bucket token totals (one small aggregate)
+  feed bucket offsets, then a window PARTITIONED BY bucket computes
+  within-bucket offsets — no global single-partition window over the
+  corpus, so the plan scales: the only ordered pass is over
+  ~n_docs/bucket_size bucket-total rows.
 
 Everything is built-in-function codegen; nothing drops to Python.
 """
@@ -25,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .text import tokens
+from .window import scan_tree
 
 
 def chunk_tokens(df: DataFrame, id_col: str, text_col: str,
@@ -56,6 +58,13 @@ def chunk_tokens(df: DataFrame, id_col: str, text_col: str,
         F.array_join(chunk, " ").alias("chunk_text"))
 
 
+def _doc_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(``__id``, ``__n``): each non-empty document's token count."""
+    return (df.select(F.col(id_col).alias("__id"),
+                      F.size(tokens(text_col)).cast("long").alias("__n"))
+            .filter(F.col("__n") > 0))
+
+
 def pack_sequences(df: DataFrame, id_col: str, text_col: str,
                    capacity: int = 512, bucket_size: int = 1024) -> DataFrame:
     """Concat-and-cut sequence packing index over the corpus token stream.
@@ -69,29 +78,14 @@ def pack_sequences(df: DataFrame, id_col: str, text_col: str,
     Scale shape: global prefix sums are computed as bucket totals (one
     partial-agg shuffle down to ~n_docs/bucket_size rows) + an ordered
     window over those few bucket rows + a per-bucket window for
-    within-bucket offsets — the classic two-level scan tree, so no window
+    within-bucket offsets — ``window.scan_tree``, so no window
     ever sees the whole corpus in one partition. ``id_col`` must be
     numeric; any dense or sparse ordering works (only its ORDER matters).
     """
-    docs = (df.select(F.col(id_col).alias("__id"),
-                      F.size(tokens(text_col)).cast("long").alias("__n"))
-              .filter(F.col("__n") > 0)
-              .withColumn("__bucket", F.expr(f"__id div {bucket_size}")))
-
-    bucket_totals = docs.groupBy("__bucket").agg(F.sum("__n").alias("__bt"))
-    w_buckets = (Window.orderBy("__bucket")
-                 .rowsBetween(Window.unboundedPreceding, -1))
-    bucket_offsets = bucket_totals.select(
-        "__bucket",
-        F.coalesce(F.sum("__bt").over(w_buckets), F.lit(0)).alias("__boff"))
-
-    w_in_bucket = (Window.partitionBy("__bucket").orderBy("__id")
-                   .rowsBetween(Window.unboundedPreceding, -1))
-    placed = (docs.join(F.broadcast(bucket_offsets), "__bucket")
-              .withColumn("__inoff",
-                          F.coalesce(F.sum("__n").over(w_in_bucket), F.lit(0)))
-              .withColumn("__off", F.col("__boff") + F.col("__inoff")))
-
+    # exclusive offset: the inclusive running sum less the doc's own term
+    placed = (scan_tree(_doc_tokens(df, id_col, text_col), "__id",
+                        bucket_size, "__n")
+              .withColumn("__off", F.col("__n_cum") - F.col("__n")))
     first_seq = F.expr(f"__off div {capacity}")
     last_seq = F.expr(f"(__off + __n - 1) div {capacity}")
     spans = placed.select(
@@ -233,33 +227,19 @@ def shard_by_tokens(df: DataFrame, id_col: str, text_col: str,
     order-preserving (so shard k is a contiguous id range, cheap to
     re-read selectively).
 
-    Scale shape: the global token offset reuses the ``pack_sequences``
-    two-level prefix-sum tree (bucket totals shuffle down ~n/bucket_size
+    Scale shape: the global token offset reuses ``pack_sequences``'
+    ``window.scan_tree`` (bucket totals shuffle down ~n/bucket_size
     rows, one ordered window over those bucket rows, a per-bucket window
     for within-bucket offsets) — no corpus-wide single-partition window;
     the total is a 1-row broadcast crossJoin. Returns (id, shard,
     n_tokens)."""
-    docs = (df.select(F.col(id_col).alias("__id"),
-                      F.size(tokens(text_col)).cast("long").alias("__n"))
-            .filter(F.col("__n") > 0)
-            .withColumn("__bucket", F.expr(f"__id div {bucket_size}")))
-    bucket_totals = docs.groupBy("__bucket").agg(F.sum("__n").alias("__bt"))
-    w_buckets = (Window.orderBy("__bucket")
-                 .rowsBetween(Window.unboundedPreceding, -1))
-    bucket_offsets = bucket_totals.select(
-        "__bucket",
-        F.coalesce(F.sum("__bt").over(w_buckets), F.lit(0)).alias("__boff"))
-    w_in_bucket = (Window.partitionBy("__bucket").orderBy("__id")
-                   .rowsBetween(Window.unboundedPreceding, -1))
+    docs = _doc_tokens(df, id_col, text_col)
     total = docs.agg(F.sum("__n").alias("__tot"))
-    placed = (docs.join(F.broadcast(bucket_offsets), "__bucket")
-              .withColumn("__inoff",
-                          F.coalesce(F.sum("__n").over(w_in_bucket), F.lit(0)))
-              .withColumn("__off", F.col("__boff") + F.col("__inoff"))
-              .crossJoin(F.broadcast(total)))
-    return (placed
+    return (scan_tree(docs, "__id", bucket_size, "__n")
+            .crossJoin(F.broadcast(total))
             .withColumn("__ss",
                         F.expr(f"(__tot + {n_shards - 1}) div {n_shards}"))
             .select(F.col("__id").alias(id_col),
-                    F.expr("CAST(__off div __ss AS BIGINT)").alias("shard"),
+                    F.expr("CAST((__n_cum - __n) div __ss AS BIGINT)")
+                    .alias("shard"),
                     F.col("__n").cast("long").alias("n_tokens")))

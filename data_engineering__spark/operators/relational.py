@@ -218,10 +218,14 @@ def passjoin_pairs(left: DataFrame, right: DataFrame,
     Scale shape: both sides expand by small constants (right: k+1
     segment rows; left: ≤ (2k+1)²(k+1) probe substrings, most pruned by
     the position windows), the join keys on (substring, segment-index,
-    length) — discriminative even on shared-prefix corpora where
-    prefix blocking collapses into one quadratic block (TPC-H's
-    'Supplier#000…' names being the in-repo example) — and exact
-    ``levenshtein ≤ k`` verifies candidates. All arithmetic integer."""
+    length), and exact ``levenshtein ≤ k`` verifies candidates. All
+    arithmetic integer. The key is only as discriminative as the
+    segments: on a shared-prefix corpus a whole segment can be common to
+    every string, and the join degenerates to the cross product that
+    prefix blocking gives. TPC-H's 'Supplier#000000nnn' names do that at
+    k = 2 (every name has the same segments 0 and 1):
+    ``passjoin_suppliers`` yields 1 000 × 1 000 = 1 000 000 candidates
+    for 92 292 verified pairs."""
     k, m = max_dist, max_dist + 1
     ln = F.lower(F.trim(F.col(left_col)))
     rn = F.lower(F.trim(F.col(right_col)))

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import materialize
+from .window import scan_tree
 
 DEFAULT_LG_K = 12  # ~1.6% relative standard error, 4 KiB per sketch
 
@@ -609,23 +610,22 @@ def hdr_quantile_report(df: DataFrame, cents_col, m_bits: int = 5,
     histogram for the exact side (distinct-value-sized, not row-sized),
     never a global row sort. The sketch-side cumulative window runs over
     the BOUNDED bucket set (≤2^m·e_max rows by construction — state-sized,
-    not data-sized); the exact side's cumulative count uses the R120
-    two-level scan tree (tiny bucket-total window + partitioned
-    within-bucket cumsums), so no window ever holds the distinct-value
+    not data-sized); the exact side's cumulative count uses
+    ``window.scan_tree``, so no window ever holds the distinct-value
     histogram in one partition; n and the probe thresholds ride as 1-row
-    broadcasts."""
+    broadcasts. Only the positive values are stored: the bucket set is
+    one small aggregate over them, recomputed by its two readers."""
     col = F.col(cents_col) if isinstance(cents_col, str) else cents_col
     c, _ = materialize(df.select(col.alias("__c")).filter(F.col("__c") > 0))
     n = c.agg(F.count(F.lit(1)).cast("long").alias("__n"))
     two_m = 1 << m_bits
     e = F.floor(F.log2(F.col("__c").cast("double"))).cast("long")
-    bk, _ = materialize(
-        c.select(e.alias("__e"),
-                 (F.expr(f"(__c * {two_m}) div "
-                         f"cast(pow(2.0d, floor(log2(cast(__c as "
-                         f"double)))) as bigint)")
-                  - two_m).alias("__s"))
-        .groupBy("__e", "__s").agg(F.count(F.lit(1)).alias("__cnt")))
+    bk = (c.select(e.alias("__e"),
+                   (F.expr(f"(__c * {two_m}) div "
+                           f"cast(pow(2.0d, floor(log2(cast(__c as "
+                           f"double)))) as bigint)")
+                    - two_m).alias("__s"))
+          .groupBy("__e", "__s").agg(F.count(F.lit(1)).alias("__cnt")))
     nbuck = bk.agg(F.count(F.lit(1)).cast("long").alias("n_buckets"))
     wcum = (Window.orderBy("__e", "__s")
             .rowsBetween(Window.unboundedPreceding, 0))
@@ -644,18 +644,11 @@ def hdr_quantile_report(df: DataFrame, cents_col, m_bits: int = 5,
                     F.col("__b.__e").alias("__e"),
                     F.col("__b.__s").alias("__s"))
             .select("q_pct", F.round(est, round_dp).alias("est_cents")))
-    hist = (c.groupBy("__c").agg(F.count(F.lit(1)).alias("__hc"))
-            .withColumn("__b", F.expr("__c div 100000")))
-    btot = hist.groupBy("__b").agg(F.sum("__hc").alias("__bt"))
-    w_b = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-    boff = btot.select("__b", F.coalesce(F.sum("__bt").over(w_b),
-                                         F.lit(0)).alias("__off"))
-    w_in = (Window.partitionBy("__b").orderBy("__c")
-            .rowsBetween(Window.unboundedPreceding, 0))
-    vcum = (hist.join(F.broadcast(boff), "__b")
-            .withColumn("__cm", F.col("__off") + F.sum("__hc").over(w_in)))
+    vcum = scan_tree(c.groupBy("__c").agg(F.count(F.lit(1)).alias("__hc")),
+                     "__c", 100_000, "__hc")
     exact = (vcum.crossJoin(qs).crossJoin(F.broadcast(n))
-             .filter(F.col("__cm") * 100 >= F.col("__n") * F.col("q_pct"))
+             .filter(F.col("__hc_cum") * 100
+                     >= F.col("__n") * F.col("q_pct"))
              .groupBy("q_pct")
              .agg(F.min("__c").cast("long").alias("exact_cents")))
     return (exact.join(ests, "q_pct").crossJoin(F.broadcast(nbuck))

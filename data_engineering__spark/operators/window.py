@@ -10,6 +10,9 @@ is impossible and the window is routine.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -84,3 +87,63 @@ def sessionize(df: DataFrame, user_col: str, ts_col: str,
     run = (Window.partitionBy(user_col).orderBy(us)
            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return df.withColumn(session_col, F.sum(new_s).over(run))
+
+
+def scan_tree(hist: DataFrame, order: str, width: int,
+              *cols: str) -> DataFrame:
+    """``hist`` plus ``<col>_cum``, the inclusive running Σ of each of
+    ``cols`` over ascending ``order``, as a two-level scan tree: rows fall
+    into ``__bucket = order div width`` ranges, the bucket totals (tiny)
+    get the only ordered window, and the within-bucket running sums run
+    PARTITIONED by bucket — so no window ever holds more than one bucket
+    of ``hist`` in one partition. ``order`` must be unique in ``hist`` (a
+    value histogram, a doc id) or tied rows sum in an arbitrary order.
+    Spark's ``div`` truncates toward zero, so bucket 0 spans (−width,
+    width). NULL order keys drop out: their NULL bucket finds no partner
+    in the inner join with the bucket offsets."""
+    b = hist.withColumn("__bucket", F.expr(f"{order} div {width}"))
+    w_b = Window.orderBy("__bucket").rowsBetween(Window.unboundedPreceding,
+                                                 -1)
+    offs = (b.groupBy("__bucket")
+            .agg(*[F.sum(c).alias(f"__bt{i}") for i, c in enumerate(cols)])
+            .select("__bucket", *[
+                F.coalesce(F.sum(f"__bt{i}").over(w_b), F.lit(0))
+                .alias(f"__off{i}") for i in range(len(cols))]))
+    w_in = (Window.partitionBy("__bucket").orderBy(order)
+            .rowsBetween(Window.unboundedPreceding, 0))
+    return b.join(F.broadcast(offs), "__bucket").select(*hist.columns, *[
+        (F.col(f"__off{i}") + F.sum(c).over(w_in)).alias(f"{c}_cum")
+        for i, c in enumerate(cols)])
+
+
+def order_stats(hist: DataFrame, by: list[str], *aggs: Column,
+                **preds) -> DataFrame:
+    """Order statistics per ``by`` group of a (``by``…, ``__v``, ``__c``)
+    value histogram: ``__n`` = Σ``__c``, ``aggs`` (extra aggregates over
+    the histogram rows), and for each name in ``preds`` the smallest
+    ``__v`` whose running count ``__cum`` satisfies its predicate, a
+    Column over ``__cum`` and ``__n``. A ``(num, den)`` pair stands for
+    ``__cum·den ≥ __n·num``: the k-th smallest at k = ⌈n·num/den⌉ in
+    integer arithmetic, tie-order-independent. The cumulative window runs
+    over distinct values per group (unpartitioned when ``by`` is empty),
+    never raw rows; ``__n`` is a whole-partition frame of the same window,
+    so the pick needs no join and no second shuffle. Rows with a NULL
+    group key drop out, as they do from a join on the key. The filter is
+    ``IS NOT NULL``, not ``dropna``: Catalyst folds it away on a key that
+    cannot be NULL, while a ``dropna`` on a derived key is pushed below
+    the caller's aggregates and evaluates the key once per raw row."""
+    w = Window.partitionBy(*by).orderBy(F.col("__v").asc())
+    keep = reduce(and_, [F.col(c).isNotNull() for c in by], F.lit(True))
+    j = hist.filter(keep).select(
+        "*",
+        F.sum("__c").over(w.rowsBetween(Window.unboundedPreceding, 0))
+        .alias("__cum"),
+        F.sum("__c").over(w.rowsBetween(Window.unboundedPreceding,
+                                        Window.unboundedFollowing))
+        .alias("__n"))
+    cond = {k: p if isinstance(p, Column)
+            else F.col("__cum") * p[1] >= F.col("__n") * p[0]
+            for k, p in preds.items()}
+    return j.groupBy(*by).agg(
+        F.max("__n").alias("__n"), *aggs,
+        *[F.min(F.when(c, F.col("__v"))).alias(k) for k, c in cond.items()])

@@ -38,13 +38,27 @@ def empty_sf_dir(sf_dir, tmp_path_factory):
     "cluster_quality_embeddings", "ivf_kmeans_topk",
     "ivf_nprobe_curve_embeddings", "ivfpq_adc_topk", "pq_code_histogram",
     "semantic_dedup", "ivf_topk", "corpus_report_docs", "dataset_card_docs",
-    "null_profile_events", "pipeline_card_events"])
+    "null_profile_events", "pipeline_card_events",
+    # the quantile, drift and packing family (window.scan_tree and
+    # window.order_stats callers)
+    "brier_decomposition_events", "calibration_bins_events",
+    "cvm_drift_events", "embedding_norm_profile", "exact_quantiles_prices",
+    "funnel_gap_stats_events", "hdr_quantiles_prices",
+    "iqr_outlier_counts_events", "isotonic_calibration_events",
+    "ks_drift_events", "mad_profile_events", "median_ci_events",
+    "pack_training_sequences", "qte_report_events",
+    "quantile_normalize_events", "rfm_segments_customers",
+    "segment_order_quartiles", "shard_by_tokens_docs", "slo_burn_events",
+    "threshold_sweep_events", "vocab_growth_docs", "weighted_quantiles_docs",
+    "winsorized_stats_events"])
 def test_centroid_keys_match_oracle_on_empty_tables(spark, empty_sf_dir,
                                                      name):
     """An empty corpus trains no centroids; every k-means/IVF key must
     still return its oracle's (empty or zero-count) result, not raise.
     The report keys divide by a row count that is 0 here: their ratios are
-    NULL (``try_divide``), as DuckDB's x/0 is."""
+    NULL (``try_divide``), as DuckDB's x/0 is. The quantile family must
+    also return its oracle's rows: the KS and CvM folds group on the
+    cohort sizes, as their oracles do, so an empty input gives no row."""
     ok, msg = compare(spark, name, empty_sf_dir)
     assert ok, f"{name}: {msg}"
 

@@ -233,6 +233,7 @@ def _loop_cases():
     from data_engineering__spark.operators import analytics as A
     from data_engineering__spark.operators import dedup as D
     from data_engineering__spark.operators import graph as G
+    from data_engineering__spark.operators import sketches as SK
 
     def k_core(spark):
         # a 4-clique with a 6-node tail: k=3 peels one tail node a round
@@ -258,6 +259,9 @@ def _loop_cases():
             _chain(s, 12)),
         "connected_components_star": lambda s: D.connected_components_star(
             _chain(s, 64)),
+        "hdr_quantile_report": lambda s: SK.hdr_quantile_report(
+            s.createDataFrame([(c,) for c in range(1, 200, 3)], "c long"),
+            "c"),
     }
 
 
@@ -347,6 +351,62 @@ def test_pagerank_cycle_closed_form(spark):
         [{"src": i, "dst": (i + 1) % k} for i in range(k)])
     got = {r.id: r.rank for r in pagerank(edges, n_iter=4).collect()}
     assert got == {i: 0.1 for i in range(k)}
+
+
+@given(rows=st.lists(st.tuples(st.integers(-30, 30), st.integers(-9, 9),
+                                st.integers(0, 9)), min_size=1, max_size=40),
+       width=st.sampled_from([1, 7, 1000]))
+@SETTINGS
+def test_scan_tree_matches_cumulative_sum(spark, rows, width):
+    """The two-level scan tree must equal a Python running sum over the
+    ascending key, for negative keys (``div`` truncates toward zero, so
+    bucket 0 spans (−w, w)), every bucket width, and two columns at once.
+    Keys are summed per value first: the tree orders a histogram."""
+    from data_engineering__spark.operators.window import scan_tree
+
+    hist: dict[int, list[int]] = {}
+    for k, a, b in rows:
+        ab = hist.setdefault(k, [0, 0])
+        ab[0] += a
+        ab[1] += b
+    df = spark.createDataFrame([(k, a, b) for k, (a, b) in hist.items()],
+                               "k long, a long, b long")
+    got = {r.k: (r.a_cum, r.b_cum)
+           for r in scan_tree(df, "k", width, "a", "b").collect()}
+    want, ra, rb = {}, 0, 0
+    for k in sorted(hist):
+        ra, rb = ra + hist[k][0], rb + hist[k][1]
+        want[k] = (ra, rb)
+    assert got == want
+
+
+@given(vals=st.lists(st.tuples(st.sampled_from("xyz"), st.integers(-20, 20)),
+                     min_size=1, max_size=50),
+       num=st.integers(0, 7))
+@SETTINGS
+def test_order_stats_matches_sorted_kth(spark, vals, num):
+    """``order_stats`` must pick the sorted list's k-th element at
+    k = ⌈n·num/8⌉ (the minimum when k = 0), per group and with no
+    group, and report n."""
+    from data_engineering__spark.operators.window import order_stats
+
+    def kth(xs):
+        xs = sorted(xs)
+        return len(xs), xs[max(-(-len(xs) * num // 8), 1) - 1]
+
+    df = spark.createDataFrame(vals, "g string, v long")
+    hist = df.groupBy("g", F.col("v").alias("__v")).agg(
+        F.count(F.lit(1)).alias("__c"))
+    got = {r.g: (r["__n"], r.q)
+           for r in order_stats(hist, ["g"], q=(num, 8)).collect()}
+    groups: dict[str, list[int]] = {}
+    for g, v in vals:
+        groups.setdefault(g, []).append(v)
+    assert got == {g: kth(xs) for g, xs in groups.items()}
+    flat = df.groupBy(F.col("v").alias("__v")).agg(
+        F.count(F.lit(1)).alias("__c"))
+    one = order_stats(flat, [], q=(num, 8)).collect()
+    assert [(r["__n"], r.q) for r in one] == [kth([v for _, v in vals])]
 
 
 @given(ns=st.lists(st.integers(0, 40), min_size=1, max_size=25),

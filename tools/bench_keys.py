@@ -20,10 +20,12 @@ through one job group per key (a job a key submits from a Python thread
 it starts is counted only if that thread inherits the group, as
 ``pyspark.InheritableThread`` does). A key that recompiles on every repeat is
 missing the whole-stage codegen cache. ``leaked_rdds`` {key: n} is the
-persistent RDD count left after the key's repeats (and plan capture),
-read before ``clearCache`` resets it for the next key: an operator that
-stores intermediates it never releases shows up there (a key whose result
-reads a local checkpoint keeps one per repeat).
+persistent RDDs each repeat's call left, summed over the repeats: an
+operator that stores intermediates it never releases shows up there (a key
+whose result reads a local checkpoint keeps one per repeat). Every repeat
+is cold: the cache is cleared and every stored RDD unpersisted after it,
+outside the timed region, so min-of-N never reads a warm cache an earlier
+repeat left behind.
 """
 from __future__ import annotations
 
@@ -32,6 +34,15 @@ import json
 import os
 import sys
 import time
+
+
+def free_storage(spark) -> None:
+    """Clear the cache and unpersist every stored RDD, local checkpoints
+    included (``clearCache`` alone does not free those)."""
+    spark.catalog.clearCache()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in list(rdds.keySet()):
+        rdds.get(rid).unpersist(True)
 
 
 def main() -> None:
@@ -71,12 +82,15 @@ def main() -> None:
         n0, ns0 = compiles.getCount(), codegen.compileTime()
         group = f"bench:{name}"
         sc.setJobGroup(group, group)
+        leaked[name] = 0
         for _ in range(args.repeat):
             t0 = time.perf_counter()
             df = fn(spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
             el = time.perf_counter() - t0
             best = el if best is None else min(best, el)
+            leaked[name] += sc._jsc.getPersistentRDDs().size()
+            free_storage(spark)
         out[name] = round(best, 3)
         cg[name] = {"compiles": compiles.getCount() - n0,
                     "compile_ms": round((codegen.compileTime() - ns0) / 1e6,
@@ -92,11 +106,7 @@ def main() -> None:
                     args.plans_dir,
                     f"{name}_{args.plans_suffix}.txt"), "w") as fh:
                 fh.write(txt)
-        leaked[name] = sc._jsc.getPersistentRDDs().size()
-        spark.catalog.clearCache()
-        rdds = sc._jsc.getPersistentRDDs()
-        for rid in list(rdds.keySet()):
-            rdds.get(rid).unpersist(True)
+            free_storage(spark)
     try:
         load = round(os.getloadavg()[0], 1)
     except OSError:
