@@ -7,8 +7,8 @@ line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 Each query is materialized through the noop sink (full compute + all
-columns, no write cost, no driver collect bottleneck). Timings exclude
-session startup.
+columns, no write cost, no driver collect bottleneck), min of
+``$SPARK_GRAFT_BENCH_REPEAT`` cold repeats. Timings exclude session startup.
 """
 
 from __future__ import annotations
@@ -327,6 +327,7 @@ def main() -> None:
 
     from data_engineering__spark.conformance import QUERIES
     from data_engineering__spark.session import get_spark
+    from tools.bench_keys import free_storage
 
     spark = get_spark("bench", master=f"local[{cpus}]")
     # warm the JVM/codegen paths once with a trivial action, and pre-spawn
@@ -338,7 +339,10 @@ def main() -> None:
 
     # min-of-N per query: the box shares hardware (observed 5x swings on
     # untouched queries under neighbor load); the minimum is the engine's
-    # actual capability, single-shot is a lottery. N=2 by default.
+    # actual capability, single-shot is a lottery. N=2 by default. Every
+    # repeat is cold: after it, outside the timed region, the cache is
+    # cleared and every stored RDD freed, so a repeat never reads blocks an
+    # earlier one stored and left behind.
     repeat = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "2")))
     timings: dict[str, float] = {}
     for name in HEADLINE:
@@ -350,6 +354,7 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             elapsed = time.perf_counter() - start
             best = elapsed if best is None else min(best, elapsed)
+            free_storage(spark)
         timings[name] = round(best, 3)
 
     sf_label = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")

@@ -17,8 +17,9 @@ Design rules (see ARCHITECTURE.md):
 - Built-in ``pyspark.sql.functions`` first; Arrow-batched pandas UDFs only
   where no native expression exists; row-at-a-time Python UDFs nowhere.
 - Small dimensions are broadcast; big joins shuffle on their keys; AQE is on.
-- Deterministic surrogate keys via ``row_number()`` windows, never
-  ``monotonically_increasing_id`` (rerun stability).
+- Deterministic surrogate keys: the rank under a total order, never
+  ``monotonically_increasing_id`` over a recomputed plan (rerun stability);
+  it appears only as a position within stored, sorted rows.
 """
 
 __version__ = "0.1.0"

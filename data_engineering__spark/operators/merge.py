@@ -8,9 +8,11 @@ These replace the reference's two write-conflict idioms:
   (``process_publications_dag.py:224-232``).
 
 Both become ONE set-oriented plan. Surrogate ids are deterministic
-(``row_number`` over an explicit ordering, offset by the current max id) —
-``monotonically_increasing_id`` is banned where rerun-stability matters
-(SURVEY §1.2). On managed tables (Delta/Iceberg) ``upsert_merge`` maps to
+(the rank under an explicit total ordering, offset by the current max id,
+SURVEY §1.2). ``monotonically_increasing_id`` appears only as a position
+within stored, sorted rows (``assign_ids``): there its value is fixed once
+the rows are stored, where over a recomputed plan it would depend on the
+run's partitioning. On managed tables (Delta/Iceberg) ``upsert_merge`` maps to
 ``MERGE INTO``; this is the storage-agnostic DataFrame formulation.
 """
 
@@ -19,48 +21,58 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 
 def assign_ids(df: DataFrame, order_by: list[str], id_col: str = "id",
                start: int = 1) -> DataFrame:
-    """Deterministic dense surrogate ids 1..N by ``order_by`` — DISTRIBUTED.
+    """Deterministic dense surrogate ids ``start..start+N-1`` by
+    ``order_by`` — DISTRIBUTED, in one stored job.
 
     ``row_number() over (order by ...)`` with no partition collapses the
     whole table into one task; this operator produces the identical ids with
     cluster parallelism:
 
     1. range-repartition + sort within partitions on ``order_by`` (one
-       narrow-ish shuffle, same cost as the global sort the window needs),
-    2. per-partition row counts → cumulative offsets (partition-count rows,
-       driver-side arithmetic on a handful of longs),
-    3. id = partition_offset + local row_number (within-partition window —
-       no data movement).
+       shuffle, same cost as the global sort the window needs; AQE may
+       coalesce adjacent ranges);
+    2. ``session.materialize`` the sorted rows, each tagged with
+       ``monotonically_increasing_id`` — (partition index << 33) + position
+       in the partition, both taken in the sorting stage — and read every
+       partition's row count from that same job, as one observed histogram
+       over the partition index;
+    3. id = ``start`` + (rows in earlier partitions) + position: a
+       projection over the stored rows, so a consumer's plan holds no
+       Window and no Exchange above them. The partition counts and the
+       positions come from one partition identity (the tag), so a run's
+       sampled range boundaries cannot skew the offsets, and the ids are
+       the same for every partition count.
 
+    The returned frame reads stored blocks: ``session.release`` frees them.
     Ties in ``order_by`` make ids ambiguous under ANY implementation; callers
     must pass a total order (same contract as the reference's deterministic
     surrogate keys, SURVEY §1.2).
     """
     cols = [F.col(c) for c in order_by]
-    # persist: the partitioned table is read twice (counts, then ids) and
-    # range boundaries are sample-derived per run — a recompute could place
-    # rows differently and silently corrupt the offsets.
-    parts = (df.repartitionByRange(*cols)
-               .sortWithinPartitions(*cols)
-               .withColumn("__pid", F.spark_partition_id())
-               .persist())
-    counts = {r["__pid"]: r["cnt"] for r in
-              parts.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    offsets, acc = {}, start - 1
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    offset_col = F.element_at(
-        F.map_from_arrays(
-            F.array(*[F.lit(p) for p in sorted(offsets)]),
-            F.array(*[F.lit(offsets[p]).cast("long") for p in sorted(offsets)])),
-        F.col("__pid")) if offsets else F.lit(start - 1).cast("long")
-    w = Window.partitionBy("__pid").orderBy(*cols)
-    return (parts.withColumn(id_col, (offset_col + F.row_number().over(w)).cast("long"))
-                 .drop("__pid"))
+    rows = (df.repartitionByRange(*cols)
+              .sortWithinPartitions(*cols)
+              .withColumn("__tag", F.monotonically_increasing_id()))
+    pid = F.shiftright("__tag", 33)
+    # histogram bins merge only past `nb` distinct values; with nb at the
+    # tag's bound on the partition index, every partition keeps a bin of
+    # its own whose height is its exact row count (one lookup per row,
+    # where a count per partition would cost a compare per partition)
+    rows, obs = materialize(
+        rows, sizes=F.histogram_numeric(pid, F.lit((1 << 31) - 1)))
+    sizes = {int(b.x): int(b.y) for b in obs["sizes"] or []}
+    offsets, acc = [], start
+    for p in range(max(sizes, default=0) + 1):
+        offsets.append(acc)
+        acc += sizes.get(p, 0)
+    pos = F.col("__tag").bitwiseAND((1 << 33) - 1)
+    return (rows.withColumn(id_col, (F.array(*map(F.lit, offsets))[pid]
+                                     + pos).cast("long"))
+                .drop("__tag"))
 
 
 def dim_upsert(dim: DataFrame, incoming: DataFrame, natural_key: str,

@@ -78,10 +78,11 @@ def ingest(raw: DataFrame) -> DataFrame:
     deduped = dedup_by_key(_project_raw(raw), ["doi"], [F.asc("arxiv_id")],
                            null_passthrough=True)
     # deterministic surrogate ids WITHOUT a single-task global window:
-    # range-partitioned per-partition offsets (operators.merge.assign_ids)
-    # materialize: a driver-coordination barrier (every later stage's
-    # actions plan against the stored hub, not the dedup + id lineage)
-    return materialize(assign_ids(deduped, ["arxiv_id"], id_col="pub_id"))[0]
+    # operators.merge.assign_ids stores the range-sorted rows in one job, so
+    # the hub it returns is already a driver-coordination barrier (every
+    # later stage plans against the stored rows plus an id projection, not
+    # the dedup lineage) — a second stored copy would only double the hub
+    return assign_ids(deduped, ["arxiv_id"], id_col="pub_id")
 
 
 def ingest_incremental(pubs: DataFrame, raw: DataFrame) -> DataFrame:
@@ -95,7 +96,8 @@ def ingest_incremental(pubs: DataFrame, raw: DataFrame) -> DataFrame:
       NULLs-distinct parity, so a re-ingested null-doi doc duplicates,
       exactly as the reference's daily job would);
     - survivors get surrogate ids CONTINUING after the current max
-      (1-row scalar probe + distributed ``assign_ids``).
+      (1-row scalar probe + distributed ``assign_ids``, which stores them:
+      the only frame the call stores).
 
     Scale: the existing-doi probe is an anti join on the doi key — at
     warehouse scale the hub side is the big one, so this is one hash
@@ -109,9 +111,11 @@ def ingest_incremental(pubs: DataFrame, raw: DataFrame) -> DataFrame:
     new_rows = deduped.join(existing, "doi", "left_anti")
     max_id = pubs.agg(F.coalesce(F.max("pub_id"), F.lit(0)).alias("m")) \
                  .collect()[0][0]
+    # the new rows are stored by assign_ids; the existing hub is read as
+    # it is, so the call stores one frame: the batch's survivors
     with_ids = assign_ids(new_rows, ["arxiv_id"], id_col="pub_id",
                           start=int(max_id) + 1)
-    return materialize(pubs.unionByName(with_ids.select(*pubs.columns)))[0]
+    return pubs.unionByName(with_ids.select(*pubs.columns))
 
 
 def normalize(pubs: DataFrame,
@@ -161,14 +165,17 @@ def normalize(pubs: DataFrame,
                  .distinct())
         return assign_ids(names, [key]).select("id", key)
 
-    # r11 (guide §2.6): the two dim builds are independent eager chains
-    # (assign_ids runs a per-partition count collect each); running them
-    # from a 2-thread pool overlaps their driver-sync jobs. Ids are
-    # unchanged — each build's probe is private.
+    # the two dim builds are independent stored jobs (assign_ids); running
+    # them from a 2-thread pool overlaps their driver-side planning. Ids are
+    # unchanged. The pool's threads carry the caller's job group and tags,
+    # so an event log attributes their jobs to this stage.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+    build = inheritable_thread_target(pubs.sparkSession)(fresh_dim)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fa = pool.submit(fresh_dim, authors_exploded, "name")
-        fc = pool.submit(fresh_dim, cats_exploded, "category_name")
+        fa = pool.submit(build, authors_exploded, "name")
+        fc = pool.submit(build, cats_exploded, "category_name")
         authors_dim = fa.result() \
             .withColumn("affiliation", F.lit("Unknown"))  # seeded (:33)
         cats_dim = fc.result()

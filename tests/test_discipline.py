@@ -34,8 +34,6 @@ COLLECT_ALLOWLIST = {
     ("operators/analytics.py", "markov_stationary"):
         (1, "|states|^2 transition matrix (event-type vocabulary, not "
             "rows) — driver power iteration, markov_attribution precedent"),
-    ("operators/merge.py", "assign_ids"):
-        (1, "per-partition count map (numPartitions rows)"),
     ("operators/merge.py", "dim_upsert"):
         (1, "1-row scalar probe (current max surrogate id)"),
     ("operators/vector.py", "_centroid_matrix"):
@@ -53,12 +51,9 @@ COLLECT_ALLOWLIST = {
 # (module-relative path, enclosing function) ->
 #     (expected site COUNT, why the frame is stored by hand).
 # Every other stored intermediate goes through ``session.materialize`` and
-# is freed by ``session.release``; these three are lazy persists, which
+# is freed by ``session.release``; these two are lazy persists, which
 # ``materialize`` (always an eager checkpoint) does not replace.
 STORE_ALLOWLIST = {
-    ("operators/merge.py", "assign_ids"):
-        (1, "correctness: the range boundaries are sampled per run, so the "
-            "count pass and the id pass must read the same stored rows"),
     ("operators/dedup.py", "containment_pairs"):
         (1, "the pair frame shared by the exact and dirty branches: lazy "
             "measured faster than an eager checkpoint's write barrier"),

@@ -346,22 +346,80 @@ def test_cosine_topk_self_is_first(spark):
 
 
 def test_assign_ids_matches_global_window(spark):
-    """Distributed partition-offset id assignment must equal the single-
-    partition row_number formulation exactly (same total order contract)."""
+    """Distributed positional id assignment must equal the single-
+    partition row_number formulation exactly (same total order contract)
+    at every partition count, with or without AQE, and keep those ids
+    through every way a consumer reads them: a filter on the id, a
+    union, both sides of a shuffled join and a broadcast build side."""
     from pyspark.sql import Window
 
     from data_engineering__spark.operators.merge import assign_ids
-    df = spark.range(0, 1000).select(
-        (F.col("id") * 37 % 1000).alias("k"),
-        F.col("id").alias("payload"))
-    got = assign_ids(df, ["k"], id_col="sid", start=5)
-    expect = df.withColumn(
-        "sid", (F.row_number().over(Window.orderBy("k")) + F.lit(4)).cast("long"))
-    assert sorted((r.k, r.sid) for r in got.collect()) == \
-           sorted((r.k, r.sid) for r in expect.collect())
-    # dense, gap-free, starts at `start`
-    sids = sorted(r.sid for r in got.collect())
-    assert sids[0] == 5 and sids[-1] == 5 + 999 and len(set(sids)) == 1000
+    from data_engineering__spark.session import release
+    n, start = 1000, 5
+    df = spark.range(0, n, numPartitions=3).select(
+        (F.col("id") * 37 % n).alias("k"), F.col("id").alias("payload"))
+    expect = sorted((r.k, r.sid) for r in df.withColumn(
+        "sid", (F.row_number().over(Window.orderBy("k")) + F.lit(start - 1))
+        .cast("long")).collect())
+    truth = spark.createDataFrame(expect, "k long, want long")
+    pairs = lambda frame: sorted((r.k, r.sid) for r in frame.collect())  # noqa: E731
+    cut = start + n // 3
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        for parts in (1, 2, 7, 200):
+            for aqe in ("true", "false"):
+                spark.conf.set(keys[0], str(parts))
+                spark.conf.set(keys[1], aqe)
+                case = (parts, aqe)
+                got = assign_ids(df, ["k"], id_col="sid", start=start)
+                assert pairs(got) == expect, case
+                # dense, gap-free: every id lies in [start, start + n)
+                assert sorted(v for _, v in pairs(got)) == \
+                    list(range(start, start + n)), case
+                assert pairs(got.filter(F.col("sid") < cut)) == \
+                    [(k, v) for k, v in expect if v < cut], case
+                assert pairs(got.filter(F.col("k") % 2 == 0).unionByName(
+                    got.filter(F.col("k") % 2 == 1))) == expect, case
+                both = got.hint("merge").alias("a").join(
+                    got.alias("b"), F.col("a.k") == F.col("b.k"))
+                assert both.filter(F.col("a.sid") != F.col("b.sid")) \
+                    .count() == 0, case
+                assert both.count() == n, case
+                probe = truth.join(F.broadcast(got), "k")
+                assert "BroadcastHashJoin" in \
+                    probe._jdf.queryExecution().executedPlan().toString()
+                assert probe.filter(F.col("sid") != F.col("want")) \
+                    .count() == 0, case
+                assert probe.count() == n, case
+                release(got)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_assign_ids_stores_once_and_reads_without_a_shuffle(spark):
+    """One id assignment is its range-boundary sample plus one stored job
+    (its shuffle map stage is a job of its own under AQE), and the frame
+    it returns is a projection over the stored rows: no Exchange and no
+    Window re-sorts them for each consumer."""
+    from data_engineering__spark.operators.merge import assign_ids
+    from data_engineering__spark.session import release
+    sc = spark.sparkContext
+    df = spark.range(0, 500, numPartitions=3).select(
+        (F.col("id") * 7 % 500).alias("k"))
+    sc.setJobGroup("assign_ids_pin", "assign_ids_pin")
+    try:
+        out = assign_ids(df, ["k"])
+        jobs = len(sc.statusTracker().getJobIdsForGroup("assign_ids_pin"))
+        assert sorted(r.id for r in out.collect()) == list(range(1, 501))
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    assert jobs <= 3, jobs
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Window" not in plan, plan
+    release(out)
 
 
 def test_assign_ids_empty_and_single_row(spark):

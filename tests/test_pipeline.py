@@ -502,3 +502,50 @@ def test_ingest_incremental_empty_batch_keeps_hub(spark, sf_dir):
     by_id = lambda df: sorted(df.collect(), key=lambda r: r.pub_id)
     want = by_id(hub)
     assert want and by_id(out) == want
+
+
+def test_ingest_stores_one_frame_per_call(spark, sf_dir):
+    """``ingest`` and ``ingest_incremental`` each leave exactly one stored
+    RDD: the id-assigned rows ``assign_ids`` stored, which the returned hub
+    reads. A second stored copy of the same rows would never be freed."""
+    from data_engineering__spark.conformance import _arxiv_raw
+    from data_engineering__spark.plans.pipeline import (
+        ingest, ingest_incremental)
+    from data_engineering__spark.session import release
+
+    jsc = spark.sparkContext._jsc
+    # compare RDD ids, not counts: the context cleaner may free RDDs that
+    # earlier tests dropped while this one runs
+    stored = lambda: set(jsc.getPersistentRDDs().keySet())  # noqa: E731
+    before = stored()
+    hub = ingest(_arxiv_raw(spark, sf_dir, keep_mod=10))
+    assert hub.count() > 0
+    assert len(stored() - before) == 1
+    hub2 = ingest_incremental(hub, _arxiv_raw(spark, sf_dir, keep_mod=5))
+    assert hub2.count() > hub.count()
+    assert len(stored() - before) == 2
+    release(hub2)
+    assert stored() - before == set()
+
+
+def test_normalize_pool_jobs_carry_the_callers_job_group(spark, sf_dir):
+    """``normalize`` builds its two dims from a thread pool; those jobs
+    must run under the caller's job group, or an event log reader files
+    them under whichever stage ran before."""
+    from data_engineering__spark.conformance import _arxiv_raw
+    from data_engineering__spark.plans.pipeline import ingest, normalize
+    from data_engineering__spark.session import release
+
+    sc = spark.sparkContext
+    hub = ingest(_arxiv_raw(spark, sf_dir))
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("normalize_pin", "normalize_pin")
+    try:
+        tables = normalize(hub)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    # two stored id assignments: at least their stored jobs ran
+    assert len(sc.statusTracker().getJobIdsForGroup("normalize_pin")) >= 2
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+    release(tables["authors"], tables["categories"], hub)
